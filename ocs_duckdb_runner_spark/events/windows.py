@@ -23,16 +23,19 @@ from ocs_duckdb_runner_spark.exactness import fx_sum, sql_fx_sum
 from ocs_duckdb_runner_spark.registry import load_table, query
 
 
-@query(
-    "event_tumbling",
-    oracle=f"""
+TUMBLING_ORACLE = f"""
     SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
            event_type,
            CAST(count(*) AS BIGINT) AS n,
            {sql_fx_sum('value')} AS sum_value_c
     FROM events
     GROUP BY 1, 2
-    """,
+    """
+
+
+@query(
+    "event_tumbling",
+    oracle=TUMBLING_ORACLE,
     tags=("events", "window"),
 )
 def event_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,9 +54,7 @@ def event_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "event_sliding",
-    oracle=f"""
+SLIDING_ORACLE = f"""
     WITH e AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type, value
                FROM events),
     w AS (SELECT make_timestamp((us // 1800000000) * 1800000000) AS window_start,
@@ -67,7 +68,12 @@ def event_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
            {sql_fx_sum('value')} AS sum_value_c
     FROM w
     GROUP BY 1, 2
-    """,
+    """
+
+
+@query(
+    "event_sliding",
+    oracle=SLIDING_ORACLE,
     tags=("events", "window"),
 )
 def event_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,9 +93,7 @@ def event_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "event_sessionize",
-    oracle="""
+SESSIONIZE_ORACLE = """
     WITH x AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
     marked AS (
       SELECT user_id, ts,
@@ -109,7 +113,12 @@ def event_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_events
     FROM sessions
     GROUP BY user_id, sid
-    """,
+    """
+
+
+@query(
+    "event_sessionize",
+    oracle=SESSIONIZE_ORACLE,
     tags=("events", "session"),
 )
 def event_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -49,11 +49,3 @@ def sql_fx_avg(expr: str, digits: int = 2) -> str:
         f" / count({expr}) / CAST({10 ** digits} AS DOUBLE)"
     )
 
-
-def fx_sum_units(c: Column | str, digits: int = 2) -> Column:
-    """Exact sum presented back in original units (one double division)."""
-    return fx_sum(c, digits).cast("double") / F.lit(float(10**digits))
-
-
-def sql_fx_sum_units(expr: str, digits: int = 2) -> str:
-    return f"CAST({sql_fx_sum(expr, digits)} AS DOUBLE) / CAST({10 ** digits} AS DOUBLE)"

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocs_duckdb_runner_spark.registry import load_table, query
+from ocs_duckdb_runner_spark.session import scoped_conf
 
 
 @query(
@@ -671,9 +672,7 @@ def fn_time_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     # literals and to_time resolution happen inside spark.sql()); restore
     # the prior value immediately so the shared session's planner state
     # isn't mutated for unrelated queries running on the fan-out threads.
-    prior = spark.conf.get("spark.sql.timeType.enabled", None)
-    spark.conf.set("spark.sql.timeType.enabled", "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.timeType.enabled": "true"}):
         load_table(spark, sf_dir, "events").createOrReplaceTempView(
             "fn_time_events"
         )
@@ -692,11 +691,6 @@ def fn_time_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             GROUP BY event_type
             """
         )
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.timeType.enabled")
-        else:
-            spark.conf.set("spark.sql.timeType.enabled", prior)
 
 
 @query(

@@ -28,6 +28,7 @@ from ocs_duckdb_runner_spark.registry import (
     release_local_checkpoint,
     spread,
 )
+from ocs_duckdb_runner_spark.session import scoped_conf
 
 # MinHash parameters: 16 hashes = 4 bands × 4 rows → catches Jaccard ≳ 0.7
 # candidates with high probability while keeping bucket-join fan-out tiny.
@@ -807,77 +808,78 @@ def _propagate_min_label(edges_src_dst: DataFrame, width: int) -> DataFrame:
     would swap in reliable ``checkpoint()`` against the cluster FS and
     pay a distributed write per round for it."""
     spark = edges_src_dst.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     edges = None
-    try:
-        edges = edges_src_dst.repartition(width, "src").persist()
-        labels = (
-            edges.select(F.col("src").alias("doc_id"))
-            .distinct()
-            .select("doc_id", F.col("doc_id").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        # iterate to CONVERGENCE, not to a fixed round count: an earlier
-        # revision capped at 30 rounds and fell through SILENTLY, which
-        # on a component of diameter >30 (a chain of incrementally
-        # edited versions) would emit unconverged labels — duplicates
-        # retained, oracle diverged. A pathological diameter now fails
-        # loudly instead.
-        rounds = 0
-        pinned = labels  # the live checkpoint; freed once superseded
-        while True:
-            nbr = (
-                edges.join(labels, edges.src == labels.doc_id)
-                .groupBy(F.col("dst").alias("doc_id"))
-                .agg(F.min("lbl").alias("nbr_lbl"))
-            )
-            # eager localCheckpoint IS the round's materializing action
-            # and truncates lineage to a constant-size LogicalRDD (see
-            # docstring: the plan otherwise doubles per round). The
-            # change-count agg after it reads the pinned RDD — near-free.
-            merged = (
-                labels.join(nbr, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.least(
-                        F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))
-                    ).alias("lbl"),
-                    (F.coalesce(F.col("nbr_lbl"), F.col("lbl")) < F.col("lbl"))
-                    .cast("long")
-                    .alias("chg"),
-                )
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(width),
+            "spark.sql.adaptive.enabled": "false",
+        },
+    ):
+        try:
+            edges = edges_src_dst.repartition(width, "src").persist()
+            labels = (
+                edges.select(F.col("src").alias("doc_id"))
+                .distinct()
+                .select("doc_id", F.col("doc_id").alias("lbl"))
                 .localCheckpoint(eager=True)
             )
-            # merged has materialized (eager), so the PREVIOUS round's
-            # checkpoint blocks are dead — release them now instead of
-            # waiting for driver GC (ADVICE r10: over hundreds of rounds
-            # the pinned RDDs otherwise accumulate nondeterministically;
-            # storage stays one labels-frame-sized, not O(rounds))
-            release_local_checkpoint(pinned)
-            pinned = merged
-            changed = merged.agg(F.sum("chg")).first()[0]
-            labels = merged.select("doc_id", "lbl")
-            if not changed:
-                break
-            rounds += 1
-            if rounds >= 500:
-                raise RuntimeError(
-                    "min-label propagation did not converge in 500 rounds"
-                    f" ({changed} labels still moving) — component diameter"
-                    " beyond any plausible near-dup cluster; refusing to"
-                    " emit unconverged clusters"
+            # iterate to CONVERGENCE, not to a fixed round count: an earlier
+            # revision capped at 30 rounds and fell through SILENTLY, which
+            # on a component of diameter >30 (a chain of incrementally
+            # edited versions) would emit unconverged labels — duplicates
+            # retained, oracle diverged. A pathological diameter now fails
+            # loudly instead.
+            rounds = 0
+            pinned = labels  # the live checkpoint; freed once superseded
+            while True:
+                nbr = (
+                    edges.join(labels, edges.src == labels.doc_id)
+                    .groupBy(F.col("dst").alias("doc_id"))
+                    .agg(F.min("lbl").alias("nbr_lbl"))
                 )
-        # the final labels frame is already checkpoint-pinned; the
-        # caller's corpus-sized joins run at the session's width
-        out = labels
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        if edges is not None:
-            edges.unpersist()
+                # eager localCheckpoint IS the round's materializing action
+                # and truncates lineage to a constant-size LogicalRDD (see
+                # docstring: the plan otherwise doubles per round). The
+                # change-count agg after it reads the pinned RDD — near-free.
+                merged = (
+                    labels.join(nbr, "doc_id", "left")
+                    .select(
+                        "doc_id",
+                        F.least(
+                            F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))
+                        ).alias("lbl"),
+                        (F.coalesce(F.col("nbr_lbl"), F.col("lbl")) < F.col("lbl"))
+                        .cast("long")
+                        .alias("chg"),
+                    )
+                    .localCheckpoint(eager=True)
+                )
+                # merged has materialized (eager), so the PREVIOUS round's
+                # checkpoint blocks are dead — release them now instead of
+                # waiting for driver GC (ADVICE r10: over hundreds of rounds
+                # the pinned RDDs otherwise accumulate nondeterministically;
+                # storage stays one labels-frame-sized, not O(rounds))
+                release_local_checkpoint(pinned)
+                pinned = merged
+                changed = merged.agg(F.sum("chg")).first()[0]
+                labels = merged.select("doc_id", "lbl")
+                if not changed:
+                    break
+                rounds += 1
+                if rounds >= 500:
+                    raise RuntimeError(
+                        "min-label propagation did not converge in 500 rounds"
+                        f" ({changed} labels still moving) — component diameter"
+                        " beyond any plausible near-dup cluster; refusing to"
+                        " emit unconverged clusters"
+                    )
+            # the final labels frame is already checkpoint-pinned; the
+            # caller's corpus-sized joins run at the session's width
+            out = labels
+        finally:
+            if edges is not None:
+                edges.unpersist()
     return out
 
 

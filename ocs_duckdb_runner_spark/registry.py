@@ -20,6 +20,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ocs_duckdb_runner_spark.session import scoped_conf
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 TABLES = (
@@ -414,8 +416,8 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
             if not isinstance(ts_type, T.LongType):
                 _EVENTS_TS_BRANCH[key] = "plain"
                 return df
-            # LongType without the flag: another loader set nanosAsLong
-            # session-wide — normalize exactly like the ns branch below
+            # LongType without the scoped flag: the caller's own session
+            # has nanosAsLong on — normalize exactly like the ns branch
             _EVENTS_TS_BRANCH[key] = "ns"
             return df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
@@ -425,14 +427,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     # timestamp[ns] footer — Spark refuses it without the legacy flag.
     # The flag is consulted at schema RESOLUTION, so resolve eagerly
     # inside the scoped set/restore (can't defer to execution).
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
         df = spark.read.parquet(path)
         df.schema  # force resolution under the flag
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))

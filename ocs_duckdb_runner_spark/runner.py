@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocs_duckdb_runner_spark.registry import load_table, query
+from ocs_duckdb_runner_spark.session import hadoop_fs, scoped_conf
 
 
 def to_sql(path: str) -> str:
@@ -140,11 +141,7 @@ def _remote_sig(spark: SparkSession, path: str) -> tuple | None:
     HEAD-equivalent metadata call; the reference pays the same probe as
     part of every DuckDB open)."""
     try:
-        jvm = spark.sparkContext._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(
-            spark.sparkContext._jsc.hadoopConfiguration()
-        )
+        fs, hpath = hadoop_fs(spark, path)
         st = fs.getFileStatus(hpath)
         return (st.getModificationTime(), st.getLen())
     except Exception:  # noqa: BLE001  (no FS for scheme / object missing)
@@ -278,20 +275,22 @@ class FanoutRunner:
         # group-by into 32 scheduled tasks of scheduling overhead. One
         # partition per job mirrors the reference's single-threaded
         # per-instance execution (runner.cc:200) — parallelism lives across
-        # files, exactly like its pool. Restored after the run (finally:
-        # even an interrupt must not leave the shared session pinned to 1).
-        prev_parts = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", "1")
+        # files, exactly like its pool. Restored after the run (even an
+        # interrupt must not leave the shared session pinned to 1).
         # AQE re-plans between stages — pure overhead for these fixed
         # single-partition per-object plans (~25% of warm wall time);
         # the reference's per-object engine is equally static
-        prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         total_hits = 0
         failures: list[str] = []
         per_file: dict[str, int] = {}
-        t0 = time.monotonic()
-        try:
+        with scoped_conf(
+            self.spark,
+            {
+                "spark.sql.shuffle.partitions": "1",
+                "spark.sql.adaptive.enabled": "false",
+            },
+        ):
+            t0 = time.monotonic()
             # Analysis wave: populate the analyzed-plan cache for every
             # source concurrently BEFORE queueing executions. Analysis is
             # driver-side Catalyst work (footer read + resolution,
@@ -326,9 +325,6 @@ class FanoutRunner:
                         failures.append(str(ex))
                         print(f"error: {ex}", file=sys.stderr)
             wall = time.monotonic() - t0
-        finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            self.spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         # The UI's app-status store is fed by an ASYNC listener bus: right
         # after the last job returns, the REST stage list can still be
         # missing the final completions (observed under machine load).

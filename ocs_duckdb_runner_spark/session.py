@@ -23,6 +23,8 @@ zone must set it after loading, not before.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -170,3 +172,38 @@ def build_spark(
             hconf.set(k, v)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(
+    spark: SparkSession, settings: Mapping[str, str]
+) -> Iterator[None]:
+    """Set runtime confs for a ``with`` body; on exit, even by an
+    exception, restore each prior value (unset if it had none) in reverse
+    order. A set that fails raises before the body runs, with the keys
+    already set put back. The confs are session-global, so two scoped
+    regions on one session must not overlap: a concurrent drain or
+    fan-out would plan under the other's values or clobber its restore.
+    Every caller runs its region synchronously on the calling thread."""
+    conf = spark.conf
+    prior: list[tuple[str, str | None]] = []
+    try:
+        for k, v in settings.items():
+            old = conf.get(k, None)
+            conf.set(k, v)
+            prior.append((k, old))
+        yield
+    finally:
+        for k, old in reversed(prior):
+            if old is None:
+                conf.unset(k)
+            else:
+                conf.set(k, old)
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for any scheme the session can read (file://,
+    s3a://, ...); a driver-local os.path probe sees only the local disk."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath

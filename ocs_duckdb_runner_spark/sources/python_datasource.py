@@ -24,9 +24,12 @@ ever passes through the driver.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ocs_duckdb_runner_spark.registry import query
+from ocs_duckdb_runner_spark.session import scoped_conf
 
 # 8 partitions x 1250 rows; vid * KNUTH stays far below 2^63 so the
 # modulus is exact BIGINT arithmetic in Python, Spark, and DuckDB alike
@@ -231,14 +234,17 @@ def _make_pushdown_source():
     return SynthTelemetryPushdownSource
 
 
-@query(
-    "src_python_datasource",
-    oracle=f"""
+_SYNTH_ORACLE = f"""
     SELECT CAST(vid AS BIGINT) AS vid,
            CAST((vid * {_KNUTH}) % {_MOD} AS BIGINT) AS h,
            CAST((vid * {_KNUTH}) % {_MOD} AS DOUBLE) / {_MOD}.0 AS x
     FROM range({N_PARTS * ROWS_PER_PART}) t(vid)
-    """,
+    """
+
+
+@query(
+    "src_python_datasource",
+    oracle=_SYNTH_ORACLE,
     tags=("sources", "python-datasource"),
 )
 def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -286,11 +292,11 @@ def src_python_datasource_pushdown(
 
     spark.sql.python.filterPushdown.enabled is a RUNTIME SQL conf
     (probed: set/unset both succeed on a live session), so the query
-    set-with-restores it around its own execution — the same try/finally
-    discipline as fn_time_type — and EVERY session, including the
-    driver's own harness session that doesn't pre-set the conf, provably
-    takes the pruned plan (r11 verdict Next #5; previously the pruned
-    path was proven only in the builder's session and unit locks). The
+    scopes it around its own execution (session.scoped_conf) and EVERY
+    session, including the driver's own harness session that doesn't
+    pre-set the conf, provably takes the pruned plan (r11 verdict Next
+    #5; previously the pruned path was proven only in the builder's
+    session and unit locks). The
     frame is eagerly localCheckpoint-ed BEFORE the conf restores:
     pushFilters fires at planning, and Spark 4.1 hard-errors on a
     pushFilters reader under a disabled conf
@@ -300,22 +306,16 @@ def src_python_datasource_pushdown(
     conf), the query degrades to the plain pushdown-free source and
     Spark evaluates the same predicates post-scan — same rows, plain
     plan (tests pin both shapes)."""
-    key = "spark.sql.python.filterPushdown.enabled"
-    try:
-        prior = spark.conf.get(key)
-        spark.conf.set(key, "true")
-    except Exception:
-        spark.dataSource.register(_make_source())
-        return _pushdown_predicates(
-            spark.read.format("ocs_synth_telemetry")
-            .option("parts", str(N_PARTS))
-            .option("rows", str(ROWS_PER_PART))
-            .load()
-        )
-    try:
+    with ExitStack() as scope:
+        try:
+            scope.enter_context(
+                scoped_conf(
+                    spark, {"spark.sql.python.filterPushdown.enabled": "true"}
+                )
+            )
+        except Exception:  # the conf cannot be set: plain source
+            return _pushdown_predicates(src_python_datasource(spark, sf_dir))
         return _pushdown_plan(spark).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(key, prior)
 
 
 def _pushdown_plan(spark: SparkSession) -> DataFrame:
@@ -444,12 +444,7 @@ def _make_stream_source():
 
 @query(
     "stream_python_datasource",
-    oracle=f"""
-    SELECT CAST(vid AS BIGINT) AS vid,
-           CAST((vid * {_KNUTH}) % {_MOD} AS BIGINT) AS h,
-           CAST((vid * {_KNUTH}) % {_MOD} AS DOUBLE) / {_MOD}.0 AS x
-    FROM range({N_PARTS * ROWS_PER_PART}) t(vid)
-    """,
+    oracle=_SYNTH_ORACLE,
     tags=("sources", "python-datasource", "streaming"),
 )
 def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -697,12 +692,7 @@ def _make_stream_sink_source():
 
 @query(
     "sink_stream_python_datasource",
-    oracle=f"""
-    SELECT CAST(vid AS BIGINT) AS vid,
-           CAST((vid * {_KNUTH}) % {_MOD} AS BIGINT) AS h,
-           CAST((vid * {_KNUTH}) % {_MOD} AS DOUBLE) / {_MOD}.0 AS x
-    FROM range({N_PARTS * ROWS_PER_PART}) t(vid)
-    """,
+    oracle=_SYNTH_ORACLE,
     tags=("sources", "python-datasource", "streaming", "sink"),
 )
 def sink_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,14 +20,23 @@ by the multi-batch unit test in tests/test_streaming.py instead.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocs_duckdb_runner_spark.events.windows import (
+    SESSIONIZE_ORACLE,
+    SLIDING_ORACLE,
+    TUMBLING_ORACLE,
+)
 from ocs_duckdb_runner_spark.exactness import fx_sum, sql_fx_sum
 from ocs_duckdb_runner_spark.registry import load_table, query
+from ocs_duckdb_runner_spark.session import hadoop_fs, scoped_conf
+
+_LOG = logging.getLogger(__name__)
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -64,18 +73,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     s3a:// sf_dir with the directory layout silently hit the
     glob-filter branch and streamed zero rows — reproduced, then fixed,
     against the live loopback s3a endpoint (S3AWIDTH_r13.json)."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     events_path = f"{sf_dir}/events.parquet"
 
     def _is_dir(path: str) -> bool:
         try:
-            jvm = spark.sparkContext._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(
-                spark.sparkContext._jsc.hadoopConfiguration()
-            )
+            fs, hpath = hadoop_fs(spark, path)
             return fs.getFileStatus(hpath).isDirectory()
         except Exception:
             return os.path.isdir(path)
@@ -97,7 +100,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:  # ns footer — batch read refuses without legacy flag
         ts_type = None
     if ts_type is None:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # the explicit LongType schema reads the ns values intact with
+        # nanosAsLong unset — only schema INFERENCE needs the flag
         raw = _source(_events_schema(T.LongType()))
         return raw.withColumn(
             "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
@@ -106,9 +110,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if isinstance(ts_type, T.TimestampNTZType):
         raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     elif isinstance(ts_type, T.LongType):
-        # ns fixture probed *after* a prior call set nanosAsLong: the footer
-        # resolves as raw nanosecond longs — normalize exactly like the
-        # except-branch (and registry.load_table's LongType dispatch) does.
+        # ns fixture probed in a session whose owner set nanosAsLong: the
+        # footer resolves as raw nanosecond longs — normalize exactly like
+        # the except-branch (and registry.load_table's LongType dispatch).
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return raw
 
@@ -132,7 +136,6 @@ def _stream_scratch(suffix: str = "", parent: str = "/tmp/ocs_stream_sink") -> s
     marker tier it can afford (its sinks publish manifests; these
     don't). Without this every sweep leaked ~60 uuid dirs forever (the
     r9-ADVICE /tmp-leak class, third sighting)."""
-    import os
     import shutil
     import time
     import uuid
@@ -194,52 +197,21 @@ def _stream_shuffle_width(spark: SparkSession, sf_dir: str) -> int:
     # most. getContentSummary resolves any scheme the session can read
     # and sums directories recursively.
     try:
-        jvm = spark.sparkContext._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(
-            spark.sparkContext._jsc.hadoopConfiguration()
-        )
+        fs, hpath = hadoop_fs(spark, path)
         size = fs.getContentSummary(hpath).getLength()
-    except Exception:
+    except Exception as ex:
         # Unknown/unreadable source: fail WIDE (session parallelism),
         # never narrow — an over-wide stateful shuffle costs near-empty
         # state-store commits; an under-wide one serializes the drain.
+        _LOG.warning(
+            "cannot size stream source %s (%s); stateful width falls back"
+            " to session parallelism %d",
+            path,
+            ex,
+            parallelism,
+        )
         return parallelism
     return max(1, min(parallelism, -(-size // _STREAM_TARGET_BYTES)))
-
-
-class _scoped_stream_shuffle:
-    """Set spark.sql.shuffle.partitions to the input-derived stream width
-    for the duration of one stream drain, restoring the session value on
-    the way out (the fn_time_type try/finally conf discipline).
-
-    SEQUENTIAL-DRAIN ASSUMPTION (ADVICE r12): this mutates the
-    session-global conf, so two streams drained CONCURRENTLY in one
-    session would race — one could be planned at the other's width or
-    have its restore clobbered. Every drain in this module runs
-    synchronously on the calling thread (queries()/bench/tests all drain
-    one stream at a time), which is what makes the scoped set/restore
-    sound. If concurrent drains ever become a surface, guard with a
-    module-level lock or move the width onto a per-query conf."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str):
-        self.spark = spark
-        self.width = _stream_shuffle_width(spark, sf_dir)
-
-    def __enter__(self):
-        try:
-            self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        except Exception:
-            self.prev = None
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.width))
-        return self
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
 
 
 def _run_to_memory(agg: DataFrame, mode: str, sf_dir: str | None = None) -> str:
@@ -250,7 +222,11 @@ def _run_to_memory(agg: DataFrame, mode: str, sf_dir: str | None = None) -> str:
     _COUNTER["n"] += 1
     name = f"stream_out_{_COUNTER['n']}"
 
-    def _start_and_drain() -> None:
+    pins = {}
+    if sf_dir is not None:
+        width = _stream_shuffle_width(agg.sparkSession, sf_dir)
+        pins = {"spark.sql.shuffle.partitions": str(width)}
+    with scoped_conf(agg.sparkSession, pins):
         q = (
             agg.writeStream.outputMode(mode)
             .format("memory")
@@ -259,25 +235,12 @@ def _run_to_memory(agg: DataFrame, mode: str, sf_dir: str | None = None) -> str:
             .start()
         )
         q.awaitTermination()
-
-    if sf_dir is None:
-        _start_and_drain()
-    else:
-        with _scoped_stream_shuffle(agg.sparkSession, sf_dir):
-            _start_and_drain()
     return name
 
 
 @query(
     "stream_tumbling_wm",
-    oracle=f"""
-    SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
-           event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           {sql_fx_sum('value')} AS sum_value_c
-    FROM events
-    GROUP BY 1, 2
-    """,
+    oracle=TUMBLING_ORACLE,
     tags=("streaming",),
 )
 def stream_tumbling_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -301,21 +264,7 @@ def stream_tumbling_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_sliding_wm",
-    oracle=f"""
-    WITH e AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type, value
-               FROM events),
-    w AS (SELECT make_timestamp((us // 1800000000) * 1800000000) AS window_start,
-                 event_type, value FROM e
-          UNION ALL
-          SELECT make_timestamp((us // 1800000000) * 1800000000
-                                - 1800000000) AS window_start,
-                 event_type, value FROM e)
-    SELECT window_start, event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           {sql_fx_sum('value')} AS sum_value_c
-    FROM w
-    GROUP BY 1, 2
-    """,
+    oracle=SLIDING_ORACLE,
     tags=("streaming",),
 )
 def stream_sliding_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,16 +319,19 @@ def _user_totals_state(key, pdfs, state):
     )
 
 
-@query(
-    "stream_custom_state",
-    oracle="""
+_CUSTOM_STATE_ORACLE = """
     SELECT user_id,
            CAST(count(*) AS BIGINT) AS n_events,
            CAST(sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT))
                 AS BIGINT) AS sum_value_c
     FROM events
     GROUP BY user_id
-    """,
+    """
+
+
+@query(
+    "stream_custom_state",
+    oracle=_CUSTOM_STATE_ORACLE,
     tags=("streaming", "stateful"),
 )
 def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -518,14 +470,7 @@ def _make_user_totals_processor():
 
 @query(
     "stream_transform_with_state",
-    oracle="""
-    SELECT user_id,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT))
-                AS BIGINT) AS sum_value_c
-    FROM events
-    GROUP BY user_id
-    """,
+    oracle=_CUSTOM_STATE_ORACLE,
     tags=("streaming", "stateful", "spark4"),
 )
 def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -727,9 +672,7 @@ def _make_user_sessions_processor():
     return _UserSessionsProcessor()
 
 
-@query(
-    "stream_tws_session_gap",
-    oracle="""
+_SESSION_GAP_ORACLE = """
     WITH x AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
     marked AS (
       SELECT user_id,
@@ -745,7 +688,12 @@ def _make_user_sessions_processor():
            CAST(count(*) AS BIGINT) AS n_events
     FROM marked
     GROUP BY user_id
-    """,
+    """
+
+
+@query(
+    "stream_tws_session_gap",
+    oracle=_SESSION_GAP_ORACLE,
     tags=("streaming", "stateful", "spark4", "timers"),
 )
 def stream_tws_session_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -871,23 +819,7 @@ def _link_parts(src_dir: str, dst_dir: str) -> None:
 
 @query(
     "stream_tws_rocksdb",
-    oracle="""
-    WITH x AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-    marked AS (
-      SELECT user_id,
-             CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       IS NULL
-                       OR ts - lag(ts) OVER (PARTITION BY user_id
-                                             ORDER BY ts)
-                          > INTERVAL 10 MINUTE
-                  THEN 1 ELSE 0 END AS is_new
-      FROM x)
-    SELECT user_id,
-           CAST(sum(is_new) AS BIGINT) AS n_sessions,
-           CAST(count(*) AS BIGINT) AS n_events
-    FROM marked
-    GROUP BY user_id
-    """,
+    oracle=_SESSION_GAP_ORACLE,
     tags=("streaming", "stateful", "rocksdb", "spark4"),
 )
 def stream_tws_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -900,9 +832,9 @@ def stream_tws_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     HDFS-backed provider hides every state-size cliff.
 
     Same semantics and ORACLE as stream_tws_session_gap; what's new is
-    the harness around it: (1) set-with-restore of the provider +
-    changelog confs (the fn_time_type try/finally pattern — both are
-    per-query runtime confs read at stream start); (2) the fixture is
+    the harness around it: (1) the provider + changelog confs are
+    scoped to the drains (session.scoped_conf — both are per-query
+    runtime confs read at stream start); (2) the fixture is
     drained in TWO phases against ONE checkpoint — phase 1 streams the
     early time-half, the query STOPS, phase 2 starts a NEW query from
     the same checkpoint over the late half — so every user active in
@@ -916,8 +848,6 @@ def stream_tws_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     CORRECTNESS row instead of passing vacuously. Per-user totals are
     max() across both phases' update-mode emissions (n_sessions and
     n_events are monotone nondecreasing)."""
-    prior_provider = spark.conf.get(_PROVIDER_CONF, None)
-    prior_changelog = spark.conf.get(_CHANGELOG_CONF, None)
     lo_dir, hi_dir = _split_events_source(spark, sf_dir)
     base = _stream_scratch("_rocksdb")
     src, ck, out = f"{base}/src", f"{base}/ckpt", f"{base}/out"
@@ -930,9 +860,9 @@ def stream_tws_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _land_updates(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
 
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB_PROVIDER)
-    spark.conf.set(_CHANGELOG_CONF, "true")
-    try:
+    with scoped_conf(
+        spark, {_PROVIDER_CONF: _ROCKSDB_PROVIDER, _CHANGELOG_CONF: "true"}
+    ):
         # NO width scoping here: this is the PYTHON-stateful family
         # (_session_gap_stateful / applyInPandasWithState), whose per-row
         # cost is the Python worker — narrowing to the state-store-
@@ -956,15 +886,6 @@ def stream_tws_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-    finally:
-        if prior_provider is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prior_provider)
-        if prior_changelog is None:
-            spark.conf.unset(_CHANGELOG_CONF)
-        else:
-            spark.conf.set(_CHANGELOG_CONF, prior_changelog)
     n_changelog = sum(
         1
         for _root, _dirs, files in os.walk(f"{ck}/state")
@@ -1013,27 +934,7 @@ def stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_sessionize",
-    oracle="""
-    WITH x AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-    marked AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                       OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                          > INTERVAL 10 MINUTE
-                  THEN 1 ELSE 0 END AS is_new
-      FROM x),
-    sessions AS (
-      SELECT user_id, ts,
-             sum(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS sid
-      FROM marked)
-    SELECT user_id,
-           min(ts) AS session_start,
-           max(ts) + INTERVAL 10 MINUTE AS session_end,
-           CAST(count(*) AS BIGINT) AS n_events
-    FROM sessions
-    GROUP BY user_id, sid
-    """,
+    oracle=SESSIONIZE_ORACLE,
     tags=("streaming", "session"),
 )
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1274,15 +1175,18 @@ def _mv_merge_batch(state_root: str, batch_df: DataFrame, batch_id: int) -> None
     merged.write.mode("overwrite").parquet(f"{state_root}/v{batch_id}")
 
 
-@query(
-    "stream_incremental_mv",
-    oracle=f"""
+_TYPE_TOTALS_ORACLE = f"""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n,
            {sql_fx_sum('value')} AS sum_value_c
     FROM events
     GROUP BY event_type
-    """,
+    """
+
+
+@query(
+    "stream_incremental_mv",
+    oracle=_TYPE_TOTALS_ORACLE,
     tags=("streaming", "mv", "sink"),
 )
 def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1351,13 +1255,7 @@ def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_state_reader",
-    oracle=f"""
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           {sql_fx_sum('value')} AS sum_value_c
-    FROM events
-    GROUP BY event_type
-    """,
+    oracle=_TYPE_TOTALS_ORACLE,
     tags=("streaming", "statestore", "spark4"),
 )
 def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1384,7 +1282,8 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     # input-derived stateful width: the state source below plans one
     # input split per state partition, so the narrow checkpoint also
     # reads back in width tasks instead of 32 near-empty ones
-    with _scoped_stream_shuffle(spark, sf_dir):
+    width = _stream_shuffle_width(spark, sf_dir)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(width)}):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")

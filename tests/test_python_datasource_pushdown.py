@@ -124,12 +124,13 @@ def test_boolean_value_not_misread_as_int():
 @pytest.mark.usefixtures("spark")
 def test_plan_prunes_partitions_and_absorbs_filter(spark):
     """Integration pin against a DRIVER-SHAPED session (conf explicitly
-    OFF, the driver harness's state): the query set-with-restores the
-    pushdown conf around its own eager execution (r11 verdict Next #5),
+    OFF, the driver harness's state): the query scopes the pushdown
+    conf around its own eager execution (r11 verdict Next #5),
     so the pruned path runs in EVERY session — 3 planned partitions, no
     Filter node above the BatchScan in the live pre-checkpoint plan —
     and the session conf is provably back to its prior value after."""
     import __spark_entry__ as entrymod
+    from ocs_duckdb_runner_spark.session import scoped_conf
     from ocs_duckdb_runner_spark.sources.python_datasource import (
         _pushdown_plan,
     )
@@ -137,10 +138,8 @@ def test_plan_prunes_partitions_and_absorbs_filter(spark):
     fn = entrymod.queries()["src_python_datasource_pushdown"]
     sf = "/root/testdata/sf0.001"
     key = "spark.sql.python.filterPushdown.enabled"
-    prior = spark.conf.get(key, None)
-    try:
-        # driver-shaped: the conf is OFF when the query is invoked
-        spark.conf.set(key, "false")
+    # driver-shaped: the conf is OFF when the query is invoked
+    with scoped_conf(spark, {key: "false"}):
         df = fn(spark, sf)
         # the query restored the conf behind itself
         assert spark.conf.get(key) == "false"
@@ -150,15 +149,10 @@ def test_plan_prunes_partitions_and_absorbs_filter(spark):
         assert len(pushed) > 0
 
         # pin the live pre-checkpoint plan shape with the conf on
-        spark.conf.set(key, "true")
-        live = _pushdown_plan(spark)
-        plan = live._jdf.queryExecution().executedPlan().toString()
-        assert "BatchScan ocs_synth_telemetry_pd" in plan
-        assert "Filter (" not in plan  # all predicates consumed at source
-        assert live.rdd.getNumPartitions() == 3
-        assert sorted((r[0], r[1]) for r in live.collect()) == pushed
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
+        with scoped_conf(spark, {key: "true"}):
+            live = _pushdown_plan(spark)
+            plan = live._jdf.queryExecution().executedPlan().toString()
+            assert "BatchScan ocs_synth_telemetry_pd" in plan
+            assert "Filter (" not in plan  # all predicates consumed at source
+            assert live.rdd.getNumPartitions() == 3
+            assert sorted((r[0], r[1]) for r in live.collect()) == pushed

@@ -1,0 +1,64 @@
+"""session.scoped_conf, and a source guard that keeps it the only way
+the package changes a session conf."""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+import pytest
+
+from ocs_duckdb_runner_spark.session import scoped_conf
+
+_KEY = "spark.ocs.test.scoped"
+_PARTS = "spark.sql.shuffle.partitions"  # explicitly set by the builder
+
+
+def test_scoped_conf_restores_explicit_prior(spark):
+    prior = spark.conf.get(_PARTS)
+    with scoped_conf(spark, {_PARTS: "3"}):
+        assert spark.conf.get(_PARTS) == "3"
+    assert spark.conf.get(_PARTS) == prior
+
+
+def test_scoped_conf_unsets_key_without_prior(spark):
+    assert spark.conf.get(_KEY, None) is None
+    with scoped_conf(spark, {_KEY: "x"}):
+        assert spark.conf.get(_KEY) == "x"
+    assert spark.conf.get(_KEY, None) is None
+
+
+def test_scoped_conf_restores_when_body_raises(spark):
+    prior = spark.conf.get(_PARTS)
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {_KEY: "x", _PARTS: "3"}):
+            raise RuntimeError
+    assert (spark.conf.get(_KEY, None), spark.conf.get(_PARTS)) == (None, prior)
+
+
+def test_scoped_conf_failed_set_raises_before_body(spark):
+    """A conf that cannot be set (static) raises before the body, with the
+    keys set before it put back: src_python_datasource_pushdown's fallback."""
+    with pytest.raises(Exception, match="static"):
+        with scoped_conf(spark, {_KEY: "x", "spark.sql.warehouse.dir": "/x"}):
+            pytest.fail("body ran")
+    assert spark.conf.get(_KEY, None) is None
+
+
+# The UTC pins are deliberate session-wide side effects (session.py module
+# docstring); every other conf change in the package goes through scoped_conf.
+_PKG = Path(__file__).resolve().parent.parent / "ocs_duckdb_runner_spark"
+_UTC_PIN = 'spark.conf.set("spark.sql.session.timeZone", "UTC")'
+_ALLOWED = {("registry.py", _UTC_PIN), ("streaming/stream_queries.py", _UTC_PIN)}
+
+
+def test_package_changes_conf_only_through_scoped_conf():
+    offenders = [
+        f"{rel}:{n}: {line.strip()}"
+        for path in sorted(_PKG.rglob("*.py"))
+        if (rel := path.relative_to(_PKG).as_posix()) != "session.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"conf\.(set|unset)\(", line)
+        and (rel, line.strip()) not in _ALLOWED
+    ]
+    assert offenders == [], "hand-rolled conf change; use scoped_conf"

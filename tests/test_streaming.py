@@ -236,6 +236,35 @@ def test_stream_tumbling_matches_batch_twin(spark):
     assert got == want and len(want) > 0
 
 
+def test_stream_ns_timestamp_source_matches_batch_and_leaks_no_flag(
+    spark, tmp_path
+):
+    """A planted timestamp[ns] events file (with sub-µs offsets): the
+    stream twin equals the batch twin, and neither leaves nanosAsLong
+    changed — the stream's explicit LongType schema needs no flag."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from ocs_duckdb_runner_spark.registry import get_query
+
+    ev = pd.read_parquet(f"{SF_DIR}/events.parquet")
+    ev["ts"] = ev["ts"].astype("datetime64[ns]") + pd.to_timedelta(
+        np.arange(len(ev)) % 1000, unit="ns"
+    )
+    ev.to_parquet(tmp_path / "events.parquet", coerce_timestamps=None)
+    ts = pq.read_schema(tmp_path / "events.parquet").field("ts").type
+    assert str(ts) == "timestamp[ns]"
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    cols = ["window_start", "event_type", "n", "sum_value_c"]
+    got = _rows(get_query("stream_tumbling_wm").fn(spark, str(tmp_path)), cols)
+    want = _rows(get_query("event_tumbling").fn(spark, str(tmp_path)), cols)
+    assert got == want and len(want) > 0
+    assert spark.conf.get(key, None) == before
+
+
 def test_stream_sessionize_matches_batch_twin(spark):
     """stream_sessionize ≡ event_sessionize: session_window under a
     watermark produces the same sessions the batch operator derives."""
@@ -818,6 +847,7 @@ def test_rocksdb_provider_restart_carries_state(spark, tmp_path):
         _ROCKSDB_PROVIDER,
         _session_gap_stateful,
     )
+    from ocs_duckdb_runner_spark.session import scoped_conf
     from pyspark.sql import types as T
 
     t0 = pd.Timestamp("2024-01-01 00:00:00")
@@ -853,9 +883,10 @@ def test_rocksdb_provider_restart_carries_state(spark, tmp_path):
         ]
     )
     prior_provider = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB_PROVIDER)
-    spark.conf.set(_CHANGELOG_CONF, "true")
-    try:
+    prior_changelog = spark.conf.get(_CHANGELOG_CONF, None)
+    with scoped_conf(
+        spark, {_PROVIDER_CONF: _ROCKSDB_PROVIDER, _CHANGELOG_CONF: "true"}
+    ):
         for i, pdf in enumerate(phases):
             pdf.to_parquet(src / f"f{i}.parquet", coerce_timestamps="us")
             events = (
@@ -874,12 +905,6 @@ def test_rocksdb_provider_restart_carries_state(spark, tmp_path):
                 .start()
             )
             q.awaitTermination()
-    finally:
-        if prior_provider is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prior_provider)
-        spark.conf.unset(_CHANGELOG_CONF)
 
     changelogs = [
         f
@@ -903,3 +928,4 @@ def test_rocksdb_provider_restart_carries_state(spark, tmp_path):
 
     # confs restored on the shared session
     assert spark.conf.get(_PROVIDER_CONF, None) == prior_provider
+    assert spark.conf.get(_CHANGELOG_CONF, None) == prior_changelog

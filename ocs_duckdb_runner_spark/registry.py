@@ -12,15 +12,12 @@ sums) or rounded on both sides (see SURVEY.md §7 risks).
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ocs_duckdb_runner_spark.session import scoped_conf
+from pyspark.sql import types as T
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -94,48 +91,10 @@ def _load_all() -> None:
     import ocs_duckdb_runner_spark.runner  # noqa: F401
 
 
-_REPO_ROOT = Path(__file__).resolve().parent.parent
-
-
-def _driver_green_names() -> frozenset[str]:
-    """Query names that already have a green row in any driver-produced
-    ``CORRECTNESS_r*.json`` artifact at the repo root.
-
-    The driver sweeps ``queries()`` in dict order with a per-round budget,
-    so round 1 only reached the first ~50 names. Ordering not-yet-checked
-    queries first lets coverage accumulate across rounds until every
-    operator has a driver-side correctness row.
-    """
-    green: set[str] = set()
-    for path in _REPO_ROOT.glob("CORRECTNESS_r*.json"):
-        try:
-            data = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            hash_green = bool(row.get("hash_match"))
-            # rows-only-by-design queries terminate as err:"no_oracle"
-            # with a recorded spark_rows — that IS their green state
-            rows_green = (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            if hash_green or rows_green:
-                green.add(name)
-    return frozenset(green)
-
-
 def specs() -> dict[str, QuerySpec]:
-    """All registered specs, driver-unchecked names first (see
-    :func:`_driver_green_names`); registration order within each group."""
+    """All registered specs, in registration order."""
     _load_all()
-    green = _driver_green_names()
-    ordered = sorted(_REGISTRY.values(), key=lambda s: s.name in green)
-    return {s.name: s for s in ordered}
+    return dict(_REGISTRY)
 
 
 def get_query(name: str) -> QuerySpec:
@@ -341,6 +300,22 @@ def vacuum_cache_siblings(parent: str, tag: str, keep: str) -> None:
             shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
 
 
+def events_schema(ts_type: T.DataType) -> T.StructType:
+    """The events table's schema with ``ts`` typed as ``ts_type``: what a
+    reader needs when it cannot infer the schema (a stream source, or a
+    timestamp[ns] footer read as raw LongType nanoseconds)."""
+    return T.StructType(
+        [
+            T.StructField("event_id", T.LongType()),
+            T.StructField("ts", ts_type),
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_type", T.StringType()),
+            T.StructField("value", T.DoubleType()),
+            T.StructField("props", T.StringType()),
+        ]
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Path-based parquet scan — the reference's data model is one
     self-describing parquet object per table, no catalog
@@ -357,18 +332,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     - plain read succeeds, ts is TimestampType      → pass through
     - plain read succeeds, ts is TimestampNTZType   → cast to TimestampType
       (session TZ is UTC, so the wall-clock value is preserved bit-for-bit)
-    - plain read rejects the footer (timestamp[ns]) → re-read with
-      nanosAsLong, then truncate ns→µs via timestamp_micros(ts DIV 1000)
+    - plain read rejects the footer (timestamp[ns]) → re-read with the
+      explicit :func:`events_schema` typing ts as LongType, then truncate
+      ns→µs via timestamp_micros(ts DIV 1000)
 
     Session side effect (API boundary): the session time zone is pinned to
     UTC — oracle parity is only defined under UTC timestamp semantics
     (DuckDB is UTC-naive), and it must hold even when the caller's session
     was built elsewhere (e.g. the driver's own SparkSession). The
-    nanosAsLong legacy flag, by contrast, is scoped to the events read and
-    restored: it changes how ANY later ns-timestamp parquet in the same
+    nanosAsLong legacy flag is never set: only schema INFERENCE needs it,
+    and it would change how ANY later ns-timestamp parquet in the same
     session is typed, which is not this function's call to make (ADVICE
-    r1). Scoping is sound because the flag is consulted when
-    ``spark.read.parquet`` resolves the schema, not at execution time.
+    r1). An explicit LongType schema reads the ns values intact.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
@@ -394,7 +369,6 @@ def _events_mtime(path: str) -> int:
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     key = (path, _events_mtime(path))
     branch = _EVENTS_TS_BRANCH.get(key) if key[1] >= 0 else None
@@ -405,7 +379,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path).withColumn(
             "ts", F.col("ts").cast(T.TimestampType())
         )
-    # unknown (first touch) or ns: probe / re-read under the scoped flag
+    # unknown (first touch) or ns: probe / re-read with an explicit schema
     if branch != "ns":
         try:
             df = spark.read.parquet(path)
@@ -416,7 +390,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
             if not isinstance(ts_type, T.LongType):
                 _EVENTS_TS_BRANCH[key] = "plain"
                 return df
-            # LongType without the scoped flag: the caller's own session
+            # LongType from schema inference: the caller's own session
             # has nanosAsLong on — normalize exactly like the ns branch
             _EVENTS_TS_BRANCH[key] = "ns"
             return df.withColumn(
@@ -424,10 +398,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
             )
         except Exception:
             _EVENTS_TS_BRANCH[key] = "ns"
-    # timestamp[ns] footer — Spark refuses it without the legacy flag.
-    # The flag is consulted at schema RESOLUTION, so resolve eagerly
-    # inside the scoped set/restore (can't defer to execution).
-    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
-        df = spark.read.parquet(path)
-        df.schema  # force resolution under the flag
+    # timestamp[ns] footer — schema inference refuses it; an explicit
+    # LongType ts reads the raw nanosecond values
+    df = spark.read.schema(events_schema(T.LongType())).parquet(path)
     return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))

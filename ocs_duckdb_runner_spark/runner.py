@@ -10,10 +10,10 @@ Reference behavior being reproduced (/root/reference/runner.cc):
 - R10 deterministic seed-1 shuffle of the source list (runner.cc:392).
 - R11/R12 I/O accounting: MonitoredFileSystem counted read_ops/read_bytes
       per S3 handle (runner.cc:56-172) and merged per-task stats under a
-      mutex (runner.cc:288-307). Here: Spark task inputMetrics aggregated
-      by the engine, harvested per-stage from the monitoring REST API
-      (read-op counts have no exact Spark analog — reported as the task
-      count alongside bytes, as documented in SURVEY.md §2a R11).
+      mutex (runner.cc:288-307). Here: Spark task inputMetrics, read per
+      job group from the monitoring REST API once, after a listener-bus
+      barrier (read-op counts have no exact Spark analog — reported as the
+      task count alongside bytes, as documented in SURVEY.md §2a R11).
 - R13 wall-clock + report to stderr (runner.cc:334-359, time.h:40-46).
 - R14 per-task error isolation: failed file logged, run continues
       (runner.cc:293-297).
@@ -21,7 +21,7 @@ Reference behavior being reproduced (/root/reference/runner.cc):
 
 The per-object query is the reference's fixed template (runner.cc:174-182):
 box filter → GROUP BY → min×4/avg → ORDER BY, parameterized only by the
-source path — exactly `ToSql(source)`.
+source path — exactly `ToSql(source)`, built once per source per run.
 """
 
 from __future__ import annotations
@@ -38,7 +38,6 @@ import urllib.request
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ocs_duckdb_runner_spark.registry import load_table, query
 from ocs_duckdb_runner_spark.session import hadoop_fs, scoped_conf
@@ -86,7 +85,8 @@ def _session_uid(spark: SparkSession) -> int:
 
 def flagship_on_file(spark: SparkSession, path: str) -> DataFrame:
     """The fixed per-object query (runner.cc:174-182) over one
-    lineitem-schema parquet object.
+    lineitem-schema parquet object. FanoutRunner.run's analysis wave
+    calls it once per source per run; its pool collects that frame.
 
     Analyzed-plan cache: parsing + analysis of the per-object SQL costs
     ~90 ms/file (Catalyst analysis + a parquet footer read for schema
@@ -100,8 +100,9 @@ def flagship_on_file(spark: SparkSession, path: str) -> DataFrame:
     result cache masquerading as a query run). mtime+size in the key
     invalidates on file replacement; remote objects (s3a://, hdfs://) are
     stat'd through the Hadoop FS API instead (one metadata round trip,
-    same invalidation contract); any reflection failure falls back to
-    plain spark.sql. Bounded FIFO, 1024 entries."""
+    same invalidation contract). A remote object that cannot be stat'd
+    goes to plain spark.sql, which raises the read error for R14 isolation
+    to report. Bounded FIFO, 1024 entries."""
     try:
         st = os.stat(path)
         sig = (st.st_mtime_ns, st.st_size)
@@ -112,27 +113,21 @@ def flagship_on_file(spark: SparkSession, path: str) -> DataFrame:
     with _PLAN_CACHE_LOCK:
         key = (path, sig, _session_uid(spark))
         plan = _PLAN_CACHE.get(key)
-    if plan is None:
-        df = spark.sql(to_sql(path))
-        try:
-            plan = df._jdf.queryExecution().analyzed()
-        except Exception:  # non-classic session / API drift
-            return df
-        # lookup/insert/evict under one lock: the fan-out pool's worker
-        # threads hit this concurrently, and an unguarded evict-while-
-        # insert can raise "dict changed size during iteration".
-        with _PLAN_CACHE_LOCK:
-            if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-                _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-            _PLAN_CACHE[key] = plan
-        return df
-    try:
+    if plan is not None:
         jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
             spark._jsparkSession, plan
         )
         return DataFrame(jds, spark)
-    except Exception:  # API drift — correctness over the fast path
-        return spark.sql(to_sql(path))
+    df = spark.sql(to_sql(path))
+    plan = df._jdf.queryExecution().analyzed()
+    # lookup/insert/evict under one lock: the fan-out's analysis wave hits
+    # this concurrently, and an unguarded evict-while-insert can raise
+    # "dict changed size during iteration".
+    with _PLAN_CACHE_LOCK:
+        if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
+            _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
+        _PLAN_CACHE[key] = plan
+    return df
 
 
 def _remote_sig(spark: SparkSession, path: str) -> tuple | None:
@@ -174,7 +169,7 @@ def _fs_read_ops(spark: SparkSession) -> int:
 
 def _rest_group_metrics(
     spark: SparkSession, token: str
-) -> dict[str, tuple[int, int, int]] | None:
+) -> dict[str, tuple[int, int, int]]:
     """jobGroup → (inputBytes, inputRecords, scanTasks) summed over each
     job's completed stages, for job groups of THIS run (prefix `token`),
     from the monitoring REST API. The per-file analog of the reference's
@@ -187,48 +182,62 @@ def _rest_group_metrics(
     spark.ui.retainedStages — a start/end delta then goes negative when
     eviction outpaces new stages (observed once the test suite grew past
     ~1000 stages). This run's own groups can't be evicted mid-run.
-    None when the UI is disabled (zeros would masquerade as measurements
-    — ADVICE r2)."""
-    if spark.sparkContext.uiWebUrl is None:
-        return None
+    Raises when the endpoint is unreachable."""
+    base = spark.sparkContext.uiWebUrl
+    app = spark.sparkContext.applicationId
+    with urllib.request.urlopen(
+        f"{base}/api/v1/applications/{app}/stages?status=complete", timeout=5
+    ) as r:
+        stages = json.load(r)
+    with urllib.request.urlopen(
+        f"{base}/api/v1/applications/{app}/jobs", timeout=5
+    ) as r:
+        jobs = json.load(r)
+    by_stage = {
+        s["stageId"]: (
+            s.get("inputBytes", 0),
+            s.get("inputRecords", 0),
+            s.get("numCompleteTasks", 0) if s.get("inputBytes", 0) > 0 else 0,
+        )
+        for s in stages
+    }
+    out: dict[str, tuple[int, int, int]] = {}
+    for j in jobs:
+        group = j.get("jobGroup")
+        if group is None or not group.startswith(token):
+            continue
+        b, rec, t = out.get(group, (0, 0, 0))
+        for sid in j.get("stageIds", []):
+            sb, sr, st = by_stage.get(sid, (0, 0, 0))
+            b, rec, t = b + sb, rec + sr, t + st
+        out[group] = (b, rec, t)
+    return out
+
+
+def _settled_group_metrics(
+    spark: SparkSession, token: str
+) -> dict[str, tuple[int, int, int]] | None:
+    """:func:`_rest_group_metrics` read once the listener bus, which
+    feeds the UI store asynchronously, is empty: the scheduler posts
+    every task, stage and job end before a job's result returns, so the
+    read is final. None, with a warning naming the cause, when the UI is
+    off, the bus does not drain or the read fails — never partial."""
+    sc = spark.sparkContext
     try:
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete", timeout=5
-        ) as r:
-            stages = json.load(r)
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/jobs", timeout=5
-        ) as r:
-            jobs = json.load(r)
-        by_stage = {
-            s["stageId"]: (
-                s.get("inputBytes", 0),
-                s.get("inputRecords", 0),
-                s.get("numCompleteTasks", 0) if s.get("inputBytes", 0) > 0 else 0,
-            )
-            for s in stages
-        }
-        out: dict[str, tuple[int, int, int]] = {}
-        for j in jobs:
-            group = j.get("jobGroup")
-            if group is None or not group.startswith(token):
-                continue
-            b, rec, t = out.get(group, (0, 0, 0))
-            for sid in j.get("stageIds", []):
-                sb, sr, st = by_stage.get(sid, (0, 0, 0))
-                b, rec, t = b + sb, rec + sr, t + st
-            out[group] = (b, rec, t)
-        return out
-    except Exception:  # noqa: BLE001  (endpoint unavailable)
+        if sc.uiWebUrl is None:
+            raise RuntimeError("spark.ui.enabled=false")
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # ms
+        return _rest_group_metrics(spark, token)
+    except Exception as ex:  # noqa: BLE001  reported as null, cause named
+        cause = getattr(ex, "java_exception", ex)  # Py4J: the Java exception
+        print(f"warning: I/O metrics reported as null: {cause}", file=sys.stderr)
         return None
 
 
 class FanoutRunner:
     """Run the per-object query over N parquet objects with j-way
     concurrency, collecting hits + I/O stats and printing the reference's
-    report (runner.cc:343-358)."""
+    report (runner.cc:343-358). Keeps no state between runs."""
 
     _RUN_SEQ = itertools.count()
 
@@ -236,14 +245,10 @@ class FanoutRunner:
         self.spark = spark
         self.threads = threads
         self.print_rows = print_rows
-        # job-group token is minted per run() (see run()) so a reused
-        # runner never matches a previous run's job groups in
-        # _rest_group_metrics — minting here double-counted bytes on the
-        # second run() of the same instance (r5 verdict, What's wrong #1)
-        self._token: str | None = None
 
-    def _run_one(self, idx_path: tuple[int, str]) -> tuple[str, int, float]:
-        idx, path = idx_path
+    def _run_one(self, token: str, idx: int, frame: DataFrame | Exception) -> int:
+        if isinstance(frame, Exception):
+            raise frame  # the analysis wave's failure, isolated by run()
         # distinct FAIR pool per slot → jobs schedule round-robin like the
         # reference's pool threads, not FIFO behind each other
         self.spark.sparkContext.setLocalProperty(
@@ -252,21 +257,22 @@ class FanoutRunner:
         # one job group per FILE → the REST metrics can split bytes per
         # source, the analog of the reference's per-handle ReadStats
         self.spark.sparkContext.setLocalProperty(
-            "spark.jobGroup.id", f"{self._token}:{idx}"
+            "spark.jobGroup.id", f"{token}:{idx}"
         )
-        t0 = time.monotonic()
-        rows = flagship_on_file(self.spark, path).collect()
+        rows = frame.collect()
         if self.print_rows:
             for r in rows:
                 print(tuple(r), file=sys.stdout)
-        return path, len(rows), time.monotonic() - t0
+        return len(rows)
 
     def run(self, sources: list[str]) -> dict:
-        # fresh token per run: _rest_group_metrics sums every job group
-        # whose name starts with this prefix, so the prefix must be unique
-        # to THIS run, not this instance (warm-up + timed run on one
-        # runner previously summed both runs' stages → exactly 2× bytes)
-        self._token = f"fanout-{os.getpid()}-{next(self._RUN_SEQ)}"
+        """Fan the per-object query out over ``sources``: a wave builds
+        each frame once, the j-wide pool collects them (one job group per
+        file), and one settled REST read gives the I/O metrics."""
+        # job-group prefix unique to THIS run: _rest_group_metrics sums
+        # every group starting with it, so a prefix shared across runs
+        # would count a reused runner's earlier runs too
+        token = f"fanout-{os.getpid()}-{next(self._RUN_SEQ)}"
         # deterministic load-balancing shuffle, seed 1 (runner.cc:392)
         sources = list(sources)
         random.Random(1).shuffle(sources)
@@ -291,66 +297,49 @@ class FanoutRunner:
             },
         ):
             t0 = time.monotonic()
-            # Analysis wave: populate the analyzed-plan cache for every
-            # source concurrently BEFORE queueing executions. Analysis is
-            # driver-side Catalyst work (footer read + resolution,
-            # ~90 ms/object, GIL-released in the JVM); inside the
-            # j-limited pool it serializes into the execution critical
-            # path, so a cold run pays (analysis+exec) per wave. As one
-            # wide wave the cold wall is max(analysis) + exec waves — the
-            # reference pays the same per-object open+parse inside its
-            # pool tasks (runner.cc:197-218), so this wave stays inside
-            # the timed window: a scheduling change, not a measurement
-            # change. Width is bounded: analysis is cheap but not free.
+            # Analysis wave: build every source's frame concurrently
+            # BEFORE queueing executions. Analysis is driver-side Catalyst
+            # work (footer read + resolution, ~90 ms/object, GIL-released
+            # in the JVM); inside the j-limited pool it serializes into
+            # the execution critical path. As one wide wave the cold wall
+            # is max(analysis) + exec waves — the reference pays the same
+            # per-object open+parse inside its pool tasks
+            # (runner.cc:197-218), so the wave stays inside the timed
+            # window. A failed build keeps its exception for the pool
+            # task to re-raise (R14). Width is bounded.
             wave = min(len(sources), max(self.threads, 16))
 
-            def _preanalyze(p: str) -> None:
+            def _build(p: str) -> DataFrame | Exception:
                 try:
-                    flagship_on_file(self.spark, p)
-                except Exception:  # noqa: BLE001 — R14: the execution
-                    pass  # task rediscovers and isolates the failure
+                    return flagship_on_file(self.spark, p)
+                except Exception as ex:  # noqa: BLE001  re-raised in the pool
+                    return ex
 
             with ThreadPoolExecutor(max_workers=wave) as prepool:
-                list(prepool.map(_preanalyze, sources))
+                frames = list(prepool.map(_build, sources))
             with ThreadPoolExecutor(max_workers=self.threads) as pool:
-                for fut in [
-                    pool.submit(self._run_one, (i, p))
-                    for i, p in enumerate(sources)
-                ]:
+                futs = [
+                    pool.submit(self._run_one, token, i, frame)
+                    for i, frame in enumerate(frames)
+                ]
+                for path, fut in zip(sources, futs):
                     try:
-                        path, hits, _dt = fut.result()
+                        hits = fut.result()
                         per_file[path] = hits
                         total_hits += hits
                     except Exception as ex:  # noqa: BLE001  per-task isolation (R14)
                         failures.append(str(ex))
                         print(f"error: {ex}", file=sys.stderr)
             wall = time.monotonic() - t0
-        # The UI's app-status store is fed by an ASYNC listener bus: right
-        # after the last job returns, the REST stage list can still be
-        # missing the final completions (observed under machine load).
-        # Poll until two consecutive reads agree (bounded, outside the
-        # timed region — `wall` is already captured above).
-        gm = _rest_group_metrics(self.spark, self._token)
-        for _ in range(20):
-            time.sleep(0.05)
-            gm2 = _rest_group_metrics(self.spark, self._token)
-            if gm2 == gm:
-                break
-            gm = gm2
+        gm = _settled_group_metrics(self.spark, token)
         # filesystem-level ranged-read count when the FS tracks it (s3a —
         # the reference's deployment, runner.cc:89); per-split scan-task
         # count as the local-FS approximation (RawLocalFileSystem never
         # increments readOps)
         fs_ops = _fs_read_ops(self.spark) - ops0
         if gm is None:
-            # UI off → the REST metrics source doesn't exist. Report the
-            # absence as null, never as 0 (ADVICE r2: zeros read as
-            # measurements), and say so once on stderr.
-            print(
-                "warning: spark.ui.enabled=false — byte/record I/O metrics "
-                "unavailable (reported as null)",
-                file=sys.stderr,
-            )
+            # no metrics source: report the absence as null, never as 0
+            # (ADVICE r2: zeros read as measurements)
             read_bytes = read_records = per_file_bytes = None
             read_ops = fs_ops if fs_ops > 0 else None
         else:
@@ -359,7 +348,7 @@ class FanoutRunner:
             scan_tasks = sum(t for _, _, t in gm.values())
             read_ops = fs_ops if fs_ops > 0 else scan_tasks
             per_file_bytes = {
-                p: gm.get(f"{self._token}:{i}", (0, 0, 0))[0]
+                p: gm.get(f"{token}:{i}", (0, 0, 0))[0]
                 for i, p in enumerate(sources)
             }
         report = {

@@ -59,7 +59,6 @@ def default_parallelism() -> int:
 
 def build_spark(
     app_name: str = "ocs-duckdb-runner-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     s3: S3Config | None = None,
     extra_conf: dict[str, str] | None = None,
@@ -95,7 +94,7 @@ def build_spark(
     )
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or env_master or f"local[{cpus}]")
+        .master(env_master or f"local[{cpus}]")
         .config("spark.executorEnv.PYTHONPATH", exec_pp)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.default.parallelism", str(cpus))

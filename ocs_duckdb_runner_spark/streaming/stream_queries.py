@@ -33,23 +33,10 @@ from ocs_duckdb_runner_spark.events.windows import (
     TUMBLING_ORACLE,
 )
 from ocs_duckdb_runner_spark.exactness import fx_sum, sql_fx_sum
-from ocs_duckdb_runner_spark.registry import load_table, query
+from ocs_duckdb_runner_spark.registry import events_schema, load_table, query
 from ocs_duckdb_runner_spark.session import hadoop_fs, scoped_conf
 
 _LOG = logging.getLogger(__name__)
-
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
 
 _COUNTER = {"n": 0}
 
@@ -97,22 +84,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     try:
         ts_type = spark.read.parquet(events_path).schema["ts"].dataType
-    except Exception:  # ns footer — batch read refuses without legacy flag
-        ts_type = None
-    if ts_type is None:
-        # the explicit LongType schema reads the ns values intact with
-        # nanosAsLong unset — only schema INFERENCE needs the flag
-        raw = _source(_events_schema(T.LongType()))
-        return raw.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-        )
-    raw = _source(_events_schema(ts_type))
+    except Exception:  # ns footer — schema inference refuses it
+        ts_type = T.LongType()  # an explicit schema reads the raw ns longs
+    raw = _source(events_schema(ts_type))
     if isinstance(ts_type, T.TimestampNTZType):
         raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     elif isinstance(ts_type, T.LongType):
-        # ns fixture probed in a session whose owner set nanosAsLong: the
-        # footer resolves as raw nanosecond longs — normalize exactly like
-        # the except-branch (and registry.load_table's LongType dispatch).
+        # raw nanosecond longs (an ns footer, or one probed in a session
+        # whose owner set nanosAsLong) — the same truncation as
+        # registry.load_table's ns and LongType dispatch
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return raw
 
@@ -173,9 +153,8 @@ def _stream_shuffle_width(spark: SparkSession, sf_dir: str) -> int:
     4.3-6 s at widths 4-10, while key-light windows prefer narrow (2.0 s
     at 32 vs 1.1-1.5 s at 1-4) — 4 MB/partition sits at the joint
     optimum and keeps growing the width with the data.
-    SPARK_GRAFT_STREAM_SHUFFLE overrides for deployments that know
-    their key cardinality. Partition count never changes WHAT a drained
-    stream emits — only where keys hash.
+    Partition count never changes WHAT a drained stream emits — only
+    where keys hash.
 
     Scope: JVM-stateful operators only (window aggregates, dedup,
     stream-stream joins, the state reader). The PYTHON-stateful family
@@ -184,9 +163,6 @@ def _stream_shuffle_width(spark: SparkSession, sf_dir: str) -> int:
     narrowing to the state-store-optimal width serializes the Python
     work and LOSES (measured at sf0.1, 3-rep medians: tws_session_gap
     8.0s at width 1 vs 6.9s at 32; custom_state 5.1 vs 3.7)."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        return max(1, int(env))
     parallelism = spark.sparkContext.defaultParallelism
     path = f"{sf_dir}/events.parquet"
     # Size the source through the Hadoop FileSystem API, not os.path

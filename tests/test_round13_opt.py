@@ -47,11 +47,6 @@ def test_stream_width_missing_local_path_fails_wide(spark):
     assert w == spark.sparkContext.defaultParallelism
 
 
-def test_stream_width_env_override(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "7")
-    assert _stream_shuffle_width(spark, SF_DIR) == 7
-
-
 # ---- dedup_substring_spans: Arrow-map fingerprint parity (r13) ----
 
 _PARITY_TEXTS = [

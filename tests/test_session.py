@@ -62,3 +62,16 @@ def test_package_changes_conf_only_through_scoped_conf():
         and (rel, line.strip()) not in _ALLOWED
     ]
     assert offenders == [], "hand-rolled conf change; use scoped_conf"
+
+
+def test_package_reads_env_only_in_session():
+    """Environment knobs live in session.py, so a deployment setting has
+    one place to be found and documented."""
+    offenders = [
+        f"{rel}:{n}: {line.strip()}"
+        for path in sorted(_PKG.rglob("*.py"))
+        if (rel := path.relative_to(_PKG).as_posix()) != "session.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\bos\.(environ|getenv)\b|\bgetenv\(", line)
+    ]
+    assert offenders == [], "env knob outside session.py"

@@ -40,7 +40,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 
 from ocs_duckdb_runner_spark.registry import load_table, query
-from ocs_duckdb_runner_spark.session import hadoop_fs, scoped_conf
+from ocs_duckdb_runner_spark.session import hadoop_fs
 
 
 def to_sql(path: str) -> str:
@@ -49,7 +49,18 @@ def to_sql(path: str) -> str:
     the fast path: the whole query is a single Py4J round trip, where the
     DataFrame formulation cost ~40 GIL-serialized Py4J calls per file —
     which, multiplied across pool threads, dominated fan-out wall time.
-    The avg is the exactness.fx_avg fixed-point form inlined."""
+    The avg is the exactness.fx_avg fixed-point form inlined.
+
+    The object is read through ``/*+ COALESCE(1) */``: the filtered scan
+    is coalesced into one partition without a shuffle, so the aggregate
+    and the sort above it need no Exchange and the plan is Scan → Filter
+    → Coalesce 1 → partial + final HashAggregate → Sort — one stage and
+    one task per object under any AQE or shuffle-partition setting. That
+    is one pipeline per object, like the reference's single-threaded
+    DuckDB instance per object (runner.cc:200); parallelism lives across
+    objects, in the pool. The box predicates still reach the scan as
+    PushedFilters and the ReadSchema stays 5 columns. DuckDB reads the
+    hint as a comment, so the same text runs there unchanged."""
     return f"""
     SELECT l_orderkey AS VID,
            min(l_quantity) AS X,
@@ -57,7 +68,7 @@ def to_sql(path: str) -> str:
            min(l_discount) AS Z,
            CAST(sum(CAST(round(l_tax * 10000) AS BIGINT)) AS DOUBLE)
              / count(l_tax) / 10000.0 AS E
-    FROM parquet.`{path}`
+    FROM (SELECT /*+ COALESCE(1) */ * FROM parquet.`{path}`) t
     WHERE l_quantity > 10 AND l_quantity < 20
       AND l_extendedprice > 20000 AND l_extendedprice < 60000
       AND l_discount > 0.02 AND l_discount < 0.08
@@ -95,14 +106,14 @@ def flagship_on_file(spark: SparkSession, path: str) -> DataFrame:
     Dataset per call (Dataset.ofRows, ~3 ms): physical planning and
     execution re-run every time, so each run genuinely re-reads the object
     and the R11 I/O metrics stay truthful. Caching the DataFrame itself
-    would be wrong — re-collecting one Dataset reuses its computed shuffle
-    output and the re-run would skip the scan entirely (0 bytes read: a
-    result cache masquerading as a query run). mtime+size in the key
-    invalidates on file replacement; remote objects (s3a://, hdfs://) are
-    stat'd through the Hadoop FS API instead (one metadata round trip,
-    same invalidation contract). A remote object that cannot be stat'd
-    goes to plain spark.sql, which raises the read error for R14 isolation
-    to report. Bounded FIFO, 1024 entries."""
+    would be wrong — one Dataset pins one executed plan, and any
+    exchange or cached stage in it would let a re-run skip the scan
+    (0 bytes read: a result cache masquerading as a query run).
+    mtime+size in the key invalidates on file replacement; remote objects
+    (s3a://, hdfs://) are stat'd through the Hadoop FS API instead (one
+    metadata round trip, same invalidation contract). A remote object
+    that cannot be stat'd goes to plain spark.sql, which raises the read
+    error for R14 isolation to report. Bounded FIFO, 1024 entries."""
     try:
         st = os.stat(path)
         sig = (st.st_mtime_ns, st.st_size)
@@ -277,60 +288,44 @@ class FanoutRunner:
         sources = list(sources)
         random.Random(1).shuffle(sources)
         ops0 = _fs_read_ops(self.spark)
-        # per-object queries are tiny: 32 shuffle partitions would turn each
-        # group-by into 32 scheduled tasks of scheduling overhead. One
-        # partition per job mirrors the reference's single-threaded
-        # per-instance execution (runner.cc:200) — parallelism lives across
-        # files, exactly like its pool. Restored after the run (even an
-        # interrupt must not leave the shared session pinned to 1).
-        # AQE re-plans between stages — pure overhead for these fixed
-        # single-partition per-object plans (~25% of warm wall time);
-        # the reference's per-object engine is equally static
         total_hits = 0
         failures: list[str] = []
         per_file: dict[str, int] = {}
-        with scoped_conf(
-            self.spark,
-            {
-                "spark.sql.shuffle.partitions": "1",
-                "spark.sql.adaptive.enabled": "false",
-            },
-        ):
-            t0 = time.monotonic()
-            # Analysis wave: build every source's frame concurrently
-            # BEFORE queueing executions. Analysis is driver-side Catalyst
-            # work (footer read + resolution, ~90 ms/object, GIL-released
-            # in the JVM); inside the j-limited pool it serializes into
-            # the execution critical path. As one wide wave the cold wall
-            # is max(analysis) + exec waves — the reference pays the same
-            # per-object open+parse inside its pool tasks
-            # (runner.cc:197-218), so the wave stays inside the timed
-            # window. A failed build keeps its exception for the pool
-            # task to re-raise (R14). Width is bounded.
-            wave = min(len(sources), max(self.threads, 16))
+        t0 = time.monotonic()
+        # Analysis wave: build every source's frame concurrently BEFORE
+        # queueing executions. Analysis is driver-side Catalyst work
+        # (footer read + resolution, ~90 ms/object, GIL-released in the
+        # JVM); inside the j-limited pool it serializes into the execution
+        # critical path. As one wide wave the cold wall is max(analysis) +
+        # exec waves — the reference pays the same per-object open+parse
+        # inside its pool tasks (runner.cc:197-218), so the wave stays
+        # inside the timed window. A failed build keeps its exception for
+        # the pool task to re-raise (R14). Width is bounded, and at least
+        # 1 so an empty source list gives an empty report.
+        wave = max(1, min(len(sources), max(self.threads, 16)))
 
-            def _build(p: str) -> DataFrame | Exception:
+        def _build(p: str) -> DataFrame | Exception:
+            try:
+                return flagship_on_file(self.spark, p)
+            except Exception as ex:  # noqa: BLE001  re-raised in the pool
+                return ex
+
+        with ThreadPoolExecutor(max_workers=wave) as prepool:
+            frames = list(prepool.map(_build, sources))
+        with ThreadPoolExecutor(max_workers=self.threads) as pool:
+            futs = [
+                pool.submit(self._run_one, token, i, frame)
+                for i, frame in enumerate(frames)
+            ]
+            for path, fut in zip(sources, futs):
                 try:
-                    return flagship_on_file(self.spark, p)
-                except Exception as ex:  # noqa: BLE001  re-raised in the pool
-                    return ex
-
-            with ThreadPoolExecutor(max_workers=wave) as prepool:
-                frames = list(prepool.map(_build, sources))
-            with ThreadPoolExecutor(max_workers=self.threads) as pool:
-                futs = [
-                    pool.submit(self._run_one, token, i, frame)
-                    for i, frame in enumerate(frames)
-                ]
-                for path, fut in zip(sources, futs):
-                    try:
-                        hits = fut.result()
-                        per_file[path] = hits
-                        total_hits += hits
-                    except Exception as ex:  # noqa: BLE001  per-task isolation (R14)
-                        failures.append(str(ex))
-                        print(f"error: {ex}", file=sys.stderr)
-            wall = time.monotonic() - t0
+                    hits = fut.result()
+                    per_file[path] = hits
+                    total_hits += hits
+                except Exception as ex:  # noqa: BLE001  per-task isolation (R14)
+                    failures.append(str(ex))
+                    print(f"error: {ex}", file=sys.stderr)
+        wall = time.monotonic() - t0
         gm = _settled_group_metrics(self.spark, token)
         # filesystem-level ranged-read count when the FS tracks it (s3a —
         # the reference's deployment, runner.cc:89); per-split scan-task

@@ -21,6 +21,13 @@ Path model (path-style addressing, s3_url_style='path', runner.cc:209):
 No auth: the reference's loopback MinIO runs with static credentials on
 127.0.0.1 (README.md:98); the client sends credentials, the server is
 indifferent — what is under test is the read path, not IAM.
+
+TCP_NODELAY: the handler sets ``disable_nagle_algorithm``, as Go-based
+stores such as MinIO do by default. With Nagle on, a small response on a
+keep-alive connection (a parquet footer read, a HEAD) is written as a
+header segment plus a body segment, and the body waits for the client's
+delayed ACK of the header: ~44 ms per small ranged GET, against ~0.4 ms
+with the switch (tests/test_s3_loopback.py pins it).
 """
 
 from __future__ import annotations
@@ -62,6 +69,7 @@ class S3LoopbackServer:
 
         class Handler(BaseHTTPRequestHandler):
             protocol_version = "HTTP/1.1"
+            disable_nagle_algorithm = True  # TCP_NODELAY, see module doc
 
             def log_message(self, *a):  # quiet
                 pass

@@ -37,6 +37,57 @@ def test_flagship_aggregate_is_partial_then_final(spark):
     assert "PushedFilters" in plan and "GreaterThan(l_quantity,10.0)" in plan
 
 
+def test_fanout_object_query_is_one_shuffle_free_stage(spark):
+    """The fan-out's per-object query reads through /*+ COALESCE(1) */:
+    Scan → Filter → Coalesce 1 → partial + final HashAggregate → Sort with
+    no Exchange, one pipeline per object like the reference's DuckDB
+    instance (runner.cc:200) — under the session's own AQE and shuffle
+    partitions, and one stage per source over a whole fan-out."""
+    from unittest import mock
+
+    from ocs_duckdb_runner_spark import runner
+    from tests.test_runner import _sources
+
+    files = _sources(spark)
+    df = runner.flagship_on_file(spark, files[0])
+    df.collect()
+    qe = df._jdf.queryExecution()
+    final = qe.executedPlan()
+    if final.nodeName() == "AdaptiveSparkPlan":
+        final = final.executedPlan()
+    tree = final.toString()
+    assert "Exchange" not in tree, tree
+    assert tree.count("Coalesce 1") == 1, tree
+    assert tree.count("HashAggregate") >= 2, tree
+    formatted = qe.explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    for pred in (
+        "GreaterThan(l_quantity,10.0)",
+        "LessThan(l_quantity,20.0)",
+        "GreaterThan(l_extendedprice,20000.0)",
+        "LessThan(l_extendedprice,60000.0)",
+        "GreaterThan(l_discount,0.02)",
+        "LessThan(l_discount,0.08)",
+    ):
+        assert pred in formatted.split("PushedFilters: ")[1].splitlines()[0]
+
+    real = runner._rest_group_metrics
+    with mock.patch.object(runner, "_rest_group_metrics", wraps=real) as read:
+        rep = runner.FanoutRunner(spark, threads=4).run(files)
+    assert rep["failures"] == 0
+    token = read.call_args.args[1]
+    tracker = spark.sparkContext.statusTracker()
+    stages = {
+        i: sum(
+            len(tracker.getJobInfo(j).stageIds)
+            for j in tracker.getJobIdsForGroup(f"{token}:{i}")
+        )
+        for i in range(len(files))
+    }
+    assert stages == {i: 1 for i in range(len(files))}
+
+
 def test_broadcast_join_for_dims(spark):
     plan = plan_of(spark, "join_broadcast")
     assert "BroadcastHashJoin" in plan

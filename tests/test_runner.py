@@ -60,6 +60,44 @@ def test_fanout_restores_session_conf_on_error(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
 
 
+def test_fanout_never_changes_session_conf(spark):
+    """A fan-out plans each object without an exchange, so it has no
+    shuffle or AQE setting to pin: a second thread polling the session's
+    conf for the whole run must only ever see the values it started with."""
+    import threading
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = tuple(spark.conf.get(k) for k in keys)
+    seen: set[tuple] = set()
+    polls = 0
+    done = threading.Event()
+
+    def _poll():
+        nonlocal polls
+        while not done.is_set():
+            seen.add(tuple(spark.conf.get(k) for k in keys))
+            polls += 1
+
+    poller = threading.Thread(target=_poll)
+    poller.start()
+    try:
+        rep = FanoutRunner(spark, threads=4).run(_sources(spark))
+    finally:
+        done.set()
+        poller.join(timeout=30)
+    assert not poller.is_alive()
+    assert rep["failures"] == 0
+    assert polls > 10
+    assert seen == {before}
+
+
+def test_fanout_empty_source_list_gives_empty_report(spark):
+    rep = FanoutRunner(spark, threads=4).run([])
+    assert (rep["sources"], rep["hits"], rep["failures"]) == (0, 0, 0)
+    assert rep["per_file_hits"] == {}
+    assert rep["per_file_bytes"] == {}
+
+
 def test_normalize_source_reference_stdin_forms():
     """The reference feeds quoted 's3://bucket/key' lines on stdin
     (README.md:74-76); s3:// maps to Spark's s3a connector."""

@@ -131,3 +131,39 @@ def test_via_loopback_counts_ranged_reads_on_local_sources(tmp_path):
     assert int(ops.group(1)) == int(srv.group(1)) > 0, err
     m = re.search(r"== total hits: (\d+)", err)
     assert m and int(m.group(1)) > 0, err
+
+
+def test_keepalive_small_ranged_gets_do_not_wait_for_delayed_ack(tmp_path):
+    """Small ranged GETs on one keep-alive connection, like parquet footer
+    reads: with Nagle on, each response's body waits ~40 ms for the
+    client's delayed ACK of its header segment; TCP_NODELAY sends it at
+    once (sub-millisecond on loopback)."""
+    import http.client
+    import statistics
+    import time
+
+    from ocs_duckdb_runner_spark.sources.s3_loopback_server import (
+        S3LoopbackServer,
+    )
+
+    (tmp_path / "obj.bin").write_bytes(bytes(range(256)) * 1024)  # 256 KB
+    with S3LoopbackServer(str(tmp_path)) as srv:
+        conn = http.client.HTTPConnection(srv.host, srv.port, timeout=10)
+        try:
+            lat = []
+            for i in range(21):  # the first request opens the connection
+                start = i * 8192
+                t0 = time.perf_counter()
+                conn.request(
+                    "GET",
+                    "/ocs/obj.bin",
+                    headers={"Range": f"bytes={start}-{start + 4095}"},
+                )
+                resp = conn.getresponse()
+                body = resp.read()
+                lat.append(time.perf_counter() - t0)
+                assert resp.status == 206 and len(body) == 4096
+                assert not resp.will_close  # still the one connection
+        finally:
+            conn.close()
+    assert statistics.median(lat[1:]) < 0.010, lat

@@ -19,6 +19,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ocs_duckdb_runner_spark.session import file_version
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 TABLES = (
@@ -123,13 +125,10 @@ def spread(df: DataFrame) -> DataFrame:
     earlier df.rdd.getNumPartitions() forced a full plan→RDD conversion
     on every construction (ADVICE r1); a file count under-estimates width
     for huge multi-split files, but those are exactly the inputs that are
-    already wide enough not to need spreading."""
+    already wide enough not to need spreading. Leaves that are not files
+    (``range``, ``createDataFrame``) list none, so such frames spread."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        width = len(df.inputFiles())
-    except Exception:
-        width = 0
-    if width >= target:
+    if len(df.inputFiles()) >= target:
         return df
     return df.repartition(target)
 
@@ -204,7 +203,7 @@ def release_local_checkpoint(df: DataFrame) -> None:
     the old GC-based release, never an error."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
+    except Exception:  # best-effort: an unknown plan shape falls to GC
         pass
 
 
@@ -325,16 +324,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     timestamp[us] (current ones); this loader must accept both and hand every
     downstream query the same thing: a native session-µs TimestampType under
     UTC semantics — the truncation the oracle applies with
-    CAST(ts AS TIMESTAMP). Dispatch is on the *resolved* Spark dtype, never
-    on an assumed physical type (the r3 postmortem: a hard-coded ns
-    assumption broke the moment the fixtures moved to µs):
-
-    - plain read succeeds, ts is TimestampType      → pass through
-    - plain read succeeds, ts is TimestampNTZType   → cast to TimestampType
-      (session TZ is UTC, so the wall-clock value is preserved bit-for-bit)
-    - plain read rejects the footer (timestamp[ns]) → re-read with the
-      explicit :func:`events_schema` typing ts as LongType, then truncate
-      ns→µs via timestamp_micros(ts DIV 1000)
+    CAST(ts AS TIMESTAMP). Dispatch is on the type the footer resolves to
+    (:func:`events_ts_type`), never on an assumed physical type (the r3
+    postmortem: a hard-coded ns assumption broke the moment the fixtures
+    moved to µs); :func:`events_ts_to_timestamp` normalizes it. An ns
+    footer is read with the explicit :func:`events_schema` typing ts as
+    LongType.
 
     Session side effect (API boundary): the session time zone is pinned to
     UTC — oracle parity is only defined under UTC timestamp semantics
@@ -346,59 +341,54 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     r1). An explicit LongType schema reads the ns values intact.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        return _load_events(spark, f"{sf_dir}/{name}.parquet")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        return spark.read.parquet(path)
+    ts_type = events_ts_type(spark, path)
+    reader = spark.read
+    if isinstance(ts_type, T.LongType):
+        reader = reader.schema(events_schema(ts_type))
+    return events_ts_to_timestamp(reader.parquet(path), ts_type)
 
 
-# resolved ts-branch per (path, mtime): the dtype probe forces an EAGER
-# footer read (analysis) on every load; queries touching events paid it
-# per call (~the r4→r2 event_tumbling bench regression). The branch is a
-# property of the file bytes, so cache it and let the common µs branch
-# stay fully lazy (schema resolves once, at execution).
-_EVENTS_TS_BRANCH: dict[tuple[str, int], str] = {}
+# events.ts type per (path, file version): the probe forces an EAGER
+# footer read (analysis); queries touching events paid it per call (~the
+# r4→r2 event_tumbling bench regression). The type is a property of the
+# file bytes, so it is probed once per version of the file.
+_EVENTS_TS_TYPE: dict[tuple[str, tuple[int, int]], T.DataType] = {}
 
 
-def _events_mtime(path: str) -> int:
-    try:
-        st = os.stat(path)
-        return st.st_mtime_ns
-    except OSError:  # remote/directory-parquet oddities — don't cache
-        return -1
+def events_ts_type(spark: SparkSession, path: str) -> T.DataType:
+    """The Spark type of ``ts`` in the events parquet at ``path``, as its
+    footer resolves, probed once per :func:`file_version`. A timestamp[ns]
+    footer is LongType: schema inference refuses it with
+    PARQUET_TYPE_ILLEGAL, and an explicit LongType schema reads the raw
+    nanoseconds. Any other probe failure raises: read as "ns" it would
+    turn µs timestamps into 1970 dates, and cache that for the version."""
+    from pyspark.errors import AnalysisException
+
+    key = (path, file_version(spark, path))
+    ts_type = _EVENTS_TS_TYPE.get(key)
+    if ts_type is None:
+        try:
+            ts_type = spark.read.parquet(path).schema["ts"].dataType
+        except AnalysisException as ex:
+            if ex.getCondition() != "PARQUET_TYPE_ILLEGAL":
+                raise
+            ts_type = T.LongType()
+        _EVENTS_TS_TYPE[key] = ts_type
+    return ts_type
 
 
-def _load_events(spark: SparkSession, path: str) -> DataFrame:
+def events_ts_to_timestamp(df: DataFrame, ts_type: T.DataType) -> DataFrame:
+    """``df`` with its ``ts`` of type ``ts_type`` as session-µs
+    TimestampType: TimestampNTZType is cast (the session TZ is UTC, so the
+    wall clock is kept bit-for-bit), LongType nanoseconds truncate to µs
+    like the oracle's CAST(ts AS TIMESTAMP), TimestampType passes."""
     from pyspark.sql import functions as F
 
-    key = (path, _events_mtime(path))
-    branch = _EVENTS_TS_BRANCH.get(key) if key[1] >= 0 else None
-
-    if branch == "plain":
-        return spark.read.parquet(path)
-    if branch == "ntz":
-        return spark.read.parquet(path).withColumn(
-            "ts", F.col("ts").cast(T.TimestampType())
-        )
-    # unknown (first touch) or ns: probe / re-read with an explicit schema
-    if branch != "ns":
-        try:
-            df = spark.read.parquet(path)
-            ts_type = df.schema["ts"].dataType
-            if isinstance(ts_type, T.TimestampNTZType):
-                _EVENTS_TS_BRANCH[key] = "ntz"
-                return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-            if not isinstance(ts_type, T.LongType):
-                _EVENTS_TS_BRANCH[key] = "plain"
-                return df
-            # LongType from schema inference: the caller's own session
-            # has nanosAsLong on — normalize exactly like the ns branch
-            _EVENTS_TS_BRANCH[key] = "ns"
-            return df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-            )
-        except Exception:
-            _EVENTS_TS_BRANCH[key] = "ns"
-    # timestamp[ns] footer — schema inference refuses it; an explicit
-    # LongType ts reads the raw nanosecond values
-    df = spark.read.schema(events_schema(T.LongType())).parquet(path)
-    return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    if isinstance(ts_type, T.TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df

@@ -40,7 +40,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 
 from ocs_duckdb_runner_spark.registry import load_table, query
-from ocs_duckdb_runner_spark.session import hadoop_fs
+from ocs_duckdb_runner_spark.session import file_version
 
 
 def to_sql(path: str) -> str:
@@ -109,20 +109,13 @@ def flagship_on_file(spark: SparkSession, path: str) -> DataFrame:
     would be wrong — one Dataset pins one executed plan, and any
     exchange or cached stage in it would let a re-run skip the scan
     (0 bytes read: a result cache masquerading as a query run).
-    mtime+size in the key invalidates on file replacement; remote objects
-    (s3a://, hdfs://) are stat'd through the Hadoop FS API instead (one
-    metadata round trip, same invalidation contract). A remote object
-    that cannot be stat'd goes to plain spark.sql, which raises the read
-    error for R14 isolation to report. Bounded FIFO, 1024 entries."""
-    try:
-        st = os.stat(path)
-        sig = (st.st_mtime_ns, st.st_size)
-    except OSError:  # remote object — stat via the Hadoop FS API
-        sig = _remote_sig(spark, path)
-        if sig is None:
-            return spark.sql(to_sql(path))
+    The key's :func:`~ocs_duckdb_runner_spark.session.file_version`
+    (Hadoop-FS mtime and length, any scheme) invalidates on file
+    replacement; an object it cannot stat raises here, for R14 isolation
+    to report. Bounded FIFO, 1024 entries."""
+    version = file_version(spark, path)
     with _PLAN_CACHE_LOCK:
-        key = (path, sig, _session_uid(spark))
+        key = (path, version, _session_uid(spark))
         plan = _PLAN_CACHE.get(key)
     if plan is not None:
         jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
@@ -139,19 +132,6 @@ def flagship_on_file(spark: SparkSession, path: str) -> DataFrame:
             _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
         _PLAN_CACHE[key] = plan
     return df
-
-
-def _remote_sig(spark: SparkSession, path: str) -> tuple | None:
-    """(mtime, length) of a remote object via the Hadoop FileSystem API —
-    the plan-cache invalidation signature for s3a://-style paths (one
-    HEAD-equivalent metadata call; the reference pays the same probe as
-    part of every DuckDB open)."""
-    try:
-        fs, hpath = hadoop_fs(spark, path)
-        st = fs.getFileStatus(hpath)
-        return (st.getModificationTime(), st.getLen())
-    except Exception:  # noqa: BLE001  (no FS for scheme / object missing)
-        return None
 
 
 def _fs_read_ops(spark: SparkSession) -> int:
@@ -323,8 +303,9 @@ class FanoutRunner:
                     per_file[path] = hits
                     total_hits += hits
                 except Exception as ex:  # noqa: BLE001  per-task isolation (R14)
-                    failures.append(str(ex))
-                    print(f"error: {ex}", file=sys.stderr)
+                    cause = getattr(ex, "java_exception", ex)  # Py4J: one line
+                    failures.append(str(cause))
+                    print(f"error: {cause}", file=sys.stderr)
         wall = time.monotonic() - t0
         gm = _settled_group_metrics(self.spark, token)
         # filesystem-level ranged-read count when the FS tracks it (s3a —

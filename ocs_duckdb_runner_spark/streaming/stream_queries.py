@@ -33,7 +33,13 @@ from ocs_duckdb_runner_spark.events.windows import (
     TUMBLING_ORACLE,
 )
 from ocs_duckdb_runner_spark.exactness import fx_sum, sql_fx_sum
-from ocs_duckdb_runner_spark.registry import events_schema, load_table, query
+from ocs_duckdb_runner_spark.registry import (
+    events_schema,
+    events_ts_to_timestamp,
+    events_ts_type,
+    load_table,
+    query,
+)
 from ocs_duckdb_runner_spark.session import hadoop_fs, scoped_conf
 
 _LOG = logging.getLogger(__name__)
@@ -44,57 +50,33 @@ _COUNTER = {"n": 0}
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet, normalized to session-µs
     TimestampType under UTC — the same contract as the batch loader
-    (registry.load_table), and the same dtype dispatch: the file source
-    needs a user-supplied schema, so probe the footer with a one-off batch
-    read (metadata only, no data scan) rather than assuming a physical
-    type (the r3 postmortem: fixtures moved ns→µs under a hard-coded ns
-    assumption). Layout dispatch: events.parquet ships as a single FILE
-    in the standard fixtures but as a DIRECTORY of part files from the
-    scale probe — a glob filter for the file name matches nothing in the
-    directory layout and the source silently streams ZERO rows (the r8
-    10x-sweep finding: every stream query 'passed' rows-only on empty
-    input), so point the source at whichever layout exists. The
-    file-vs-directory probe goes through the Hadoop FileSystem API
-    (r13, same class of bug as _stream_shuffle_width's sizing): a
-    driver-local os.path.isdir is False for ANY object-store path, so an
-    s3a:// sf_dir with the directory layout silently hit the
-    glob-filter branch and streamed zero rows — reproduced, then fixed,
-    against the live loopback s3a endpoint (S3AWIDTH_r13.json)."""
+    (registry.load_table), and the same probe: the file source needs a
+    user-supplied schema, so ``ts`` is typed by registry.events_ts_type
+    (the footer, once per file version) and normalized by
+    registry.events_ts_to_timestamp. Layout dispatch: events.parquet
+    ships as a single FILE in the standard fixtures but as a DIRECTORY of
+    part files from the scale probe — a glob filter for the file name
+    matches nothing in the directory layout and the source silently
+    streams ZERO rows (the r8 10x-sweep finding: every stream query
+    'passed' rows-only on empty input), so point the source at whichever
+    layout exists. The file-vs-directory probe goes through the Hadoop
+    FileSystem API (r13): a driver-local os.path.isdir is False for ANY
+    object-store path, so an s3a:// sf_dir with the directory layout
+    streamed zero rows (S3AWIDTH_r13.json). A path it cannot stat
+    raises."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     events_path = f"{sf_dir}/events.parquet"
-
-    def _is_dir(path: str) -> bool:
-        try:
-            fs, hpath = hadoop_fs(spark, path)
-            return fs.getFileStatus(hpath).isDirectory()
-        except Exception:
-            return os.path.isdir(path)
-
-    def _source(schema: T.StructType) -> DataFrame:
-        if _is_dir(events_path):
-            # directory-parquet: stream the part files directly
-            return spark.readStream.schema(schema).parquet(events_path)
+    ts_type = events_ts_type(spark, events_path)
+    reader = spark.readStream.schema(events_schema(ts_type))
+    fs, hpath = hadoop_fs(spark, events_path)
+    if fs.getFileStatus(hpath).isDirectory():
+        # directory-parquet: stream the part files directly
+        raw = reader.parquet(events_path)
+    else:
         # single file: the file source requires a directory; glob-filter
         # the listing down to the events file
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-
-    try:
-        ts_type = spark.read.parquet(events_path).schema["ts"].dataType
-    except Exception:  # ns footer — schema inference refuses it
-        ts_type = T.LongType()  # an explicit schema reads the raw ns longs
-    raw = _source(events_schema(ts_type))
-    if isinstance(ts_type, T.TimestampNTZType):
-        raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    elif isinstance(ts_type, T.LongType):
-        # raw nanosecond longs (an ns footer, or one probed in a session
-        # whose owner set nanosAsLong) — the same truncation as
-        # registry.load_table's ns and LongType dispatch
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return raw
+        raw = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    return events_ts_to_timestamp(raw, ts_type)
 
 
 def _events_fingerprint(sf_dir: str) -> str:
@@ -175,7 +157,7 @@ def _stream_shuffle_width(spark: SparkSession, sf_dir: str) -> int:
     try:
         fs, hpath = hadoop_fs(spark, path)
         size = fs.getContentSummary(hpath).getLength()
-    except Exception as ex:
+    except Exception as ex:  # logged below; fails wide, never narrow
         # Unknown/unreadable source: fail WIDE (session parallelism),
         # never narrow — an over-wide stateful shuffle costs near-empty
         # state-store commits; an under-wide one serializes the drain.

@@ -3,13 +3,13 @@ isolation (reference R9-R15 semantics)."""
 
 from __future__ import annotations
 
+import os
+
 from ocs_duckdb_runner_spark.runner import FanoutRunner, split_objects
 from tests.conftest import SF_DIR
 
 
 def _sources(spark):
-    import os
-
     objdir = split_objects(spark, SF_DIR, 4)
     return sorted(
         f"{objdir}/{f}" for f in os.listdir(objdir) if f.endswith(".parquet")
@@ -33,11 +33,37 @@ def test_fanout_report_and_determinism(spark):
     assert total == spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
 
 
-def test_fanout_isolates_bad_source(spark):
+def test_fanout_isolates_bad_source(spark, capsys):
     files = [*_sources(spark), "/nonexistent/object.parquet"]
     rep = FanoutRunner(spark, threads=4).run(files)
     assert rep["failures"] == 1  # bad file logged, run completed (R14)
     assert rep["hits"] > 0
+    # one line naming the object, not the Py4J error's Java stack trace
+    err = capsys.readouterr().err.splitlines()
+    errors = [line for line in err if line.startswith("error:")]
+    assert len(errors) == 1 and "/nonexistent/object.parquet" in errors[0]
+    assert not any(line.startswith("\tat ") for line in err)
+
+
+def test_plan_cache_follows_a_rewritten_object(spark, tmp_path):
+    """The plan cache is keyed by the object's Hadoop-FS version: an
+    object rewritten with another length is analyzed again, so the run
+    answers for the new bytes."""
+    import shutil
+
+    from ocs_duckdb_runner_spark.runner import flagship_on_file
+
+    a, b = sorted(_sources(spark), key=os.path.getsize)[-2:]
+    assert os.path.getsize(a) != os.path.getsize(b)
+    want_a = flagship_on_file(spark, a).collect()
+    want_b = flagship_on_file(spark, b).collect()
+    assert want_a != want_b
+    obj = str(tmp_path / "object.parquet")
+    shutil.copy(a, obj)
+    assert flagship_on_file(spark, obj).collect() == want_a
+    assert flagship_on_file(spark, obj).collect() == want_a  # cached plan
+    shutil.copy(b, obj)
+    assert flagship_on_file(spark, obj).collect() == want_b
 
 
 def test_fanout_reports_read_ops(spark):

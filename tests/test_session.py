@@ -1,5 +1,6 @@
-"""session.scoped_conf, and a source guard that keeps it the only way
-the package changes a session conf."""
+"""session.scoped_conf and session.file_version, and source guards: conf
+changes only through scoped_conf, env reads only in session.py, and a
+reason on every catch-all."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ from pathlib import Path
 
 import pytest
 
-from ocs_duckdb_runner_spark.session import scoped_conf
+from ocs_duckdb_runner_spark.session import file_version, scoped_conf
 
 _KEY = "spark.ocs.test.scoped"
 _PARTS = "spark.sql.shuffle.partitions"  # explicitly set by the builder
@@ -45,6 +46,17 @@ def test_scoped_conf_failed_set_raises_before_body(spark):
     assert spark.conf.get(_KEY, None) is None
 
 
+def test_file_version_tracks_length_and_raises_on_missing(spark, tmp_path):
+    f = tmp_path / "object.bin"
+    f.write_bytes(b"x" * 10)
+    mtime_ms, length = file_version(spark, str(f))
+    assert length == 10 and abs(mtime_ms - f.stat().st_mtime * 1000) < 1000
+    f.write_bytes(b"x" * 11)
+    assert file_version(spark, str(f))[1] == 11
+    with pytest.raises(Exception, match="FileNotFoundException"):
+        file_version(spark, str(tmp_path / "missing.parquet"))
+
+
 # The UTC pins are deliberate session-wide side effects (session.py module
 # docstring); every other conf change in the package goes through scoped_conf.
 _PKG = Path(__file__).resolve().parent.parent / "ocs_duckdb_runner_spark"
@@ -75,3 +87,16 @@ def test_package_reads_env_only_in_session():
         if re.search(r"\bos\.(environ|getenv)\b|\bgetenv\(", line)
     ]
     assert offenders == [], "env knob outside session.py"
+
+
+def test_every_catch_all_names_its_reason():
+    """Every ``except Exception`` in the package says on its own line, in
+    a comment, why it catches everything."""
+    offenders = [
+        f"{path.relative_to(_PKG).as_posix()}:{n}: {line.strip()}"
+        for path in sorted(_PKG.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\bexcept Exception\b", line)
+        and not re.search(r"\bexcept Exception\b[^#]*:\s*#\s*\S", line)
+    ]
+    assert offenders == [], "catch-all without a reason comment"

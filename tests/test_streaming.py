@@ -265,6 +265,84 @@ def test_stream_ns_timestamp_source_matches_batch_and_leaks_no_flag(
     assert spark.conf.get(key, None) == before
 
 
+def _events_copy(tmp_path):
+    """A µs events file at a path no loader has probed yet."""
+    import shutil
+
+    shutil.copy(f"{SF_DIR}/events.parquet", tmp_path / "events.parquet")
+    return str(tmp_path)
+
+
+def _count_parquet_reads(monkeypatch, fail_first=False):
+    """Patch DataFrameReader.parquet to record each call; with
+    ``fail_first`` the first one raises a transient error."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    real = DataFrameReader.parquet
+    calls = []
+
+    def parquet(self, *paths, **options):
+        calls.append(paths)
+        if fail_first and len(calls) == 1:
+            raise RuntimeError("transient")
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    return calls
+
+
+def test_events_probe_failure_raises_not_ns(spark, tmp_path, monkeypatch):
+    """A transient failure of the ts-type probe on a µs file raises: read
+    as an ns footer it would load 1970 timestamps, cached for the file's
+    version. Nothing is cached, so the next load reads the real dates."""
+    from ocs_duckdb_runner_spark.registry import load_table
+
+    sf_dir = _events_copy(tmp_path)
+    _count_parquet_reads(monkeypatch, fail_first=True)
+    with pytest.raises(RuntimeError, match="transient"):
+        load_table(spark, sf_dir, "events")
+    first = load_table(spark, sf_dir, "events").agg(F.min("ts")).first()[0]
+    assert first.year == 2024
+
+
+def test_stream_probe_failure_raises_not_ns(spark, tmp_path, monkeypatch):
+    """The stream loader shares the batch probe: the same transient
+    failure raises instead of typing a µs source as raw ns longs."""
+    from ocs_duckdb_runner_spark.streaming.stream_queries import (
+        read_events_stream,
+    )
+
+    sf_dir = _events_copy(tmp_path)
+    _count_parquet_reads(monkeypatch, fail_first=True)
+    with pytest.raises(RuntimeError, match="transient"):
+        read_events_stream(spark, sf_dir)
+
+
+def test_events_ts_type_probes_once_per_file_version(
+    spark, tmp_path, monkeypatch
+):
+    """Two loads of one events file probe its footer once; a rewrite with
+    another length is a new version and is probed again."""
+    import pyarrow.parquet as pq
+
+    from ocs_duckdb_runner_spark.registry import load_table
+
+    sf_dir = _events_copy(tmp_path)
+    calls = _count_parquet_reads(monkeypatch)
+
+    def reads_per_load():
+        before = len(calls)
+        n = load_table(spark, sf_dir, "events").count()
+        return len(calls) - before, n
+
+    reads, n = reads_per_load()
+    assert reads == 2  # probe + scan
+    assert reads_per_load() == (1, n)  # scan only
+    path = f"{sf_dir}/events.parquet"
+    pq.write_table(pq.read_table(path).slice(0, n // 2), path)
+    assert reads_per_load() == (2, n // 2)
+
+
 def test_stream_sessionize_matches_batch_twin(spark):
     """stream_sessionize ≡ event_sessionize: session_window under a
     watermark produces the same sessions the batch operator derives."""

@@ -28,11 +28,8 @@ from ocs_duckdb_runner_spark.llm.similarity import (
     cosine,
     fp_vec,
 )
-from ocs_duckdb_runner_spark.registry import (
-    checkpoint_release,
-    load_table,
-    query,
-)
+from ocs_duckdb_runner_spark.registry import load_table, query
+from ocs_duckdb_runner_spark.session import scoped_cache
 
 CHUNK_W = 64  # tokens per chunk
 CHUNK_S = 48  # chunk stride (overlap = W - S = 16)
@@ -675,36 +672,37 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates shuffle on token/source keys only. Source count is small
     by construction, so the output matrix is tiny at any scale."""
     d = load_table(spark, sf_dir, "documents")
-    st = d.select(
-        "source", F.explode(F.split(F.col("text"), " ")).alias("tok")
-    ).distinct().persist()
-    sz = st.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    a = st.toDF("src_a", "tok")
-    b = st.toDF("src_b", "tok2")
-    inter = (
-        a.join(b, (a.tok == b.tok2) & (a.src_a < b.src_b))
-        .groupBy("src_a", "src_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-    )
-    za = sz.toDF("za_src", "vocab_a")
-    zb = sz.toDF("zb_src", "vocab_b")
-    out = (
-        inter.join(F.broadcast(za), inter.src_a == za.za_src)
-        .join(F.broadcast(zb), inter.src_b == zb.zb_src)
-        .select(
-            "src_a",
-            "src_b",
-            "n_common",
-            "vocab_a",
-            "vocab_b",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("vocab_a") + F.col("vocab_b") - F.col("n_common")),
-                9,
-            ).alias("jaccard"),
+    with scoped_cache() as persist:
+        st = persist(d.select(
+            "source", F.explode(F.split(F.col("text"), " ")).alias("tok")
+        ).distinct())
+        sz = st.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n"))
+        a = st.toDF("src_a", "tok")
+        b = st.toDF("src_b", "tok2")
+        inter = (
+            a.join(b, (a.tok == b.tok2) & (a.src_a < b.src_b))
+            .groupBy("src_a", "src_b")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
         )
-    )
-    return checkpoint_release(out, st)
+        za = sz.toDF("za_src", "vocab_a")
+        zb = sz.toDF("zb_src", "vocab_b")
+        out = (
+            inter.join(F.broadcast(za), inter.src_a == za.za_src)
+            .join(F.broadcast(zb), inter.src_b == zb.zb_src)
+            .select(
+                "src_a",
+                "src_b",
+                "n_common",
+                "vocab_a",
+                "vocab_b",
+                F.round(
+                    F.col("n_common").cast("double")
+                    / (F.col("vocab_a") + F.col("vocab_b") - F.col("n_common")),
+                    9,
+                ).alias("jaccard"),
+            )
+        )
+        return out.localCheckpoint(eager=True)
 
 
 _FLAG_TOKENS = ("the", "a", "of", "and", "to")  # stand-in for PII hits
@@ -987,30 +985,30 @@ def corpus_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: (source, token) counts are word-count-shaped; marginals are
     key-only rollups; everything after is vocabulary-bounded."""
     d = load_table(spark, sf_dir, "documents")
-    sc = (
-        d.select("source", F.explode(F.split(F.col("text"), " ")).alias("t"))
-        .groupBy("source", "t")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
-    )
-    stot = sc.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
-    ctot = sc.groupBy("t").agg(F.sum("c").cast("long").alias("cc"))
-    gtot = sc.agg(F.sum("c").cast("long").alias("g"))
-    p = F.col("c").cast("double") / F.col("n")
-    q = F.col("cc").cast("double") / F.col("g")
-    m = (p + q) / 2
-    kl_term = F.round(
-        0.5 * p * F.log(p / m) + 0.5 * q * F.log(q / m), 12
-    )
-    out = (
-        sc.join(stot, "source")
-        .join(ctot, "t")
-        .crossJoin(F.broadcast(gtot))
-        .select("source", kl_term.alias("kl_term"))
-        .groupBy("source")
-        .agg(F.round(F.sum("kl_term"), 6).alias("jsd_nats"))
-    )
-    return checkpoint_release(out, sc)
+    with scoped_cache() as persist:
+        sc = persist(
+            d.select("source", F.explode(F.split(F.col("text"), " ")).alias("t"))
+            .groupBy("source", "t")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        stot = sc.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
+        ctot = sc.groupBy("t").agg(F.sum("c").cast("long").alias("cc"))
+        gtot = sc.agg(F.sum("c").cast("long").alias("g"))
+        p = F.col("c").cast("double") / F.col("n")
+        q = F.col("cc").cast("double") / F.col("g")
+        m = (p + q) / 2
+        kl_term = F.round(
+            0.5 * p * F.log(p / m) + 0.5 * q * F.log(q / m), 12
+        )
+        out = (
+            sc.join(stot, "source")
+            .join(ctot, "t")
+            .crossJoin(F.broadcast(gtot))
+            .select("source", kl_term.alias("kl_term"))
+            .groupBy("source")
+            .agg(F.round(F.sum("kl_term"), 6).alias("jsd_nats"))
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -1488,16 +1486,17 @@ def corpus_syndication_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams are 8-byte xxhash64 values, never strings, exactly the
     dedup_ngram_jaccard choice (the oracle compares raw gram strings; a
     cross-gram collision is ~1e-11). Source-size frames broadcast."""
-    out, persisted = _syndication_build(spark, sf_dir)
-    return checkpoint_release(out, *persisted)
+    with scoped_cache() as persist:
+        return _syndication_build(spark, sf_dir, persist).localCheckpoint(
+            eager=True
+        )
 
 
-def _syndication_build(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[DataFrame]]:
-    """Pre-checkpoint syndication plan — factored so tests/test_plans.py
-    can pin the equi-join + broadcast shape (the registered query
-    localCheckpoints its result, which hides the plan)."""
+def _syndication_build(spark: SparkSession, sf_dir: str, persist) -> DataFrame:
+    """Pre-checkpoint syndication plan, its gram set persisted through
+    the caller's scope — factored so tests/test_plans.py can pin the
+    equi-join + broadcast shape (the registered query localCheckpoints
+    its result, which hides the plan)."""
     from ocs_duckdb_runner_spark.llm.dedup import shingle_hashes
     from ocs_duckdb_runner_spark.registry import spread
 
@@ -1507,15 +1506,13 @@ def _syndication_build(
     toks = spread(
         d.select("source", F.split(F.col("text"), " ").alias("toks"))
     )
-    sg = (
+    sg = persist(
         toks.select(
             "source",
             F.explode(shingle_hashes(F.col("toks"), SYN_GRAM_K)).alias(
                 "gram"
             ),
-        )
-        .distinct()
-        .persist()
+        ).distinct()
     )
     sz = sg.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_grams_a")
@@ -1528,7 +1525,7 @@ def _syndication_build(
         .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
     )
     za = sz.toDF("za_src", "n_grams_a")
-    out = (
+    return (
         inter.join(F.broadcast(za), inter.src_a == za.za_src)
         .select(
             "src_a",
@@ -1541,7 +1538,6 @@ def _syndication_build(
         )
         .orderBy("src_a", "src_b")
     )
-    return out, [sg]
 
 
 _DSIR_DIM = 64  # hashed-feature buckets (text_feature_hashing's dim)

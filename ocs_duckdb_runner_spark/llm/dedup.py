@@ -28,7 +28,7 @@ from ocs_duckdb_runner_spark.registry import (
     release_local_checkpoint,
     spread,
 )
-from ocs_duckdb_runner_spark.session import scoped_conf
+from ocs_duckdb_runner_spark.session import scoped_cache, scoped_conf
 
 # MinHash parameters: 16 hashes = 4 bands × 4 rows → catches Jaccard ≳ 0.7
 # candidates with high probability while keeping bucket-join fan-out tiny.
@@ -189,9 +189,8 @@ def minhash_candidates(docs: DataFrame) -> DataFrame:
     # materialize the shingle arrays first: the 16 signature slots each
     # re-inline the full `sh` expression otherwise (higher-order lambdas
     # have no CSE), recomputing the shingle pipeline 16× per doc
-    mat = docs.persist()
-    banded = None
-    try:
+    with scoped_cache() as persist:
+        mat = persist(docs)
         sigs = mat.select(
             "doc_id",
             minhash_bands(minhash_signature(F.col("sh"))).alias("bands"),
@@ -199,11 +198,11 @@ def minhash_candidates(docs: DataFrame) -> DataFrame:
         # persist the banded signatures: 4 rows × 3 longs per doc (tiny at
         # any scale) — without it BOTH self-join branches recompute the
         # whole shingle+signature pipeline, which dominates the query
-        banded = sigs.select(
+        banded = persist(sigs.select(
             "doc_id", F.posexplode("bands").alias("band", "band_hash")
-        ).persist()
+        ))
         a, b = banded.alias("a"), banded.alias("b")
-        out = (
+        return (
             a.join(
                 b,
                 (F.col("a.band") == F.col("b.band"))
@@ -218,14 +217,9 @@ def minhash_candidates(docs: DataFrame) -> DataFrame:
             # materialize the (small) pair set, then release the cached
             # bands: a long-lived session sweeping the full registry must
             # not accumulate per-query cache blocks (ADVICE r1) — even
-            # when a query FAILS mid-run, hence the finally
+            # when a query FAILS mid-run, hence the scope
             .localCheckpoint(eager=True)
         )
-    finally:
-        if banded is not None:
-            banded.unpersist()
-        mat.unpersist()
-    return out
 
 
 @query("dedup_minhash", oracle=None, tags=("llm", "dedup", "minhash", "didactic"))
@@ -296,12 +290,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         ).alias("band"),
-    ).select("doc_id", "fp", "band.q", "band.sub").persist()
+    ).select("doc_id", "fp", "band.q", "band.sub")
     # persisted for the same reason as the minhash bands: the 64-slot
     # vote-fold fingerprint is expensive; compute it once, not per branch
-    try:
+    with scoped_cache() as persist:
+        quarters = persist(quarters)
         a, b = quarters.alias("a"), quarters.alias("b")
-        out = (
+        return (
             a.join(
                 b,
                 (F.col("a.q") == F.col("b.q"))
@@ -319,9 +314,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .localCheckpoint(eager=True)
         )
-    finally:
-        quarters.unpersist()
-    return out
 
 
 _SQL_SHINGLES = """
@@ -353,15 +345,12 @@ def _jaccard_from_tokens(token_frame: DataFrame) -> DataFrame:
     ARRAY frame is what gets persisted: explode() and the df-cap and both
     self-join branches all read the cached arrays, so the expensive
     shingle pipeline runs exactly once per doc."""
-    arr = token_frame.select(
-        "doc_id", shingle_hashes(F.col("toks")).alias("sh")
-    ).persist()
-    try:
+    with scoped_cache() as persist:
+        arr = persist(token_frame.select(
+            "doc_id", shingle_hashes(F.col("toks")).alias("sh")
+        ))
         sh = arr.select("doc_id", F.explode("sh").alias("shingle"))
-        out = _jaccard_pairs_from_sh(sh)  # materialized inside (eager cp)
-    finally:
-        arr.unpersist()
-    return out
+        return _jaccard_pairs_from_sh(sh)  # materialized inside (eager cp)
 
 
 # Hot-shingle document-frequency cap: a shingle present in d documents
@@ -431,8 +420,8 @@ def _jaccard_pairs_from_sh(
     DuckDB oracle; the result is materialized (eager checkpoint) before
     the cache is released. Caller persists the shingle-array frame
     feeding ``sh``."""
-    kept = _capped_shingle_docs(sh, df_cap).persist()
-    try:
+    with scoped_cache() as persist:
+        kept = persist(_capped_shingle_docs(sh, df_cap))
         counts = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
         a, b = kept.alias("a"), kept.alias("b")
         pairs = (
@@ -450,16 +439,13 @@ def _jaccard_pairs_from_sh(
         jac = F.col("shared").cast("double") / (
             F.col("na") + F.col("nb") - F.col("shared")
         )
-        out = (
+        return (
             pairs.join(counts.toDF("doc_a", "na"), "doc_a")
             .join(counts.toDF("doc_b", "nb"), "doc_b")
             .select("doc_a", "doc_b", "shared", jac.alias("jaccard"))
             .filter(F.col("jaccard") >= 0.2)
             .localCheckpoint(eager=True)
         )
-    finally:
-        kept.unpersist()
-    return out
 
 
 def _sql_jaccard_capped(shingle_cte: str, cap: int) -> str:
@@ -536,13 +522,12 @@ def _containment_from_tokens(token_frame: DataFrame) -> DataFrame:
     C ≥ CONTAIN_TAU over the df-capped shingle universe — the engine body
     shared by dedup_containment (all docs) and dedup_containment_unique
     (keepers only)."""
-    arr = token_frame.select(
-        "doc_id", shingle_hashes(F.col("toks")).alias("sh")
-    ).persist()
-    kept = None
-    try:
+    with scoped_cache() as persist:
+        arr = persist(token_frame.select(
+            "doc_id", shingle_hashes(F.col("toks")).alias("sh")
+        ))
         sh = arr.select("doc_id", F.explode("sh").alias("shingle"))
-        kept = _capped_shingle_docs(sh, SHINGLE_DF_CAP).persist()
+        kept = persist(_capped_shingle_docs(sh, SHINGLE_DF_CAP))
         counts = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("na"))
         a, b = kept.alias("a"), kept.alias("b")
         pairs = (
@@ -558,17 +543,12 @@ def _containment_from_tokens(token_frame: DataFrame) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("shared"))
         )
         contain = F.col("shared").cast("double") / F.col("na")
-        out = (
+        return (
             pairs.join(counts.toDF("doc_a", "na"), "doc_a")
             .select("doc_a", "doc_b", "shared", contain.alias("containment"))
             .filter(F.col("containment") >= CONTAIN_TAU)
             .localCheckpoint(eager=True)
         )
-    finally:
-        if kept is not None:
-            kept.unpersist()
-        arr.unpersist()
-    return out
 
 
 @query(
@@ -808,79 +788,71 @@ def _propagate_min_label(edges_src_dst: DataFrame, width: int) -> DataFrame:
     would swap in reliable ``checkpoint()`` against the cluster FS and
     pay a distributed write per round for it."""
     spark = edges_src_dst.sparkSession
-    edges = None
-    with scoped_conf(
-        spark,
-        {
-            "spark.sql.shuffle.partitions": str(width),
-            "spark.sql.adaptive.enabled": "false",
-        },
-    ):
-        try:
-            edges = edges_src_dst.repartition(width, "src").persist()
-            labels = (
-                edges.select(F.col("src").alias("doc_id"))
-                .distinct()
-                .select("doc_id", F.col("doc_id").alias("lbl"))
+    conf = {
+        "spark.sql.shuffle.partitions": str(width),
+        "spark.sql.adaptive.enabled": "false",
+    }
+    with scoped_conf(spark, conf), scoped_cache() as persist:
+        edges = persist(edges_src_dst.repartition(width, "src"))
+        labels = (
+            edges.select(F.col("src").alias("doc_id"))
+            .distinct()
+            .select("doc_id", F.col("doc_id").alias("lbl"))
+            .localCheckpoint(eager=True)
+        )
+        # iterate to CONVERGENCE, not to a fixed round count: an earlier
+        # revision capped at 30 rounds and fell through SILENTLY, which
+        # on a component of diameter >30 (a chain of incrementally
+        # edited versions) would emit unconverged labels — duplicates
+        # retained, oracle diverged. A pathological diameter now fails
+        # loudly instead.
+        rounds = 0
+        pinned = labels  # the live checkpoint; freed once superseded
+        while True:
+            nbr = (
+                edges.join(labels, edges.src == labels.doc_id)
+                .groupBy(F.col("dst").alias("doc_id"))
+                .agg(F.min("lbl").alias("nbr_lbl"))
+            )
+            # eager localCheckpoint IS the round's materializing action
+            # and truncates lineage to a constant-size LogicalRDD (see
+            # docstring: the plan otherwise doubles per round). The
+            # change-count agg after it reads the pinned RDD — near-free.
+            merged = (
+                labels.join(nbr, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    F.least(
+                        F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))
+                    ).alias("lbl"),
+                    (F.coalesce(F.col("nbr_lbl"), F.col("lbl")) < F.col("lbl"))
+                    .cast("long")
+                    .alias("chg"),
+                )
                 .localCheckpoint(eager=True)
             )
-            # iterate to CONVERGENCE, not to a fixed round count: an earlier
-            # revision capped at 30 rounds and fell through SILENTLY, which
-            # on a component of diameter >30 (a chain of incrementally
-            # edited versions) would emit unconverged labels — duplicates
-            # retained, oracle diverged. A pathological diameter now fails
-            # loudly instead.
-            rounds = 0
-            pinned = labels  # the live checkpoint; freed once superseded
-            while True:
-                nbr = (
-                    edges.join(labels, edges.src == labels.doc_id)
-                    .groupBy(F.col("dst").alias("doc_id"))
-                    .agg(F.min("lbl").alias("nbr_lbl"))
+            # merged has materialized (eager), so the PREVIOUS round's
+            # checkpoint blocks are dead — release them now instead of
+            # waiting for driver GC (ADVICE r10: over hundreds of rounds
+            # the pinned RDDs otherwise accumulate nondeterministically;
+            # storage stays one labels-frame-sized, not O(rounds))
+            release_local_checkpoint(pinned)
+            pinned = merged
+            changed = merged.agg(F.sum("chg")).first()[0]
+            labels = merged.select("doc_id", "lbl")
+            if not changed:
+                break
+            rounds += 1
+            if rounds >= 500:
+                raise RuntimeError(
+                    "min-label propagation did not converge in 500 rounds"
+                    f" ({changed} labels still moving) — component diameter"
+                    " beyond any plausible near-dup cluster; refusing to"
+                    " emit unconverged clusters"
                 )
-                # eager localCheckpoint IS the round's materializing action
-                # and truncates lineage to a constant-size LogicalRDD (see
-                # docstring: the plan otherwise doubles per round). The
-                # change-count agg after it reads the pinned RDD — near-free.
-                merged = (
-                    labels.join(nbr, "doc_id", "left")
-                    .select(
-                        "doc_id",
-                        F.least(
-                            F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))
-                        ).alias("lbl"),
-                        (F.coalesce(F.col("nbr_lbl"), F.col("lbl")) < F.col("lbl"))
-                        .cast("long")
-                        .alias("chg"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                # merged has materialized (eager), so the PREVIOUS round's
-                # checkpoint blocks are dead — release them now instead of
-                # waiting for driver GC (ADVICE r10: over hundreds of rounds
-                # the pinned RDDs otherwise accumulate nondeterministically;
-                # storage stays one labels-frame-sized, not O(rounds))
-                release_local_checkpoint(pinned)
-                pinned = merged
-                changed = merged.agg(F.sum("chg")).first()[0]
-                labels = merged.select("doc_id", "lbl")
-                if not changed:
-                    break
-                rounds += 1
-                if rounds >= 500:
-                    raise RuntimeError(
-                        "min-label propagation did not converge in 500 rounds"
-                        f" ({changed} labels still moving) — component diameter"
-                        " beyond any plausible near-dup cluster; refusing to"
-                        " emit unconverged clusters"
-                    )
-            # the final labels frame is already checkpoint-pinned; the
-            # caller's corpus-sized joins run at the session's width
-            out = labels
-        finally:
-            if edges is not None:
-                edges.unpersist()
-    return out
+        # the final labels frame is already checkpoint-pinned; the
+        # caller's corpus-sized joins run at the session's width
+        return labels
 
 
 @query(
@@ -939,10 +911,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection."""
     d = load_table(spark, sf_dir, "documents")
     # ONE fingerprint scan shared by keeper selection and final mapping
-    fp_map = d.select(
-        F.md5(F.col("text").cast("binary")).alias("fp"), "doc_id"
-    ).persist()
-    try:
+    with scoped_cache() as persist:
+        fp_map = persist(d.select(
+            F.md5(F.col("text").cast("binary")).alias("fp"), "doc_id"
+        ))
         keeper_map = fp_map.groupBy("fp").agg(
             F.min("doc_id").alias("keeper")
         )
@@ -983,7 +955,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # doc → keeper (exact-copy collapse) → propagated cluster label;
         # docs whose keeper never touched an edge keep the keeper's id
         cluster = F.coalesce(F.col("lbl"), F.col("keeper"))
-        out = (
+        return (
             fp_map.join(keeper_map, "fp")
             .join(
                 labels.withColumnRenamed("doc_id", "keeper"), "keeper", "left"
@@ -995,9 +967,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        fp_map.unpersist()
-    return out
 
 
 @query(
@@ -1045,13 +1014,13 @@ def pipeline_dedup_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the fingerprinted projection: ~50 B/doc, but it feeds BOTH
     # the keeper aggregate and the join branch — without it the whole
     # normalize+md5 scan (the expensive regex pass) runs once per branch
-    n = d.select(
-        "doc_id", "lang", "n_chars", F.md5(norm.cast("binary")).alias("fp")
-    ).persist()
-    try:
+    with scoped_cache() as persist:
+        n = persist(d.select(
+            "doc_id", "lang", "n_chars", F.md5(norm.cast("binary")).alias("fp")
+        ))
         keepers = n.groupBy("fp").agg(F.min("doc_id").alias("keeper"))
         joined = n.join(keepers, "fp")
-        out = joined.groupBy("lang").agg(
+        return joined.groupBy("lang").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.countDistinct("fp").alias("n_unique"),
             F.sum(
@@ -1064,9 +1033,6 @@ def pipeline_dedup_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("dup_ratio"),
         ).localCheckpoint(eager=True)
-    finally:
-        n.unpersist()
-    return out
 
 
 def _keeper_token_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1215,9 +1181,8 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressible in both engines so the oracle checks values exactly.
     """
     tf = _doc_token_frame(spark, sf_dir)
-    gs = tf.select("doc_id", gram6_hashes().alias("gs")).persist()
-    train = None
-    try:
+    with scoped_cache() as persist:
+        gs = persist(tf.select("doc_id", gram6_hashes().alias("gs")))
         bench = (
             gs.filter(F.col("doc_id") % 19 == 0)
             .select(F.explode("gs").alias("gram"))
@@ -1240,10 +1205,8 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("df") > GRAM_DF_CAP)
             .select("gram")
         )
-        train = (
-            train0.join(gated_broadcast(hot), "gram", "left_anti")
-            .persist()  # read by both the counts aggregate and the bench join
-        )
+        # read by both the counts aggregate and the bench join
+        train = persist(train0.join(gated_broadcast(hot), "gram", "left_anti"))
         # denominator from a combiner aggregate joined onto the (small,
         # contaminated-docs-only) output — per-doc rows cross the
         # exchange, not per-gram rows; the bench side is eval-suite-sized
@@ -1251,7 +1214,7 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts = train.groupBy("doc_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_grams")
         )
-        out = (
+        return (
             train.join(bench, "gram")
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_shared"))
@@ -1264,11 +1227,6 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        if train is not None:
-            train.unpersist()
-        gs.unpersist()
-    return out
 
 
 @query(
@@ -1389,11 +1347,10 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     uniq = d.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     toks = F.split(F.col("text"), " ")
-    sh = uniq.select(
-        "doc_id", F.explode(shingles(toks)).alias("shingle")
-    ).persist()
-    sig = None
-    try:
+    with scoped_cache() as persist:
+        sh = persist(uniq.select(
+            "doc_id", F.explode(shingles(toks)).alias("shingle")
+        ))
         hv = sh.select(
             "doc_id",
             "shingle",
@@ -1410,10 +1367,10 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i in range(MHX_H)
             ],
         )
-        sig = hv.groupBy("doc_id").agg(
+        sig = persist(hv.groupBy("doc_id").agg(
             *[F.min(f"h{i}").alias(f"s{i}") for i in range(MHX_H)],
             F.count(F.lit(1)).alias("n_sh"),
-        ).persist()
+        ))
         slots = sig.select(
             "doc_id",
             F.posexplode(F.array(*[F.col(f"s{i}") for i in range(MHX_H)])).alias(
@@ -1459,7 +1416,7 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("da", "db")
             .agg(F.count(F.lit(1)).alias("it"))
         )
-        out = (
+        return (
             scored.join(inter, ["da", "db"], "left")
             .select(
                 F.col("da").alias("doc_a"),
@@ -1473,11 +1430,6 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        sh.unpersist()
-        if sig is not None:
-            sig.unpersist()
-    return out
 
 
 MHX_EVAL_TAU = 0.5

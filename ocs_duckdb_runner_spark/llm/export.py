@@ -15,11 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ocs_duckdb_runner_spark.registry import (
-    checkpoint_release,
-    load_table,
-    query,
-)
+from ocs_duckdb_runner_spark.registry import load_table, query
+from ocs_duckdb_runner_spark.session import scoped_cache
 
 # 16 shards from the first md5 hex char of the doc key. Uniform by
 # construction; at a real export you'd take 3-4 chars (4096-65536 shards)
@@ -389,65 +386,63 @@ def pipeline_pretrain_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocs_duckdb_runner_spark.registry import spread
 
     d = load_table(spark, sf_dir, "documents")
-    base = (
-        spread(
-            d.select(
-                "doc_id",
-                "source",
-                F.md5(F.col("text").cast("binary")).alias("fp"),
-                F.split(F.col("text"), " ").alias("toks"),
+    with scoped_cache() as persist:
+        base = persist(
+            spread(
+                d.select(
+                    "doc_id",
+                    "source",
+                    F.md5(F.col("text").cast("binary")).alias("fp"),
+                    F.split(F.col("text"), " ").alias("toks"),
+                )
             )
+            .withColumn("n_tok", F.size("toks").cast("long"))
+            .withColumn("n_dis", F.size(F.array_distinct("toks")).cast("long"))
         )
-        .withColumn("n_tok", F.size("toks").cast("long"))
-        .withColumn("n_dis", F.size(F.array_distinct("toks")).cast("long"))
-        .persist()
-    )
-    train = base.filter(
-        (F.col("doc_id") % 19 != 0)
-        & (F.col("n_tok") >= 20)
-        & ((F.col("n_tok") - F.col("n_dis")) / F.col("n_tok") <= 0.92)
-    )
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    kept = (
-        train.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .persist()
-    )
-    from ocs_duckdb_runner_spark.llm.dedup import gram6_hashes
+        train = base.filter(
+            (F.col("doc_id") % 19 != 0)
+            & (F.col("n_tok") >= 20)
+            & ((F.col("n_tok") - F.col("n_dis")) / F.col("n_tok") <= 0.92)
+        )
+        w = Window.partitionBy("fp").orderBy("doc_id")
+        kept = persist(
+            train.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)
+        )
+        from ocs_duckdb_runner_spark.llm.dedup import gram6_hashes
 
-    bench = (
-        base.filter(F.col("doc_id") % 19 == 0)
-        .select(F.explode(gram6_hashes()).alias("g"))
-        .distinct()
-    )
-    kg = kept.select("doc_id", F.explode(gram6_hashes()).alias("g"))
-    contaminated = kg.join(bench, "g").select("doc_id").distinct()
-    clean = kept.join(contaminated, "doc_id", "left_anti")
-    src_num = F.substring(F.col("source"), 4, 10).cast("int")
-    frac = F.when(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4) < "8000", 1
-    ).otherwise(0)
-    n_copies = (
-        F.when(src_num % 3 == 0, F.lit(3))
-        .when(src_num % 3 == 1, F.lit(2))
-        .otherwise(F.lit(1) + frac)
-    )
-    out = (
-        clean.select(
-            "doc_id",
-            "n_tok",
-            _shard_col().alias("shard"),
-            n_copies.alias("n_copies"),
+        bench = (
+            base.filter(F.col("doc_id") % 19 == 0)
+            .select(F.explode(gram6_hashes()).alias("g"))
+            .distinct()
         )
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_copies").alias("n_instances"),
-            F.sum(F.col("n_tok") * F.col("n_copies")).alias("n_tokens"),
+        kg = kept.select("doc_id", F.explode(gram6_hashes()).alias("g"))
+        contaminated = kg.join(bench, "g").select("doc_id").distinct()
+        clean = kept.join(contaminated, "doc_id", "left_anti")
+        src_num = F.substring(F.col("source"), 4, 10).cast("int")
+        frac = F.when(
+            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4) < "8000", 1
+        ).otherwise(0)
+        n_copies = (
+            F.when(src_num % 3 == 0, F.lit(3))
+            .when(src_num % 3 == 1, F.lit(2))
+            .otherwise(F.lit(1) + frac)
         )
-        .orderBy("shard")
-    )
-    return checkpoint_release(out, kept, base)
+        out = (
+            clean.select(
+                "doc_id",
+                "n_tok",
+                _shard_col().alias("shard"),
+                n_copies.alias("n_copies"),
+            )
+            .groupBy("shard")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_copies").alias("n_instances"),
+                F.sum(F.col("n_tok") * F.col("n_copies")).alias("n_tokens"),
+            )
+            .orderBy("shard")
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @query(

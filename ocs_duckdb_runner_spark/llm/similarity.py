@@ -25,11 +25,11 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocs_duckdb_runner_spark.registry import (
-    checkpoint_release,
     load_table,
     query,
     release_local_checkpoint,
 )
+from ocs_duckdb_runner_spark.session import scoped_cache
 
 DIM = 64
 # SRP-LSH plane count SCALES WITH CORPUS SIZE (r6 verdict #1): a fixed
@@ -561,23 +561,24 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is fixed (2 here), the production pattern for distributed Lloyd.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", fp_vec(F.col("embedding")).alias("v")).persist()
-    # pin the cache NOW: the centroid broadcast-exchange jobs launch
-    # concurrently with the main scan and race-recompute a lazily-
-    # persisted vecs (the r5 bench regression pattern — see graph.py)
-    vecs.count()
-    c0 = vecs.filter(F.col("vec_id") < _KMEANS_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("c")
-    )
-    a1 = _kmeans_assign(vecs, c0)
-    c1 = _kmeans_recompute(a1)
-    a2 = _kmeans_assign(vecs, c1)
-    out = a2.select(
-        "vec_id",
-        F.col("cid").cast("long").alias("cluster"),
-        F.col("d2").alias("d2_fp"),
-    )
-    return checkpoint_release(out, vecs)
+    with scoped_cache() as persist:
+        vecs = persist(emb.select("vec_id", fp_vec(F.col("embedding")).alias("v")))
+        # pin the cache NOW: the centroid broadcast-exchange jobs launch
+        # concurrently with the main scan and race-recompute a lazily-
+        # persisted vecs (the r5 bench regression pattern — see graph.py)
+        vecs.count()
+        c0 = vecs.filter(F.col("vec_id") < _KMEANS_K).select(
+            F.col("vec_id").alias("cid"), F.col("v").alias("c")
+        )
+        a1 = _kmeans_assign(vecs, c0)
+        c1 = _kmeans_recompute(a1)
+        a2 = _kmeans_assign(vecs, c1)
+        out = a2.select(
+            "vec_id",
+            F.col("cid").cast("long").alias("cluster"),
+            F.col("d2").alias("d2_fp"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -891,13 +892,15 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     the K-row centroid→cell frame broadcast for the per-cell argmin, one
     hash-partitioned self-join on the cluster id, one key-only min
     aggregate, one left join back."""
-    out, assign = _semantic_build(spark, sf_dir)
-    return checkpoint_release(out, assign)
+    with scoped_cache() as persist:
+        return _semantic_build(spark, sf_dir, persist).localCheckpoint(
+            eager=True
+        )
 
 
-def _semantic_build(spark: SparkSession, sf_dir: str):
-    """Pre-checkpoint SemDeDup plan + the persisted assignment frame (the
-    query checkpoints before unpersisting; plan tests inspect this form)."""
+def _semantic_build(spark: SparkSession, sf_dir: str, persist) -> DataFrame:
+    """Pre-checkpoint SemDeDup plan, its assignment frame persisted
+    through the caller's scope (plan tests inspect this form)."""
     import math
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -937,12 +940,11 @@ def _semantic_build(spark: SparkSession, sf_dir: str):
         F.struct(_d2(F.col("v"), F.col("c")).alias("d2"),
                  F.col("cid").alias("cid"))
     ).alias("m")
-    assign = (
+    assign = persist(
         vcell.join(F.broadcast(cent_cell), "cell")
         .groupBy("vec_id", "v")
         .agg(fine_pick)
         .select("vec_id", "v", F.col("m.cid").alias("cluster"))
-        .persist()
     )
     a = assign.toDF("a_id", "a_v", "cluster")
     b = assign.toDF("vec_id", "b_v", "cluster")
@@ -953,13 +955,12 @@ def _semantic_build(spark: SparkSession, sf_dir: str):
         .groupBy("vec_id")
         .agg(F.min("a_id").alias("dup_of"))
     )
-    out = assign.join(dups, "vec_id", "left").select(
+    return assign.join(dups, "vec_id", "left").select(
         "vec_id",
         F.col("cluster").cast("long").alias("cluster"),
         "dup_of",
         F.col("dup_of").isNotNull().alias("is_dup"),
     )
-    return out, assign
 
 
 # ---- IVF-PQ: coarse cells + PQ asymmetric-distance scan composed ----
@@ -1033,65 +1034,66 @@ def embed_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    vecs = e.select("vec_id", fp_vec(F.col("embedding")).alias("v")).persist()
-    book = vecs.filter(F.col("vec_id") < PQ_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("c")
-    )
-    coarse = vecs.filter(F.col("vec_id").isin(*CENTROID_IDS)).select(
-        F.col("vec_id").alias("kid"), F.col("v").alias("k")
-    )
-
-    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("kid"))
-    cells = (
-        vecs.crossJoin(F.broadcast(coarse))
-        .withColumn("ccos", cosine(F.col("v"), F.col("k")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("kid").alias("cell"))
-    )
-
-    def sub_d2(s: int):
-        va = F.slice(F.col("v"), s * _PQ_SUB + 1, _PQ_SUB)
-        ca = F.slice(F.col("c"), s * _PQ_SUB + 1, _PQ_SUB)
-        return F.aggregate(
-            F.zip_with(va, ca, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
+    with scoped_cache() as persist:
+        vecs = persist(e.select("vec_id", fp_vec(F.col("embedding")).alias("v")))
+        book = vecs.filter(F.col("vec_id") < PQ_K).select(
+            F.col("vec_id").alias("cid"), F.col("v").alias("c")
+        )
+        coarse = vecs.filter(F.col("vec_id").isin(*CENTROID_IDS)).select(
+            F.col("vec_id").alias("kid"), F.col("v").alias("k")
         )
 
-    pairs = (
-        vecs.crossJoin(F.broadcast(book))
-        .select(
-            "vec_id",
-            "cid",
-            F.posexplode(F.array(*[sub_d2(s) for s in range(PQ_M)]))
-            .alias("s", "d2"),
+        w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("kid"))
+        cells = (
+            vecs.crossJoin(F.broadcast(coarse))
+            .withColumn("ccos", cosine(F.col("v"), F.col("k")))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("vec_id", F.col("kid").alias("cell"))
         )
-    )
-    codes = pairs.groupBy("vec_id", "s").agg(
-        F.min(F.struct(F.col("d2").alias("d"), F.col("cid").alias("cid")))[
-            "cid"
-        ].alias("cid")
-    )
-    lut = pairs.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        "cid", "s", F.col("d2").alias("qd2")
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["cid", "s"])
-        .groupBy("vec_id")
-        .agg(F.sum("qd2").cast("long").alias("adc_fp"))
-    )
-    qcell = cells.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("cell").alias("qcell")
-    )
-    out = (
-        adc.join(cells, "vec_id")
-        .join(F.broadcast(qcell), F.col("cell") == F.col("qcell"))
-        .select("vec_id", F.col("cell").cast("long").alias("cell"), "adc_fp")
-        .orderBy(F.col("adc_fp"), F.col("vec_id"))
-        .limit(IVFPQ_TOPK)
-    )
-    return checkpoint_release(out, vecs)
+
+        def sub_d2(s: int):
+            va = F.slice(F.col("v"), s * _PQ_SUB + 1, _PQ_SUB)
+            ca = F.slice(F.col("c"), s * _PQ_SUB + 1, _PQ_SUB)
+            return F.aggregate(
+                F.zip_with(va, ca, lambda x, y: (x - y) * (x - y)),
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + x,
+            )
+
+        pairs = (
+            vecs.crossJoin(F.broadcast(book))
+            .select(
+                "vec_id",
+                "cid",
+                F.posexplode(F.array(*[sub_d2(s) for s in range(PQ_M)]))
+                .alias("s", "d2"),
+            )
+        )
+        codes = pairs.groupBy("vec_id", "s").agg(
+            F.min(F.struct(F.col("d2").alias("d"), F.col("cid").alias("cid")))[
+                "cid"
+            ].alias("cid")
+        )
+        lut = pairs.filter(F.col("vec_id") == QUERY_VEC_ID).select(
+            "cid", "s", F.col("d2").alias("qd2")
+        )
+        adc = (
+            codes.join(F.broadcast(lut), ["cid", "s"])
+            .groupBy("vec_id")
+            .agg(F.sum("qd2").cast("long").alias("adc_fp"))
+        )
+        qcell = cells.filter(F.col("vec_id") == QUERY_VEC_ID).select(
+            F.col("cell").alias("qcell")
+        )
+        out = (
+            adc.join(cells, "vec_id")
+            .join(F.broadcast(qcell), F.col("cell") == F.col("qcell"))
+            .select("vec_id", F.col("cell").cast("long").alias("cell"), "adc_fp")
+            .orderBy(F.col("adc_fp"), F.col("vec_id"))
+            .limit(IVFPQ_TOPK)
+        )
+        return out.localCheckpoint(eager=True)
 
 
 # ---- reciprocal-rank fusion of two retrieval rankings ----
@@ -1247,20 +1249,21 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     np_ = corpus_planes(e)
     fp = e.select("vec_id", fp_vec(F.col("embedding")).alias("ev"))
-    b = fp.withColumn("bucket", lsh_bucket(F.col("ev"), np_)).persist()
-    a, x = b.toDF("src", "aev", "abucket"), b.toDF("dst", "xev", "xbucket")
-    pairs = a.join(
-        x, (F.col("abucket") == F.col("xbucket")) & (F.col("src") != F.col("dst"))
-    ).select(
-        "src", "dst", cosine(F.col("aev"), F.col("xev")).alias("cos_sim")
-    )
-    w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), "dst")
-    out = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter((F.col("rk") <= KNN_K) & (F.col("src") % 10 == 0))
-        .select("src", "dst", F.col("rk").cast("long").alias("rk"))
-    )
-    return checkpoint_release(out, b)
+    with scoped_cache() as persist:
+        b = persist(fp.withColumn("bucket", lsh_bucket(F.col("ev"), np_)))
+        a, x = b.toDF("src", "aev", "abucket"), b.toDF("dst", "xev", "xbucket")
+        pairs = a.join(
+            x, (F.col("abucket") == F.col("xbucket")) & (F.col("src") != F.col("dst"))
+        ).select(
+            "src", "dst", cosine(F.col("aev"), F.col("xev")).alias("cos_sim")
+        )
+        w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), "dst")
+        out = (
+            pairs.withColumn("rk", F.row_number().over(w))
+            .filter((F.col("rk") <= KNN_K) & (F.col("src") % 10 == 0))
+            .select("src", "dst", F.col("rk").cast("long").alias("rk"))
+        )
+        return out.localCheckpoint(eager=True)
 
 
 # ---- index-quality evaluation: LSH-ANN recall@k vs brute force ----
@@ -1320,48 +1323,48 @@ def eval_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     np_ = corpus_planes(e)
     fp = e.select("vec_id", fp_vec(F.col("embedding")).alias("ev"))
-    b = fp.withColumn("bucket", lsh_bucket(F.col("ev"), np_)).persist()
-    q = b.filter(F.col("vec_id") < RECALL_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("ev").alias("qv"),
-        F.col("bucket").alias("qbucket"),
-    )
-    scored = (
-        b.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id", "bucket", "qbucket",
-            cosine(F.col("ev"), F.col("qv")).alias("cs"),
+    with scoped_cache() as persist:
+        b = persist(fp.withColumn("bucket", lsh_bucket(F.col("ev"), np_)))
+        q = b.filter(F.col("vec_id") < RECALL_QUERIES).select(
+            F.col("vec_id").alias("qid"),
+            F.col("ev").alias("qv"),
+            F.col("bucket").alias("qbucket"),
         )
-        .persist()
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cs").desc(), "vec_id")
-    exact = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= RECALL_K)
-        .select("qid", "vec_id")
-    )
-    ann = (
-        scored.filter(F.col("bucket") == F.col("qbucket"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= RECALL_K)
-        .select(F.col("qid").alias("aqid"), F.col("vec_id").alias("avec"))
-    )
-    out = (
-        exact.join(
-            ann,
-            (F.col("qid") == F.col("aqid"))
-            & (F.col("vec_id") == F.col("avec")),
-            "left",
+        scored = persist(
+            b.crossJoin(F.broadcast(q))
+            .filter(F.col("vec_id") != F.col("qid"))
+            .select(
+                "qid", "vec_id", "bucket", "qbucket",
+                cosine(F.col("ev"), F.col("qv")).alias("cs"),
+            )
         )
-        .groupBy("qid")
-        .agg(
-            F.count("avec").cast("long").alias("n_hit"),
-            F.round(F.count("avec") / RECALL_K, 6)
-            .alias(f"recall_at_{RECALL_K}"),
+        w = Window.partitionBy("qid").orderBy(F.col("cs").desc(), "vec_id")
+        exact = (
+            scored.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= RECALL_K)
+            .select("qid", "vec_id")
         )
-    )
-    return checkpoint_release(out, b, scored)
+        ann = (
+            scored.filter(F.col("bucket") == F.col("qbucket"))
+            .withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= RECALL_K)
+            .select(F.col("qid").alias("aqid"), F.col("vec_id").alias("avec"))
+        )
+        out = (
+            exact.join(
+                ann,
+                (F.col("qid") == F.col("aqid"))
+                & (F.col("vec_id") == F.col("avec")),
+                "left",
+            )
+            .groupBy("qid")
+            .agg(
+                F.count("avec").cast("long").alias("n_hit"),
+                F.round(F.count("avec") / RECALL_K, 6)
+                .alias(f"recall_at_{RECALL_K}"),
+            )
+        )
+        return out.localCheckpoint(eager=True)
 
 
 # ---- embedding-population drift monitoring ----
@@ -2038,39 +2041,40 @@ def sim_reciprocal_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~np aggregate folds per row and feed BOTH sides of the self-join —
     # without the pin Catalyst recomputes them per join input (the
     # sim_knn_graph lesson; r6 probe wall 8.66 s was dominated by this)
-    b = fp.select(
-        "vec_id", "ev", lsh_bucket(F.col("ev"), np_).alias("bucket")
-    ).persist()
-    a = b.toDF("src", "a_ev", "bucket")
-    x = b.toDF("dst", "x_ev", "bucket")
-    pairs = (
-        a.join(x, "bucket")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            "src", "dst", cosine(F.col("a_ev"), F.col("x_ev")).alias("cos_sim")
+    with scoped_cache() as persist:
+        b = persist(fp.select(
+            "vec_id", "ev", lsh_bucket(F.col("ev"), np_).alias("bucket")
+        ))
+        a = b.toDF("src", "a_ev", "bucket")
+        x = b.toDF("dst", "x_ev", "bucket")
+        pairs = (
+            a.join(x, "bucket")
+            .filter(F.col("src") != F.col("dst"))
+            .select(
+                "src", "dst", cosine(F.col("a_ev"), F.col("x_ev")).alias("cos_sim")
+            )
         )
-    )
-    w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), "dst")
-    nn1 = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("src", "dst", "cos_sim")
-    )
-    rev = nn1.toDF("r_src", "r_dst", "r_cos")
-    out = (
-        nn1.join(
-            rev,
-            (rev["r_src"] == nn1["dst"]) & (rev["r_dst"] == nn1["src"]),
+        w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), "dst")
+        nn1 = (
+            pairs.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") == 1)
+            .select("src", "dst", "cos_sim")
         )
-        .filter(F.col("src") < F.col("dst"))
-        .select(
-            F.col("src").alias("vec_a"),
-            F.col("dst").alias("vec_b"),
-            F.round("cos_sim", 9).alias("cos_sim"),
+        rev = nn1.toDF("r_src", "r_dst", "r_cos")
+        out = (
+            nn1.join(
+                rev,
+                (rev["r_src"] == nn1["dst"]) & (rev["r_dst"] == nn1["src"]),
+            )
+            .filter(F.col("src") < F.col("dst"))
+            .select(
+                F.col("src").alias("vec_a"),
+                F.col("dst").alias("vec_b"),
+                F.round("cos_sim", 9).alias("cos_sim"),
+            )
+            .orderBy("vec_a")
         )
-        .orderBy("vec_a")
-    )
-    return checkpoint_release(out, b)
+        return out.localCheckpoint(eager=True)
 
 
 # ---- hybrid retrieval: score-level BM25 + cosine fusion ----
@@ -2159,25 +2163,22 @@ def sim_hybrid_bm25_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the cosine ran 2x (measured 1.5x warm wall at the 100x probe,
     interleaved A/B in SCALING.md). Result is 15 rows, eagerly
     checkpointed so both caches release before return (tests pin the
-    pre-checkpoint plan via _hybrid_plan). The unpersists sit in a
-    finally block (r11 ADVICE): an exception during the eager
+    pre-checkpoint plan via _hybrid_plan). The caches live in a
+    scoped_cache (r11 ADVICE): an exception during the eager
     materialization must not leak two persisted frames into the shared
     long-lived session."""
-    out, per_doc, both = _hybrid_plan(spark, sf_dir)
-    return checkpoint_release(out, both, per_doc)
+    with scoped_cache() as persist:
+        return _hybrid_plan(spark, sf_dir, persist).localCheckpoint(eager=True)
 
 
-def _hybrid_plan(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """sim_hybrid_bm25_cosine's live plan, pre-checkpoint: returns
-    (top-k frame, persisted tf frame, persisted scored frame) so the
-    public query can release the caches and the plan test can pin the
-    physical shape the checkpoint would otherwise hide."""
+def _hybrid_plan(spark: SparkSession, sf_dir: str, persist) -> DataFrame:
+    """sim_hybrid_bm25_cosine's live plan, pre-checkpoint, its tf and
+    scored frames persisted through the caller's scope, so the plan test
+    can pin the physical shape the checkpoint would otherwise hide."""
     d = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     toks = F.split(F.col("text"), " ")
-    per_doc = d.select(
+    per_doc = persist(d.select(
         "doc_id",
         F.size(toks).cast("long").alias("dl"),
         *[
@@ -2186,7 +2187,7 @@ def _hybrid_plan(
             .alias(f"tf{i}")
             for i, t in enumerate(HYBRID_TERMS)
         ],
-    ).persist()
+    ))
     stats = per_doc.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("dl").cast("long").alias("sumdl"),
@@ -2215,7 +2216,7 @@ def _hybrid_plan(
     qv = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         fp_vec(F.col("embedding")).alias("qv")
     )
-    both = (
+    both = persist(
         per_doc.crossJoin(F.broadcast(stats))
         .select("doc_id", "dl", *[f"tf{i}" for i in range(len(HYBRID_TERMS))],
                 bm25.alias("bm25"))
@@ -2228,7 +2229,6 @@ def _hybrid_plan(
         )
         .crossJoin(F.broadcast(qv))
         .select("doc_id", "bm25", cosine(F.col("ev"), F.col("qv")).alias("cos_sim"))
-        .persist()
     )
     ext = both.agg(
         F.min("bm25").alias("bmin"),
@@ -2241,7 +2241,7 @@ def _hybrid_plan(
     ) + 0.5 * (
         (F.col("cos_sim") - F.col("cmin")) / (F.col("cmax") - F.col("cmin"))
     )
-    out = (
+    return (
         both.crossJoin(F.broadcast(ext))
         .orderBy(hybrid.desc(), "doc_id")
         .limit(HYBRID_TOPK)
@@ -2252,7 +2252,6 @@ def _hybrid_plan(
             F.round(hybrid, 9).alias("hybrid"),
         )
     )
-    return out, per_doc, both
 
 
 # ---- binary quantization: 1-bit sign pack + Hamming prefilter ----

@@ -16,12 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ocs_duckdb_runner_spark.registry import (
-    checkpoint_release,
-    load_table,
-    query,
-    spread,
-)
+from ocs_duckdb_runner_spark.registry import load_table, query, spread
+from ocs_duckdb_runner_spark.session import scoped_cache
 
 # Deterministic keyword sets for the n-gram/stopword language-ID heuristic.
 # The fixture vocabulary is an engine-word soup; these play the role of the
@@ -532,48 +528,49 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     so values hash-match the DuckDB oracle bit-for-bit.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks_df = docs.select(
-        "doc_id", F.split(F.col("text"), " ").alias("toks")
-    ).persist()
-    base = toks_df.select(
-        "doc_id",
-        F.size("toks").cast("long").alias("n_tokens"),
-        F.size(F.array_distinct("toks")).cast("long").alias("n_distinct"),
-    )
-    bigrams = toks_df.filter(F.size("toks") >= 2).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> concat(element_at(toks, i), ' ',"
-                "             element_at(toks, i + 1)))"
-            )
-        ).alias("bigram"),
-    )
-    bgs = (
-        bigrams.groupBy("doc_id", "bigram")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            F.max("c").alias("top_bigram_n"),
-            F.sum("c").alias("n_bigrams"),
-        )
-    )
-    dup_frac = (F.col("n_tokens") - F.col("n_distinct")) / F.col("n_tokens")
-    top_frac = F.coalesce(F.col("top_bigram_n"), F.lit(0)) / F.greatest(
-        F.coalesce(F.col("n_bigrams"), F.lit(0)), F.lit(1)
-    )
-    out = (
-        base.join(bgs, "doc_id", "left")
-        .select(
+    with scoped_cache() as persist:
+        toks_df = persist(docs.select(
+            "doc_id", F.split(F.col("text"), " ").alias("toks")
+        ))
+        base = toks_df.select(
             "doc_id",
-            "n_tokens",
-            dup_frac.alias("dup_token_frac"),
-            top_frac.alias("top_bigram_frac"),
-            ((dup_frac > 0.85) | (top_frac > 0.05)).alias("is_repetitive"),
+            F.size("toks").cast("long").alias("n_tokens"),
+            F.size(F.array_distinct("toks")).cast("long").alias("n_distinct"),
         )
-    )
-    return checkpoint_release(out, toks_df)
+        bigrams = toks_df.filter(F.size("toks") >= 2).select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(toks) - 1),"
+                    " i -> concat(element_at(toks, i), ' ',"
+                    "             element_at(toks, i + 1)))"
+                )
+            ).alias("bigram"),
+        )
+        bgs = (
+            bigrams.groupBy("doc_id", "bigram")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .groupBy("doc_id")
+            .agg(
+                F.max("c").alias("top_bigram_n"),
+                F.sum("c").alias("n_bigrams"),
+            )
+        )
+        dup_frac = (F.col("n_tokens") - F.col("n_distinct")) / F.col("n_tokens")
+        top_frac = F.coalesce(F.col("top_bigram_n"), F.lit(0)) / F.greatest(
+            F.coalesce(F.col("n_bigrams"), F.lit(0)), F.lit(1)
+        )
+        out = (
+            base.join(bgs, "doc_id", "left")
+            .select(
+                "doc_id",
+                "n_tokens",
+                dup_frac.alias("dup_token_frac"),
+                top_frac.alias("top_bigram_frac"),
+                ((dup_frac > 0.85) | (top_frac > 0.05)).alias("is_repetitive"),
+            )
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -679,30 +676,31 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", _tokens().alias("toks"))
     from ocs_duckdb_runner_spark.registry import spread
 
-    bg = spread(d).select(
-        "doc_id",
-        F.explode(
-            F.zip_with(
-                F.slice(F.col("toks"), 1, F.size("toks") - 1),
-                F.slice(F.col("toks"), 2, F.size("toks") - 1),
-                lambda a, b: F.struct(a.alias("w1"), F.concat_ws(" ", a, b).alias("b")),
+    with scoped_cache() as persist:
+        bg = persist(spread(d).select(
+            "doc_id",
+            F.explode(
+                F.zip_with(
+                    F.slice(F.col("toks"), 1, F.size("toks") - 1),
+                    F.slice(F.col("toks"), 2, F.size("toks") - 1),
+                    lambda a, b: F.struct(a.alias("w1"), F.concat_ws(" ", a, b).alias("b")),
+                )
+            ).alias("g"),
+        ).select("doc_id", "g.w1", "g.b"))
+        cb = bg.groupBy("b").agg(F.count(F.lit(1)).alias("c_bg"))
+        cw = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c_w1"))
+        out = (
+            bg.join(cb, "b")
+            .join(cw, "w1")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_bigrams"),
+                F.expr(
+                    "cast(sum(c_bg * 1000000 div c_w1) div count(*) as bigint)"
+                ).alias("lm_micro_avg"),
             )
-        ).alias("g"),
-    ).select("doc_id", "g.w1", "g.b").persist()
-    cb = bg.groupBy("b").agg(F.count(F.lit(1)).alias("c_bg"))
-    cw = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c_w1"))
-    out = (
-        bg.join(cb, "b")
-        .join(cw, "w1")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.expr(
-                "cast(sum(c_bg * 1000000 div c_w1) div count(*) as bigint)"
-            ).alias("lm_micro_avg"),
         )
-    )
-    return checkpoint_release(out, bg)
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -983,38 +981,39 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p")
     ).select("p.a", "p.b")
-    big = big.persist()
-    uni = big.groupBy(F.col("a").alias("tok")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    tot = big.agg(F.count(F.lit(1)).alias("n_big"))
-    pair = (
-        big.groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= PMI_MIN_SUPPORT)
-    )
-    ua = uni.toDF("ua_tok", "n_a")
-    ub = uni.toDF("ub_tok", "n_b")
-    out = (
-        pair.join(F.broadcast(ua), pair.a == ua.ua_tok)
-        .join(F.broadcast(ub), pair.b == ub.ub_tok)
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "a",
-            "b",
-            "n_ab",
-            F.round(
-                F.log(
-                    F.col("n_ab").cast("double") * F.col("n_big")
-                    / (F.col("n_a") * F.col("n_b").cast("double"))
-                ),
-                9,
-            ).alias("pmi"),
+    with scoped_cache() as persist:
+        big = persist(big)
+        uni = big.groupBy(F.col("a").alias("tok")).agg(
+            F.count(F.lit(1)).alias("n")
         )
-        .orderBy(F.col("pmi").desc(), "a", "b")
-        .limit(PMI_TOPK)
-    )
-    return checkpoint_release(out, big)
+        tot = big.agg(F.count(F.lit(1)).alias("n_big"))
+        pair = (
+            big.groupBy("a", "b")
+            .agg(F.count(F.lit(1)).alias("n_ab"))
+            .filter(F.col("n_ab") >= PMI_MIN_SUPPORT)
+        )
+        ua = uni.toDF("ua_tok", "n_a")
+        ub = uni.toDF("ub_tok", "n_b")
+        out = (
+            pair.join(F.broadcast(ua), pair.a == ua.ua_tok)
+            .join(F.broadcast(ub), pair.b == ub.ub_tok)
+            .crossJoin(F.broadcast(tot))
+            .select(
+                "a",
+                "b",
+                "n_ab",
+                F.round(
+                    F.log(
+                        F.col("n_ab").cast("double") * F.col("n_big")
+                        / (F.col("n_a") * F.col("n_b").cast("double"))
+                    ),
+                    9,
+                ).alias("pmi"),
+            )
+            .orderBy(F.col("pmi").desc(), "a", "b")
+            .limit(PMI_TOPK)
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -1250,75 +1249,75 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    w = wf.select(
-        F.concat(
-            F.lit(" "),
-            F.trim(F.regexp_replace(F.col("tok"), "(.)", "$1 ")),
-            F.lit(" "),
-        ).alias("seq"),
-        "cnt",
-    ).persist()
-    out = None
-    for r in range(1, _BPE_MERGE_ROUNDS + 1):
-        syms = F.split(F.trim(F.col("seq")), " ")
-        # size >= 2: Spark's sequence(1, 0) counts DOWN (yields [1, 0]),
-        # it is not empty like DuckDB's generate_series — 1-symbol words
-        # must not reach the pair expansion
-        pairs = (
-            w.select(syms.alias("syms"), "cnt")
-            .filter(F.size("syms") >= 2)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("syms") - 1),
-                        lambda i: F.struct(
-                            F.element_at(F.col("syms"), i).alias("a"),
-                            F.element_at(F.col("syms"), i + 1).alias("b"),
-                        ),
-                    )
-                ).alias("p"),
-                "cnt",
-            )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("cnt").alias("n"))
-        )
-        best = (
-            pairs.orderBy(F.col("n").desc(), F.col("a").asc(), F.col("b").asc())
-            .limit(1)
-            .localCheckpoint(eager=True)
-        )
-        prev = w
-        w = (
-            prev.crossJoin(F.broadcast(best))
-            .select(
-                F.replace(
-                    F.col("seq"),
-                    F.concat(F.lit(" "), F.col("a"), F.lit(" "), F.col("b"), F.lit(" ")),
-                    F.concat(F.lit(" "), F.col("a"), F.col("b"), F.lit(" ")),
-                ).alias("seq"),
-                "cnt",
-            )
-            .persist()
-        )
-        n_after = w.agg(
-            F.sum(
-                (F.size(F.split(F.trim(F.col("seq")), " ")) * F.col("cnt")).cast(
-                    "long"
+    with scoped_cache() as persist:
+        w = persist(wf.select(
+            F.concat(
+                F.lit(" "),
+                F.trim(F.regexp_replace(F.col("tok"), "(.)", "$1 ")),
+                F.lit(" "),
+            ).alias("seq"),
+            "cnt",
+        ))
+        out = None
+        for r in range(1, _BPE_MERGE_ROUNDS + 1):
+            syms = F.split(F.trim(F.col("seq")), " ")
+            # size >= 2: Spark's sequence(1, 0) counts DOWN (yields [1, 0]),
+            # it is not empty like DuckDB's generate_series — 1-symbol words
+            # must not reach the pair expansion
+            pairs = (
+                w.select(syms.alias("syms"), "cnt")
+                .filter(F.size("syms") >= 2)
+                .select(
+                    F.explode(
+                        F.transform(
+                            F.sequence(F.lit(1), F.size("syms") - 1),
+                            lambda i: F.struct(
+                                F.element_at(F.col("syms"), i).alias("a"),
+                                F.element_at(F.col("syms"), i + 1).alias("b"),
+                            ),
+                        )
+                    ).alias("p"),
+                    "cnt",
                 )
-            ).alias("n_symbols_after")
-        )
-        row = (
-            best.select(
-                F.lit(r).alias("merge_round"),
-                F.col("a").alias("sym_a"),
-                F.col("b").alias("sym_b"),
-                F.col("n").alias("pair_count"),
+                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+                .agg(F.sum("cnt").alias("n"))
             )
-            .crossJoin(n_after)
-        )
-        out = row if out is None else out.unionAll(row)
-        prev.unpersist()
-    return checkpoint_release(out.orderBy("merge_round"), w)
+            best = (
+                pairs.orderBy(F.col("n").desc(), F.col("a").asc(), F.col("b").asc())
+                .limit(1)
+                .localCheckpoint(eager=True)
+            )
+            prev = w
+            w = persist(
+                prev.crossJoin(F.broadcast(best))
+                .select(
+                    F.replace(
+                        F.col("seq"),
+                        F.concat(F.lit(" "), F.col("a"), F.lit(" "), F.col("b"), F.lit(" ")),
+                        F.concat(F.lit(" "), F.col("a"), F.col("b"), F.lit(" ")),
+                    ).alias("seq"),
+                    "cnt",
+                )
+            )
+            n_after = w.agg(
+                F.sum(
+                    (F.size(F.split(F.trim(F.col("seq")), " ")) * F.col("cnt")).cast(
+                        "long"
+                    )
+                ).alias("n_symbols_after")
+            )
+            row = (
+                best.select(
+                    F.lit(r).alias("merge_round"),
+                    F.col("a").alias("sym_a"),
+                    F.col("b").alias("sym_b"),
+                    F.col("n").alias("pair_count"),
+                )
+                .crossJoin(n_after)
+            )
+            out = row if out is None else out.unionAll(row)
+            prev.unpersist()
+        return out.orderBy("merge_round").localCheckpoint(eager=True)
 
 
 MATTR_W = 25  # MATTR window (tokens per full chunk)
@@ -1864,6 +1863,13 @@ def text_bigram_lm_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     — deliberately NOT force-broadcast (the hot-set lesson behind
     registry.gated_broadcast); scoring is one model join + one
     doc-keyed integer aggregate. Two passes over tokens: train, score."""
+    with scoped_cache() as persist:
+        return _kn_build(spark, sf_dir, persist).localCheckpoint(eager=True)
+
+
+def _kn_build(spark: SparkSession, sf_dir: str, persist) -> DataFrame:
+    """Pre-checkpoint Kneser–Ney plan, its type table persisted through
+    the caller's scope (plan tests inspect this form)."""
     d = load_table(spark, sf_dir, "documents")
     toks = _tokens()
     pairs = F.zip_with(
@@ -1885,10 +1891,8 @@ def text_bigram_lm_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the token stream), so caching it is the cheap side at any scale;
     # with the cache the corpus is scanned exactly twice — types build
     # and scoring join — the train/score intrinsic minimum.
-    types = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("c12"))
-        .persist()
+    types = persist(
+        bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("c12"))
     )
     ctx = types.groupBy("w1").agg(
         F.sum("c12").cast("long").alias("c1"),

@@ -22,11 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocs_duckdb_runner_spark.registry import (
-    checkpoint_release,
-    load_table,
-    query,
-)
+from ocs_duckdb_runner_spark.registry import load_table, query
+from ocs_duckdb_runner_spark.session import scoped_cache
 
 # shared SQL for the undirected co-purchase edge set (a < b, distinct):
 # join lineitem to itself on the order key — the bipartite
@@ -162,20 +159,22 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the simpler a<b<c formulation. Shuffles: one degree aggregate + the
     orientation joins + wedge/close joins, all on 8-byte vertex keys; the
     edge and oriented frames are persisted so each is built once."""
-    out, persisted = _triangle_build(spark, sf_dir)
-    return checkpoint_release(out, *persisted)
+    with scoped_cache() as persist:
+        return _triangle_build(spark, sf_dir, persist).localCheckpoint(
+            eager=True
+        )
 
 
-def _triangle_build(spark: SparkSession, sf_dir: str):
-    """Pre-checkpoint triangle plan + the persisted frames (the query
-    checkpoints before unpersisting; plan tests inspect this form)."""
+def _triangle_build(spark: SparkSession, sf_dir: str, persist) -> DataFrame:
+    """Pre-checkpoint triangle plan, its frames persisted through the
+    caller's scope (plan tests inspect this form)."""
     # repartition(8), NOT coalesce(8): the support cut leaves ~4k edges
     # spread over the full shuffle width, so downstream stages schedule
     # 32-64 near-empty tasks; narrowing fixes that, but coalesce would
     # propagate the narrow width UP into the expensive lineitem self-join
     # (measured 5.7s -> 19s). repartition pays one trivial 4k-row exchange
     # and keeps the build at full parallelism.
-    edges = _assoc_edges(spark, sf_dir).repartition(8).persist()
+    edges = persist(_assoc_edges(spark, sf_dir).repartition(8))
     # eager materialization: the final frame's crossJoins launch their
     # broadcast-exchange jobs CONCURRENTLY, and a lazily-persisted edges
     # frame gets race-recomputed by each of them (three ~2s lineitem
@@ -192,11 +191,11 @@ def _triangle_build(spark: SparkSession, sf_dir: str):
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = e.select(
+    oriented = persist(e.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("ddst"),
-    ).repartition(8).persist()
+    ).repartition(8))
     oriented.count()  # same cache-pinning as edges above
     o1 = oriented.toDF("u", "v", "dv")
     o2 = oriented.toDF("u", "w", "dw")
@@ -215,7 +214,7 @@ def _triangle_build(spark: SparkSession, sf_dir: str):
     stats = sym.agg(F.countDistinct("node").alias("n_nodes")).crossJoin(
         edges.agg(F.count(F.lit(1)).alias("n_edges"))
     )
-    return stats.crossJoin(tri), (oriented, edges)
+    return stats.crossJoin(tri)
 
 
 # PageRank fixed-point scale: scores in micro-units (1.0 == 1_000_000).
@@ -313,14 +312,14 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.7 s at sf0.1) — the two cheap jobs over the pinned 625-row cache
     # are the faster gate. Driver memory stays bounded either way: only
     # the collapsed nations² aggregate ever collects, never fact rows.
-    edges = flows.filter(F.col("src") != F.col("dst")).persist()
-    if edges.count() <= DRIVER_GRAPH_MAX_EDGES:
-        rows = edges.collect()
+    with scoped_cache() as persist:
+        edges = persist(flows.filter(F.col("src") != F.col("dst")))
+        if edges.count() <= DRIVER_GRAPH_MAX_EDGES:
+            return _pagerank_driver(spark, edges.collect())
         edges.unpersist()
-        return _pagerank_driver(spark, rows)
-    edges.unpersist()
-    out, persisted = _pagerank_build(spark, sf_dir)
-    return checkpoint_release(out, *persisted)
+        return _pagerank_build(spark, sf_dir, persist).localCheckpoint(
+            eager=True
+        )
 
 
 def _pagerank_driver(spark: SparkSession, edge_rows) -> DataFrame:
@@ -358,9 +357,9 @@ def _pagerank_driver(spark: SparkSession, edge_rows) -> DataFrame:
     )
 
 
-def _pagerank_build(spark: SparkSession, sf_dir: str):
-    """Pre-checkpoint PageRank plan + the persisted frames (the query
-    checkpoints before unpersisting; plan tests inspect this form)."""
+def _pagerank_build(spark: SparkSession, sf_dir: str, persist) -> DataFrame:
+    """Pre-checkpoint PageRank plan, its frames persisted through the
+    caller's scope (plan tests inspect this form)."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     li = load_table(spark, sf_dir, "lineitem")
@@ -379,7 +378,7 @@ def _pagerank_build(spark: SparkSession, sf_dir: str):
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    edges = flows.filter(F.col("src") != F.col("dst")).persist()
+    edges = persist(flows.filter(F.col("src") != F.col("dst")))
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
@@ -388,11 +387,7 @@ def _pagerank_build(spark: SparkSession, sf_dir: str):
     outw = edges.groupBy(F.col("src").alias("node")).agg(
         F.sum("w").alias("out_w")
     )
-    graph = (
-        edges.join(
-            outw.withColumnRenamed("node", "src"), "src"
-        ).persist()
-    )
+    graph = persist(edges.join(outw.withColumnRenamed("node", "src"), "src"))
     pr = nodes.select("node", F.lit(_PR_MICRO // 25).cast("long").alias("pr"))
     for _ in range(2):
         contrib = (
@@ -414,7 +409,7 @@ def _pagerank_build(spark: SparkSession, sf_dir: str):
     out = pr.select(
         F.col("node").alias("nationkey"), F.col("pr").alias("pr_micro")
     ).orderBy(F.col("pr_micro").desc(), "nationkey")
-    return out, (graph, edges)
+    return out
 
 
 CN_DEG_CAP = 32  # per-node neighbor-list truncation for the wedge join
@@ -469,16 +464,20 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the support-≥2 cut — see _SQL_ASSOC); the existing-edge join prunes
     wedges to edge pairs before scoring. Integer cn/degrees → one double
     division, so the ranking is oracle-exact."""
-    out, edges = _common_neighbors_build(spark, sf_dir)
-    return checkpoint_release(out, edges)
+    with scoped_cache() as persist:
+        return _common_neighbors_build(spark, sf_dir, persist).localCheckpoint(
+            eager=True
+        )
 
 
-def _common_neighbors_build(spark: SparkSession, sf_dir: str):
-    """Pre-checkpoint common-neighbors plan + the persisted edge frame
-    (plan tests inspect this form; the query checkpoints then unpersists)."""
+def _common_neighbors_build(
+    spark: SparkSession, sf_dir: str, persist
+) -> DataFrame:
+    """Pre-checkpoint common-neighbors plan, its edge frame persisted
+    through the caller's scope (plan tests inspect this form)."""
     from pyspark.sql import Window
 
-    edges = _assoc_edges(spark, sf_dir).repartition(8).persist()
+    edges = persist(_assoc_edges(spark, sf_dir).repartition(8))
     edges.count()  # pin the cache before multi-branch reuse (see triangle)
     allsym = edges.unionAll(edges.select(F.col("b").alias("a"),
                                          F.col("a").alias("b")))
@@ -504,7 +503,7 @@ def _common_neighbors_build(spark: SparkSession, sf_dir: str):
     )
     da = deg.toDF("node_a", "da")
     db = deg.toDF("node_b", "db")
-    out = (
+    return (
         edges.join(cn, (edges.a == cn.x) & (edges.b == cn.y))
         .join(da, edges.a == da.node_a)
         .join(db, edges.b == db.node_b)
@@ -521,7 +520,6 @@ def _common_neighbors_build(spark: SparkSession, sf_dir: str):
         .orderBy(F.col("jaccard").desc(), "a", "b")
         .limit(20)
     )
-    return out, edges
 
 
 @query(
@@ -660,46 +658,47 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan per round: degrees = key-only aggregate over the (tiny,
     support-filtered) edge frame; the surviving-edge join is
     broadcast-scale. The peel never touches the fact table again."""
-    edges = _assoc_edges(spark, sf_dir).repartition(8).persist()
-    # eager pin: the final frame crossJoins three aggregates whose
-    # broadcast-exchange jobs launch CONCURRENTLY — a lazily-persisted
-    # edge frame is race-recomputed by each of them (the measured
-    # triangle-count defect, SCALING.md round-6 root-cause #1b); one
-    # count() materializes the lineitem self-join exactly once
-    edges.count()
-    cur = edges
-    for _ in range(_KCORE_ROUNDS):
-        sym = cur.select(F.col("a").alias("node")).unionAll(
+    with scoped_cache() as persist:
+        edges = persist(_assoc_edges(spark, sf_dir).repartition(8))
+        # eager pin: the final frame crossJoins three aggregates whose
+        # broadcast-exchange jobs launch CONCURRENTLY — a lazily-persisted
+        # edge frame is race-recomputed by each of them (the measured
+        # triangle-count defect, SCALING.md round-6 root-cause #1b); one
+        # count() materializes the lineitem self-join exactly once
+        edges.count()
+        cur = edges
+        for _ in range(_KCORE_ROUNDS):
+            sym = cur.select(F.col("a").alias("node")).unionAll(
+                cur.select(F.col("b").alias("node"))
+            )
+            nodes = (
+                sym.groupBy("node")
+                .agg(F.count(F.lit(1)).alias("d"))
+                .filter(F.col("d") >= _KCORE_K)
+                .select("node")
+            )
+            keep_a = nodes.toDF("keep_a")
+            keep_b = nodes.toDF("keep_b")
+            # truncate lineage each round (standard iterative-Spark practice:
+            # the surviving-edge frame is tiny after the support cut, but its
+            # UN-truncated lineage is re-executed by every downstream
+            # reference — the measured stage-storm; checkpointing pins ~3.7k
+            # rows and makes each round exactly one degree-agg + one join)
+            cur = (
+                cur.join(keep_a, cur.a == keep_a.keep_a)
+                .join(keep_b, cur.b == keep_b.keep_b)
+                .select("a", "b")
+                .localCheckpoint(eager=True)
+            )
+        sym_last = cur.select(F.col("a").alias("node")).unionAll(
             cur.select(F.col("b").alias("node"))
         )
-        nodes = (
-            sym.groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= _KCORE_K)
-            .select("node")
+        out = (
+            sym_last.agg(F.countDistinct("node").alias("n_core_nodes"))
+            .crossJoin(cur.agg(F.count(F.lit(1)).alias("n_core_edges")))
+            .crossJoin(edges.agg(F.count(F.lit(1)).alias("n_edges_initial")))
         )
-        keep_a = nodes.toDF("keep_a")
-        keep_b = nodes.toDF("keep_b")
-        # truncate lineage each round (standard iterative-Spark practice:
-        # the surviving-edge frame is tiny after the support cut, but its
-        # UN-truncated lineage is re-executed by every downstream
-        # reference — the measured stage-storm; checkpointing pins ~3.7k
-        # rows and makes each round exactly one degree-agg + one join)
-        cur = (
-            cur.join(keep_a, cur.a == keep_a.keep_a)
-            .join(keep_b, cur.b == keep_b.keep_b)
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-    sym_last = cur.select(F.col("a").alias("node")).unionAll(
-        cur.select(F.col("b").alias("node"))
-    )
-    out = (
-        sym_last.agg(F.countDistinct("node").alias("n_core_nodes"))
-        .crossJoin(cur.agg(F.count(F.lit(1)).alias("n_core_edges")))
-        .crossJoin(edges.agg(F.count(F.lit(1)).alias("n_edges_initial")))
-    )
-    return checkpoint_release(out, edges)
+        return out.localCheckpoint(eager=True)
 
 
 # symmetrized adjacency over the association edge set — shared by the
@@ -715,18 +714,17 @@ _SQL_ADJ = """
 _LPA_ROUNDS = 3
 
 
-def _adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _adjacency(spark: SparkSession, sf_dir: str, persist) -> DataFrame:
     edges = _assoc_edges(spark, sf_dir)
     # repartition(8), not coalesce: narrows the tiny persisted frame
     # without propagating the narrow width up into the lineitem
     # self-join (the measured coalesce trap — see SCALING.md, cached-plan
     # partitioning). Round-robin, not keyed: LPA joins this frame on nbr
     # while BFS joins it on node, so no single keyed layout serves both.
-    adj = (
+    adj = persist(
         edges.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .unionAll(edges.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
         .repartition(8)
-        .persist()
     )
     # eager pin (see graph_kcore_peel): LPA/BFS reference adj in every
     # unrolled round and in concurrently-scheduled exchange jobs; without
@@ -772,16 +770,16 @@ def _lpa_oracle() -> str:
     """
 
 
-def _lpa_labels(spark: SparkSession, sf_dir: str):
+def _lpa_labels(spark: SparkSession, sf_dir: str, persist):
     """Run the deterministic synchronous LPA rounds; returns (labels,
-    adj) with labels = (node, lbl) after _LPA_ROUNDS and adj still
-    persisted (caller unpersists). Per-round lineage truncation — see
+    adj) with labels = (node, lbl) after _LPA_ROUNDS and adj persisted
+    through the caller's scope. Per-round lineage truncation — see
     graph_kcore_peel; the label frame is one row per node, and without
     the checkpoint round r's plan re-executes rounds 1..r-1 for every
     downstream reference."""
     from pyspark.sql.window import Window
 
-    adj = _adjacency(spark, sf_dir)
+    adj = _adjacency(spark, sf_dir, persist)
     labels = adj.select("node").distinct().withColumn("lbl", F.col("node"))
     w = Window.partitionBy("node").orderBy(F.col("cnt").desc(), F.col("lbl").asc())
     for _ in range(_LPA_ROUNDS):
@@ -820,14 +818,15 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed on the join key so every round reuses one co-located
     layout. The unrolled form is the same policy as graph_pagerank /
     graph_kcore_peel."""
-    labels, adj = _lpa_labels(spark, sf_dir)
-    sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("community_size"))
-    out = (
-        sizes.groupBy("community_size")
-        .agg(F.count(F.lit(1)).alias("n_communities"))
-        .orderBy("community_size")
-    )
-    return checkpoint_release(out, adj)
+    with scoped_cache() as persist:
+        labels, adj = _lpa_labels(spark, sf_dir, persist)
+        sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("community_size"))
+        out = (
+            sizes.groupBy("community_size")
+            .agg(F.count(F.lit(1)).alias("n_communities"))
+            .orderBy("community_size")
+        )
+        return out.localCheckpoint(eager=True)
 
 
 _BFS_ROUNDS = 3
@@ -873,32 +872,33 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-hop neighborhood, which is the property that keeps bounded-BFS
     tractable on power-law graphs at 100 TB (an unbounded BFS would
     sweep in the whole giant component)."""
-    adj = _adjacency(spark, sf_dir)
-    dist = (
-        adj.select("node")
-        .distinct()
-        .orderBy("node")
-        .limit(_BFS_SEEDS)
-        .withColumn("dist", F.lit(0))
-    )
-    for _ in range(_BFS_ROUNDS):
-        frontier = dist.toDF("fnode", "fdist")
-        relaxed = adj.join(frontier, adj.node == frontier.fnode).select(
-            F.col("nbr").alias("node"), (F.col("fdist") + 1).alias("dist")
-        )
-        # per-round lineage truncation — see graph_kcore_peel
+    with scoped_cache() as persist:
+        adj = _adjacency(spark, sf_dir, persist)
         dist = (
-            dist.unionAll(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+            adj.select("node")
+            .distinct()
+            .orderBy("node")
+            .limit(_BFS_SEEDS)
+            .withColumn("dist", F.lit(0))
         )
-    out = (
-        dist.groupBy(F.col("dist").alias("distance"))
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .orderBy("distance")
-    )
-    return checkpoint_release(out, adj)
+        for _ in range(_BFS_ROUNDS):
+            frontier = dist.toDF("fnode", "fdist")
+            relaxed = adj.join(frontier, adj.node == frontier.fnode).select(
+                F.col("nbr").alias("node"), (F.col("fdist") + 1).alias("dist")
+            )
+            # per-round lineage truncation — see graph_kcore_peel
+            dist = (
+                dist.unionAll(relaxed)
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist"))
+                .localCheckpoint(eager=True)
+            )
+        out = (
+            dist.groupBy(F.col("dist").alias("distance"))
+            .agg(F.count(F.lit(1)).alias("n_nodes"))
+            .orderBy("distance")
+        )
+        return out.localCheckpoint(eager=True)
 
 
 # HITS fixed-point scale: scores in micro-units, L-infinity normalized
@@ -1044,56 +1044,55 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    edges = flows.filter(F.col("src") != F.col("dst")).persist()
-    n_edges = edges.count()  # pin the cache once; also the gate decision
-    if n_edges <= DRIVER_GRAPH_MAX_EDGES:
-        rows = edges.collect()
-        edges.unpersist()
-        return _hits_driver(spark, rows)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-
-    def half_step(score: DataFrame, join_on: str, emit: str) -> DataFrame:
-        """score(node, s) summed over edges incident on `join_on`,
-        emitted per `emit` node, then L-inf normalized to micro. The
-        L-inf max is a whole-frame window over the 25-row result — NOT a
-        separate aggregate + crossJoin — so `raw` is referenced exactly
-        once and the un-checkpointed score chain stays LINEAR (each half
-        step embeds its predecessor once; the old two-reference shape was
-        the 2^steps plan blowup that forced an eager checkpoint + job per
-        half-step, measured 19.8s at sf0.1)."""
-        raw = (
-            edges.join(F.broadcast(score), edges[join_on] == score.node)
-            .select(F.col(emit).alias("node"), (F.col("s") * F.col("w")).alias("p"))
-            .groupBy("node")
-            .agg(F.sum("p").alias("raw"))
-        )
-        return nodes.join(raw, "node", "left").select(
-            "node",
-            F.expr(
-                f"CAST(CAST(coalesce(raw, 0) AS DECIMAL(38,0))"
-                f" * {_HITS_MICRO} DIV (max(raw) OVER ()) AS BIGINT)"
-            ).alias("s"),
+    with scoped_cache() as persist:
+        edges = persist(flows.filter(F.col("src") != F.col("dst")))
+        n_edges = edges.count()  # pin the cache once; also the gate decision
+        if n_edges <= DRIVER_GRAPH_MAX_EDGES:
+            return _hits_driver(spark, edges.collect())
+        nodes = (
+            edges.select(F.col("src").alias("node"))
+            .unionAll(edges.select(F.col("dst").alias("node")))
+            .distinct()
         )
 
-    h = nodes.select("node", F.lit(_HITS_MICRO).cast("long").alias("s"))
-    for _ in range(2):
-        a = half_step(h, "src", "dst")
-        # ONE lineage truncation per full iteration (r6 verdict #6): `a`
-        # feeds both h and the final join, so pin the 25-row frame once
-        # per round instead of four eager checkpoint jobs per run
-        a = a.repartition(1).localCheckpoint(eager=True)
-        h = half_step(a, "dst", "src")
-    out = (
-        nodes.join(a.toDF("node", "auth_micro"), "node")
-        .join(h.toDF("node", "hub_micro"), "node")
-        .select(F.col("node").alias("nationkey"), "auth_micro", "hub_micro")
-        .orderBy(F.col("auth_micro").desc(), F.col("hub_micro").desc(), "nationkey")
-    )
-    return checkpoint_release(out, edges)
+        def half_step(score: DataFrame, join_on: str, emit: str) -> DataFrame:
+            """score(node, s) summed over edges incident on `join_on`,
+            emitted per `emit` node, then L-inf normalized to micro. The
+            L-inf max is a whole-frame window over the 25-row result — NOT a
+            separate aggregate + crossJoin — so `raw` is referenced exactly
+            once and the un-checkpointed score chain stays LINEAR (each half
+            step embeds its predecessor once; the old two-reference shape was
+            the 2^steps plan blowup that forced an eager checkpoint + job per
+            half-step, measured 19.8s at sf0.1)."""
+            raw = (
+                edges.join(F.broadcast(score), edges[join_on] == score.node)
+                .select(F.col(emit).alias("node"), (F.col("s") * F.col("w")).alias("p"))
+                .groupBy("node")
+                .agg(F.sum("p").alias("raw"))
+            )
+            return nodes.join(raw, "node", "left").select(
+                "node",
+                F.expr(
+                    f"CAST(CAST(coalesce(raw, 0) AS DECIMAL(38,0))"
+                    f" * {_HITS_MICRO} DIV (max(raw) OVER ()) AS BIGINT)"
+                ).alias("s"),
+            )
+
+        h = nodes.select("node", F.lit(_HITS_MICRO).cast("long").alias("s"))
+        for _ in range(2):
+            a = half_step(h, "src", "dst")
+            # ONE lineage truncation per full iteration (r6 verdict #6): `a`
+            # feeds both h and the final join, so pin the 25-row frame once
+            # per round instead of four eager checkpoint jobs per run
+            a = a.repartition(1).localCheckpoint(eager=True)
+            h = half_step(a, "dst", "src")
+        out = (
+            nodes.join(a.toDF("node", "auth_micro"), "node")
+            .join(h.toDF("node", "hub_micro"), "node")
+            .select(F.col("node").alias("nationkey"), "auth_micro", "hub_micro")
+            .orderBy(F.col("auth_micro").desc(), F.col("hub_micro").desc(), "nationkey")
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -1217,40 +1216,41 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments (the agg_ols/corr_matrix policy — sums are
     order-independent integers, the final r is one identical double
     expression per engine)."""
-    edges = _assoc_edges(spark, sf_dir).repartition(8).persist()
-    edges.count()
-    sym = edges.select("a", "b").unionAll(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    deg = sym.groupBy(F.col("a").alias("node")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    ends = (
-        sym.join(deg.toDF("a", "x"), "a")
-        .join(deg.toDF("b", "y"), "b")
-        .select("x", "y")
-    )
-    m = ends.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    out = m.select(
-        F.col("n").alias("n_edge_ends"),
-        F.round(
-            (nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy"))
-            / F.sqrt(
-                (nd * F.col("sxx") - F.col("sx").cast("double") * F.col("sx"))
-                * (nd * F.col("syy") - F.col("sy").cast("double") * F.col("sy"))
-            ),
-            9,
-        ).alias("assortativity"),
-    )
-    return checkpoint_release(out, edges)
+    with scoped_cache() as persist:
+        edges = persist(_assoc_edges(spark, sf_dir).repartition(8))
+        edges.count()
+        sym = edges.select("a", "b").unionAll(
+            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        )
+        deg = sym.groupBy(F.col("a").alias("node")).agg(
+            F.count(F.lit(1)).alias("d")
+        )
+        ends = (
+            sym.join(deg.toDF("a", "x"), "a")
+            .join(deg.toDF("b", "y"), "b")
+            .select("x", "y")
+        )
+        m = ends.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("x").cast("long").alias("sx"),
+            F.sum("y").cast("long").alias("sy"),
+            F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+            F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
+            F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
+        )
+        nd = F.col("n").cast("double")
+        out = m.select(
+            F.col("n").alias("n_edge_ends"),
+            F.round(
+                (nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy"))
+                / F.sqrt(
+                    (nd * F.col("sxx") - F.col("sx").cast("double") * F.col("sx"))
+                    * (nd * F.col("syy") - F.col("sy").cast("double") * F.col("sy"))
+                ),
+                9,
+            ).alias("assortativity"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -1296,41 +1296,42 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (within count), one degree aggregate, and a community-keyed square
     sum — all bounded by the support-filtered graph; nothing touches
     the fact table beyond the shared edge build."""
-    labels, adj = _lpa_labels(spark, sf_dir)
-    lx = labels.toDF("node", "xl")
-    ly = labels.toDF("nbr", "yl")
-    ends = adj.agg(F.count(F.lit(1)).alias("ends"))
-    within = (
-        adj.join(F.broadcast(lx), "node")
-        .join(F.broadcast(ly), "nbr")
-        .filter(F.col("xl") == F.col("yl"))
-        .agg(F.count(F.lit(1)).alias("within"))
-    )
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
-    dc = (
-        deg.join(F.broadcast(lx), "node")
-        .groupBy("xl")
-        .agg(F.sum("d").cast("long").alias("dsum"))
-    )
-    dsq = dc.agg(
-        F.sum(
-            F.col("dsum").cast("decimal(38,0)") * F.col("dsum")
-        ).cast("double").alias("s"),
-        F.count(F.lit(1)).alias("n_comm"),
-    )
-    out = (
-        dsq.crossJoin(F.broadcast(ends))
-        .crossJoin(F.broadcast(within))
-        .select(
-            F.col("n_comm").alias("n_communities"),
-            (F.col("ends") / 2).cast("long").alias("n_edges"),
-            F.col("within").alias("within_ends"),
-            F.round(
-                F.col("within").cast("double") / F.col("ends")
-                - F.col("s")
-                / (F.col("ends").cast("double") * F.col("ends")),
-                9,
-            ).alias("modularity"),
+    with scoped_cache() as persist:
+        labels, adj = _lpa_labels(spark, sf_dir, persist)
+        lx = labels.toDF("node", "xl")
+        ly = labels.toDF("nbr", "yl")
+        ends = adj.agg(F.count(F.lit(1)).alias("ends"))
+        within = (
+            adj.join(F.broadcast(lx), "node")
+            .join(F.broadcast(ly), "nbr")
+            .filter(F.col("xl") == F.col("yl"))
+            .agg(F.count(F.lit(1)).alias("within"))
         )
-    )
-    return checkpoint_release(out, adj)
+        deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
+        dc = (
+            deg.join(F.broadcast(lx), "node")
+            .groupBy("xl")
+            .agg(F.sum("d").cast("long").alias("dsum"))
+        )
+        dsq = dc.agg(
+            F.sum(
+                F.col("dsum").cast("decimal(38,0)") * F.col("dsum")
+            ).cast("double").alias("s"),
+            F.count(F.lit(1)).alias("n_comm"),
+        )
+        out = (
+            dsq.crossJoin(F.broadcast(ends))
+            .crossJoin(F.broadcast(within))
+            .select(
+                F.col("n_comm").alias("n_communities"),
+                (F.col("ends") / 2).cast("long").alias("n_edges"),
+                F.col("within").alias("within_ends"),
+                F.round(
+                    F.col("within").cast("double") / F.col("ends")
+                    - F.col("s")
+                    / (F.col("ends").cast("double") * F.col("ends")),
+                    9,
+                ).alias("modularity"),
+            )
+        )
+        return out.localCheckpoint(eager=True)

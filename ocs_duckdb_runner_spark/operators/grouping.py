@@ -13,11 +13,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocs_duckdb_runner_spark.exactness import fx_sum, sql_fx_sum
-from ocs_duckdb_runner_spark.registry import (
-    checkpoint_release,
-    load_table,
-    query,
-)
+from ocs_duckdb_runner_spark.registry import load_table, query
+from ocs_duckdb_runner_spark.session import scoped_cache
 
 
 @query(
@@ -1858,30 +1855,29 @@ def agg_bitmap_builtins(spark: SparkSession, sf_dir: str) -> DataFrame:
     total, pinned); the result is <=4 rows, eagerly checkpointed so the
     cache releases before return."""
     li = load_table(spark, sf_dir, "lineitem")
-    b = (
-        li.groupBy(
-            "l_returnflag",
-            F.expr("bitmap_bucket_number(l_partkey)").alias("bkt"),
+    with scoped_cache() as persist:
+        b = persist(
+            li.groupBy(
+                "l_returnflag",
+                F.expr("bitmap_bucket_number(l_partkey)").alias("bkt"),
+            ).agg(
+                F.expr(
+                    "bitmap_construct_agg(bitmap_bit_position(l_partkey))"
+                ).alias("bm")
+            )
         )
-        .agg(
-            F.expr(
-                "bitmap_construct_agg(bitmap_bit_position(l_partkey))"
-            ).alias("bm")
+        per = b.groupBy("l_returnflag").agg(
+            F.sum(F.expr("bitmap_count(bm)")).cast("long").alias("n_parts")
         )
-        .persist()
-    )
-    per = b.groupBy("l_returnflag").agg(
-        F.sum(F.expr("bitmap_count(bm)")).cast("long").alias("n_parts")
-    )
-    merged = (
-        b.groupBy("bkt")
-        .agg(F.expr("bitmap_or_agg(bm)").alias("bm2"))
-        .agg(F.sum(F.expr("bitmap_count(bm2)")).cast("long").alias("n_parts"))
-        .select(F.lit("ALL").alias("l_returnflag"), "n_parts")
-    )
-    # finally-guarded (r11 ADVICE): a failed materialization must not
-    # leak the persisted bitmap frame into the shared session
-    return checkpoint_release(per.unionByName(merged), b)
+        merged = (
+            b.groupBy("bkt")
+            .agg(F.expr("bitmap_or_agg(bm)").alias("bm2"))
+            .agg(F.sum(F.expr("bitmap_count(bm2)")).cast("long").alias("n_parts"))
+            .select(F.lit("ALL").alias("l_returnflag"), "n_parts")
+        )
+        # scoped (r11 ADVICE): a failed materialization must not leak the
+        # persisted bitmap frame into the shared session
+        return per.unionByName(merged).localCheckpoint(eager=True)
 
 
 @query(

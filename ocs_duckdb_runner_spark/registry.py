@@ -207,20 +207,6 @@ def release_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def checkpoint_release(df: DataFrame, *caches: DataFrame) -> DataFrame:
-    """``localCheckpoint(eager=True)`` the result, then ALWAYS unpersist
-    the intermediate caches — the unpersists sit in a finally block so an
-    exception during materialization cannot leak persisted frames into
-    the shared long-lived session (r11 ADVICE on sim_hybrid_bm25_cosine /
-    agg_bitmap_builtins; every checkpoint-then-unpersist site in the repo
-    routes through here so the fix is structural, not per-site)."""
-    try:
-        return df.localCheckpoint(eager=True)
-    finally:
-        for c in caches:
-            c.unpersist()
-
-
 def fixture_fingerprint(
     sf_dir: str, table: str | tuple[str, ...] | None = None
 ) -> str:

@@ -141,21 +141,15 @@ def _fs_read_ops(spark: SparkSession) -> int:
     goes through the Hadoop FS API, whose global statistics count every
     positioned/streamed read; in local mode (like the reference's single
     process) driver and executors share one JVM, so the counter covers the
-    whole run. Returns 0 when the JVM statistics are unreachable."""
-    try:
-        jvm = spark.sparkContext._jvm
-        total = 0
-        it = (
-            jvm.org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics()
-            .iterator()
-        )
-        while it.hasNext():
-            stats = it.next()
-            v = stats.getLong("readOps")
-            total += int(v) if v is not None else 0
-        return total
-    except Exception:  # noqa: BLE001  (py4j/Hadoop internals unavailable)
-        return 0
+    whole run. ``getGlobalStorageStatistics`` is public Hadoop API, so a
+    failure raises instead of reading as zero reads."""
+    jvm = spark.sparkContext._jvm
+    total = 0
+    it = jvm.org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics().iterator()
+    while it.hasNext():
+        v = it.next().getLong("readOps")
+        total += int(v) if v is not None else 0
+    return total
 
 
 def _rest_group_metrics(

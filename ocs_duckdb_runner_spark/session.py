@@ -23,11 +23,11 @@ zone must set it after loading, not before.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator, Mapping
+from collections.abc import Callable, Iterator, Mapping
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass(frozen=True)
@@ -183,7 +183,10 @@ def scoped_conf(
     already set put back. The confs are session-global, so two scoped
     regions on one session must not overlap: a concurrent drain or
     fan-out would plan under the other's values or clobber its restore.
-    Every caller runs its region synchronously on the calling thread."""
+    Every caller runs its region synchronously on the calling thread, and
+    a stream drain scopes only ``start()``: the stream's shuffle width and
+    state store are fixed by the time it returns, so the drain itself
+    runs on the session's own values."""
     conf = spark.conf
     prior: list[tuple[str, str | None]] = []
     try:
@@ -199,6 +202,30 @@ def scoped_conf(
             else:
                 conf.set(k, old)
 
+
+
+@contextmanager
+def scoped_cache() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Yield ``persist(df)``: persist ``df`` at the default level, record
+    it and return it. On exit, even by an exception, unpersist every
+    recorded frame in reverse order, so a query leaves nothing cached in
+    the long-lived session however its construction ends. A frame may be
+    unpersisted early inside the body (per-round loops do); the exit's
+    second unpersist is a no-op. Unlike a stream drain's
+    :func:`scoped_conf`, which covers ``start()`` only, the scope must
+    cover every read of its frames: a result read after it is
+    materialized inside it (``localCheckpoint(eager=True)``)."""
+    held: list[DataFrame] = []
+
+    def persist(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return df
+
+    try:
+        yield persist
+    finally:
+        for df in reversed(held):
+            df.unpersist()
 
 def hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for any scheme the session can read (file://,

@@ -24,8 +24,6 @@ ever passes through the driver.
 
 from __future__ import annotations
 
-from contextlib import ExitStack
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ocs_duckdb_runner_spark.registry import query
@@ -302,19 +300,8 @@ def src_python_datasource_pushdown(
     pushFilters reader under a disabled conf
     (DATA_SOURCE_PUSHDOWN_DISABLED), so a lazily returned plan would
     execute after the restore and die. 1,879 rows — checkpoint cost is
-    nil. If the conf somehow can't be set (a cluster with a locked-down
-    conf), the query degrades to the plain pushdown-free source and
-    Spark evaluates the same predicates post-scan — same rows, plain
-    plan (tests pin both shapes)."""
-    with ExitStack() as scope:
-        try:
-            scope.enter_context(
-                scoped_conf(
-                    spark, {"spark.sql.python.filterPushdown.enabled": "true"}
-                )
-            )
-        except Exception:  # the conf cannot be set: plain source
-            return _pushdown_predicates(src_python_datasource(spark, sf_dir))
+    nil."""
+    with scoped_conf(spark, {"spark.sql.python.filterPushdown.enabled": "true"}):
         return _pushdown_plan(spark).localCheckpoint(eager=True)
 
 

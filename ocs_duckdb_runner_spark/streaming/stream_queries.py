@@ -175,8 +175,11 @@ def _stream_shuffle_width(spark: SparkSession, sf_dir: str) -> int:
 def _run_to_memory(agg: DataFrame, mode: str, sf_dir: str | None = None) -> str:
     """Drive a streaming aggregation to completion against the memory sink
     (single micro-batch over the fixture file) and return the table name.
-    When ``sf_dir`` is given, the drain runs under the input-derived
-    stateful-shuffle width (see _stream_shuffle_width)."""
+    When ``sf_dir`` is given, the stream starts under the input-derived
+    stateful-shuffle width (see _stream_shuffle_width). The width pin
+    covers ``start()`` only: the stream's shuffle width is fixed once it
+    returns, so the drain leaves the session's own width to every other
+    query planned meanwhile."""
     _COUNTER["n"] += 1
     name = f"stream_out_{_COUNTER['n']}"
 
@@ -192,7 +195,7 @@ def _run_to_memory(agg: DataFrame, mode: str, sf_dir: str | None = None) -> str:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
     return name
 
 
@@ -791,8 +794,9 @@ def stream_tws_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same semantics and ORACLE as stream_tws_session_gap; what's new is
     the harness around it: (1) the provider + changelog confs are
-    scoped to the drains (session.scoped_conf — both are per-query
-    runtime confs read at stream start); (2) the fixture is
+    scoped to each phase's ``start()`` (session.scoped_conf — both are
+    runtime confs the query captures when it starts, so the drain itself
+    runs on the session's own values); (2) the fixture is
     drained in TWO phases against ONE checkpoint — phase 1 streams the
     early time-half, the query STOPS, phase 2 starts a NEW query from
     the same checkpoint over the late half — so every user active in
@@ -818,23 +822,22 @@ def stream_tws_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _land_updates(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
 
-    with scoped_conf(
-        spark, {_PROVIDER_CONF: _ROCKSDB_PROVIDER, _CHANGELOG_CONF: "true"}
-    ):
-        # NO width scoping here: this is the PYTHON-stateful family
-        # (_session_gap_stateful / applyInPandasWithState), whose per-row
-        # cost is the Python worker — narrowing to the state-store-
-        # optimal width serializes the Python work and LOSES (measured:
-        # 13.7s -> 140s at the 10x probe with width 1). RocksDB instance
-        # count follows the session compute width, like the other
-        # Python-stateful drains.
-        for phase_dir in (lo_dir, hi_dir):
-            _link_parts(phase_dir, src)
-            events = (
-                spark.readStream.schema(schema)
-                .parquet(src)
-                .withWatermark("ts", "10 minutes")
-            )
+    # NO width scoping here: this is the PYTHON-stateful family
+    # (_session_gap_stateful / applyInPandasWithState), whose per-row
+    # cost is the Python worker — narrowing to the state-store-
+    # optimal width serializes the Python work and LOSES (measured:
+    # 13.7s -> 140s at the 10x probe with width 1). RocksDB instance
+    # count follows the session compute width, like the other
+    # Python-stateful drains.
+    rocksdb = {_PROVIDER_CONF: _ROCKSDB_PROVIDER, _CHANGELOG_CONF: "true"}
+    for phase_dir in (lo_dir, hi_dir):
+        _link_parts(phase_dir, src)
+        events = (
+            spark.readStream.schema(schema)
+            .parquet(src)
+            .withWatermark("ts", "10 minutes")
+        )
+        with scoped_conf(spark, rocksdb):
             q = (
                 _session_gap_stateful(events)
                 .writeStream.outputMode("update")
@@ -843,7 +846,7 @@ def stream_tws_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination()
+        q.awaitTermination()
     n_changelog = sum(
         1
         for _root, _dirs, files in os.walk(f"{ck}/state")
@@ -1250,7 +1253,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
     return spark.read.format("statestore").load(ck).select(
         F.col("key.event_type").alias("event_type"),
         F.col("value.count").cast("long").alias("n"),

@@ -12,6 +12,7 @@ import re
 import pytest
 
 from ocs_duckdb_runner_spark.registry import get_query
+from ocs_duckdb_runner_spark.session import scoped_cache
 from tests.conftest import SF_DIR
 
 
@@ -304,10 +305,8 @@ def test_pagerank_edge_aggregation_broadcasts_dims(spark):
     inspect the pre-checkpoint builder.)"""
     from ocs_duckdb_runner_spark.operators.graph import _pagerank_build
 
-    out, persisted = _pagerank_build(spark, SF_DIR)
-    plan = _raw_plan(spark, out)
-    for df in persisted:
-        df.unpersist()
+    with scoped_cache() as persist:
+        plan = _raw_plan(spark, _pagerank_build(spark, SF_DIR, persist))
     # ≥1 forced (score frame) + size-chosen dim broadcasts at test SF
     assert plan.count("BroadcastHashJoin") >= 1
     assert "CartesianProduct" not in plan
@@ -321,10 +320,8 @@ def test_triangle_count_joins_on_vertex_keys_only(spark):
     graphs where id-orientation explodes at hubs."""
     from ocs_duckdb_runner_spark.operators.graph import _triangle_build
 
-    out, persisted = _triangle_build(spark, SF_DIR)
-    plan = _raw_plan(spark, out)
-    for df in persisted:
-        df.unpersist()
+    with scoped_cache() as persist:
+        plan = _raw_plan(spark, _triangle_build(spark, SF_DIR, persist))
     exchange_args = [
         ln for ln in plan.splitlines() if "Arguments: hashpartitioning" in ln
     ]
@@ -343,9 +340,8 @@ def test_common_neighbors_wedge_join_is_capped_and_keyed(spark):
     list-owner key, never a cross product."""
     from ocs_duckdb_runner_spark.operators.graph import _common_neighbors_build
 
-    out, edges = _common_neighbors_build(spark, SF_DIR)
-    plan = _raw_plan(spark, out)
-    edges.unpersist()
+    with scoped_cache() as persist:
+        plan = _raw_plan(spark, _common_neighbors_build(spark, SF_DIR, persist))
     assert "CartesianProduct" not in plan
     assert "Window" in plan  # the CAP truncation
     assert "row_number" in plan
@@ -483,9 +479,8 @@ def test_semantic_dedup_joins_on_cluster_key(spark):
     bucket-bounded candidate space), never a corpus cross product."""
     from ocs_duckdb_runner_spark.llm.similarity import _semantic_build
 
-    out, assign = _semantic_build(spark, SF_DIR)
-    plan = _raw_plan(spark, out)
-    assign.unpersist()
+    with scoped_cache() as persist:
+        plan = _raw_plan(spark, _semantic_build(spark, SF_DIR, persist))
     assert "CartesianProduct" not in plan
     assert "BroadcastExchange" in plan  # K centroids broadcast
 
@@ -742,10 +737,8 @@ def test_syndication_matrix_broadcasts_sizes(spark):
     (The registered query localCheckpoints; inspect the builder.)"""
     from ocs_duckdb_runner_spark.llm.curation import _syndication_build
 
-    out, persisted = _syndication_build(spark, SF_DIR)
-    plan = _raw_plan(spark, out)
-    for df in persisted:
-        df.unpersist()
+    with scoped_cache() as persist:
+        plan = _raw_plan(spark, _syndication_build(spark, SF_DIR, persist))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -958,8 +951,12 @@ def test_kn_bigram_types_table_is_cached(spark):
     three model aggregates' differing column pruning defeats AQE
     exchange reuse (verified during development: zero ReusedExchange
     even with broadcasts disabled), so without the cache every branch
-    re-tokenizes the corpus."""
-    plan = plan_of(spark, "text_bigram_lm_kn")
+    re-tokenizes the corpus. (The registered query localCheckpoints its
+    result, which hides the plan; inspect the builder.)"""
+    from ocs_duckdb_runner_spark.llm.text import _kn_build
+
+    with scoped_cache() as persist:
+        plan = _raw_plan(spark, _kn_build(spark, SF_DIR, persist))
     assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan
     assert "CartesianProduct" not in plan
 
@@ -984,16 +981,8 @@ def test_hybrid_fusion_no_corpus_shuffle(spark):
     public query returns a 15-row eager checkpoint)."""
     from ocs_duckdb_runner_spark.llm.similarity import _hybrid_plan
 
-    out, per_doc, both = _hybrid_plan(spark, SF_DIR)
-    try:
-        plan = out._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-    finally:
-        both.unpersist()
-        per_doc.unpersist()
+    with scoped_cache() as persist:
+        plan = _raw_plan(spark, _hybrid_plan(spark, SF_DIR, persist))
     assert "TakeOrderedAndProject" in plan
     assert plan.count("BroadcastExchange (") >= 3
     assert "InMemoryTableScan" in plan  # both caches feed the branches

@@ -236,6 +236,48 @@ def test_stream_tumbling_matches_batch_twin(spark):
     assert got == want and len(want) > 0
 
 
+def test_drain_confs_cover_start_only(spark, monkeypatch):
+    """A drain's confs are scoped to ``start()``: by
+    ``awaitTermination()`` the session reads its own width and state
+    store provider again, while the stream keeps the width it started
+    with (a stream's shuffle width is fixed once ``start()`` returns)."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from ocs_duckdb_runner_spark.registry import get_query
+    from ocs_duckdb_runner_spark.streaming.stream_queries import (
+        _PROVIDER_CONF,
+        _stream_shuffle_width,
+    )
+
+    def confs():
+        return (
+            spark.conf.get("spark.sql.shuffle.partitions"),
+            spark.conf.get(_PROVIDER_CONF, None),
+        )
+
+    drains = []
+    real = StreamingQuery.awaitTermination
+
+    def spy(self, *args, **kwargs):
+        on_entry = confs()
+        done = real(self, *args, **kwargs)
+        drains.append((on_entry, self.lastProgress))
+        return done
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
+    own = confs()
+    get_query("stream_tumbling_wm").fn(spark, SF_DIR)
+    [(on_entry, progress)] = drains
+    assert on_entry == own
+    width = _stream_shuffle_width(spark, SF_DIR)
+    assert str(width) != own[0]  # the pin is visible: derived != session
+    assert progress.stateOperators[0].numShufflePartitions == width
+
+    drains.clear()
+    get_query("stream_tws_rocksdb").fn(spark, SF_DIR)
+    assert [on_entry for on_entry, _ in drains] == [own, own]
+
+
 def test_stream_ns_timestamp_source_matches_batch_and_leaks_no_flag(
     spark, tmp_path
 ):

@@ -77,9 +77,9 @@ def to_sql(path: str) -> str:
     """
 
 
-_PLAN_CACHE: dict[tuple, object] = {}
-_PLAN_CACHE_MAX = 1024
-_PLAN_CACHE_LOCK = threading.Lock()
+_FRAME_CACHE: dict[tuple, DataFrame] = {}
+_FRAME_CACHE_MAX = 1024
+_FRAME_CACHE_LOCK = threading.Lock()
 _SESSION_UIDS = itertools.count()
 
 
@@ -87,51 +87,55 @@ def _session_uid(spark: SparkSession) -> int:
     """Stable per-session cache-key token. id(spark) can alias a GC'd
     session's address; instead stamp each session with a monotonically
     increasing uid on first use (guarded by the cache lock)."""
-    uid = getattr(spark, "_ocs_plan_cache_uid", None)
+    uid = getattr(spark, "_ocs_frame_cache_uid", None)
     if uid is None:
         uid = next(_SESSION_UIDS)
-        spark._ocs_plan_cache_uid = uid
+        spark._ocs_frame_cache_uid = uid
     return uid
 
 
 def flagship_on_file(spark: SparkSession, path: str) -> DataFrame:
     """The fixed per-object query (runner.cc:174-182) over one
     lineitem-schema parquet object. FanoutRunner.run's analysis wave
-    calls it once per source per run; its pool collects that frame.
+    calls it once per source per run; its pool executes that frame.
 
-    Analyzed-plan cache: parsing + analysis of the per-object SQL costs
-    ~90 ms/file (Catalyst analysis + a parquet footer read for schema
-    resolution) — ~40% of warm fan-out wall. The ANALYZED LOGICAL PLAN is
-    memoized per (path, mtime, size, session) and wrapped in a FRESH
-    Dataset per call (Dataset.ofRows, ~3 ms): physical planning and
-    execution re-run every time, so each run genuinely re-reads the object
-    and the R11 I/O metrics stay truthful. Caching the DataFrame itself
-    would be wrong — one Dataset pins one executed plan, and any
-    exchange or cached stage in it would let a re-run skip the scan
-    (0 bytes read: a result cache masquerading as a query run).
+    Prepared-frame cache: parsing, analysis (a parquet footer read for
+    schema resolution), optimization and physical planning of the
+    per-object SQL cost tens of ms per object per run, so the DataFrame
+    itself is memoized per (path, mtime, size, session) and each object
+    version is planned once, as the reference plans each object once
+    inside its own engine (runner.cc:197-218). Re-executing one Dataset
+    is a true re-run only because its plan holds no Exchange: the
+    ``COALESCE(1)`` template (see :func:`to_sql`) plans as one stage, so
+    the final adaptive plan has no query stage whose materialized output
+    a second execution could reuse, and every execution scans the object
+    again (tests/test_runner_prepared.py pins equal, nonzero per-object
+    bytes and one stage per source on a repeated run). A template that
+    gains an Exchange would turn this cache into a result cache. A cached
+    frame keeps the conf it was first planned under; a later session conf
+    change reaches only objects planned after it.
     The key's :func:`~ocs_duckdb_runner_spark.session.file_version`
     (Hadoop-FS mtime and length, any scheme) invalidates on file
     replacement; an object it cannot stat raises here, for R14 isolation
     to report. Bounded FIFO, 1024 entries."""
     version = file_version(spark, path)
-    with _PLAN_CACHE_LOCK:
-        key = (path, version, _session_uid(spark))
-        plan = _PLAN_CACHE.get(key)
-    if plan is not None:
-        jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            spark._jsparkSession, plan
-        )
-        return DataFrame(jds, spark)
-    df = spark.sql(to_sql(path))
-    plan = df._jdf.queryExecution().analyzed()
     # lookup/insert/evict under one lock: the fan-out's analysis wave hits
     # this concurrently, and an unguarded evict-while-insert can raise
     # "dict changed size during iteration".
-    with _PLAN_CACHE_LOCK:
-        if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-            _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-        _PLAN_CACHE[key] = plan
-    return df
+    with _FRAME_CACHE_LOCK:
+        key = (path, version, _session_uid(spark))
+        df = _FRAME_CACHE.get(key)
+    if df is not None:
+        return df
+    df = spark.sql(to_sql(path))
+    with _FRAME_CACHE_LOCK:
+        # a concurrent miss on the same key keeps the first frame: one
+        # frame per object version
+        if key not in _FRAME_CACHE:
+            if len(_FRAME_CACHE) >= _FRAME_CACHE_MAX:
+                _FRAME_CACHE.pop(next(iter(_FRAME_CACHE)))
+            _FRAME_CACHE[key] = df
+        return _FRAME_CACHE[key]
 
 
 def _fs_read_ops(spark: SparkSession) -> int:
@@ -244,15 +248,17 @@ class FanoutRunner:
         self.spark.sparkContext.setLocalProperty(
             "spark.jobGroup.id", f"{token}:{idx}"
         )
+        if not self.print_rows:
+            # count in the JVM: no result row crosses Py4J
+            return frame._jdf.collectAsList().size()
         rows = frame.collect()
-        if self.print_rows:
-            for r in rows:
-                print(tuple(r), file=sys.stdout)
+        for r in rows:
+            print(tuple(r), file=sys.stdout)
         return len(rows)
 
     def run(self, sources: list[str]) -> dict:
         """Fan the per-object query out over ``sources``: a wave builds
-        each frame once, the j-wide pool collects them (one job group per
+        each frame once, the j-wide pool executes them (one job group per
         file), and one settled REST read gives the I/O metrics."""
         # job-group prefix unique to THIS run: _rest_group_metrics sums
         # every group starting with it, so a prefix shared across runs

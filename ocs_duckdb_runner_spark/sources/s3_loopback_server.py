@@ -14,7 +14,7 @@ run over s3a:// URIs produces byte/read-op evidence from both sides
 
 Path model (path-style addressing, s3_url_style='path', runner.cc:209):
     GET /bucket/key         → <root>/<key>   (single-bucket; name ignored)
-    HEAD /bucket/key        → size probe; directories answer X-Ocs-Dir
+    HEAD /bucket/key        → size + Last-Modified; directories answer X-Ocs-Dir
     GET /bucket/dir?list    → "name\\tsize\\t{d|f}" lines
     GET /__stats__          → JSON request counters
 
@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import threading
+from email.utils import formatdate
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
 
@@ -94,6 +95,13 @@ class S3LoopbackServer:
                     return None
                 return p
 
+            def _last_modified(self, st) -> None:
+                # whole seconds, as S3 sends it: the client's FileStatus
+                # mtime, so a same-length rewrite changes file_version
+                self.send_header(
+                    "Last-Modified", formatdate(st.st_mtime, usegmt=True)
+                )
+
             def do_HEAD(self):
                 with server.stats.lock:
                     server.stats.head += 1
@@ -105,7 +113,9 @@ class S3LoopbackServer:
                     self.send_header("X-Ocs-Dir", "true")
                     self.send_header("Content-Length", "0")
                 else:
-                    self.send_header("Content-Length", str(p.stat().st_size))
+                    st = p.stat()
+                    self.send_header("Content-Length", str(st.st_size))
+                    self._last_modified(st)
                 self.end_headers()
 
             def do_GET(self):
@@ -134,7 +144,8 @@ class S3LoopbackServer:
                     self.end_headers()
                     self.wfile.write(body)
                     return
-                size = p.stat().st_size
+                st = p.stat()
+                size = st.st_size
                 rng = self.headers.get("Range")
                 start, end = 0, size - 1
                 status = 200
@@ -160,6 +171,7 @@ class S3LoopbackServer:
                         "Content-Range", f"bytes {start}-{end}/{size}"
                     )
                 self.send_header("Content-Length", str(n))
+                self._last_modified(st)
                 self.end_headers()
                 with open(p, "rb") as f:
                     f.seek(start)

@@ -167,3 +167,42 @@ def test_keepalive_small_ranged_gets_do_not_wait_for_delayed_ack(tmp_path):
         finally:
             conn.close()
     assert statistics.median(lat[1:]) < 0.010, lat
+
+
+def test_last_modified_is_the_objects_mtime(tmp_path):
+    """HEAD and GET carry Last-Modified in whole seconds, as S3 does: the
+    s3a FileStatus mtime, so a same-length rewrite changes
+    session.file_version and invalidates the caches keyed by it."""
+    import http.client
+    import os
+    from email.utils import parsedate_to_datetime
+
+    from ocs_duckdb_runner_spark.sources.s3_loopback_server import (
+        S3LoopbackServer,
+    )
+
+    obj = tmp_path / "obj.bin"
+    obj.write_bytes(b"a" * 4096)
+    os.utime(obj, (1_700_000_000.75, 1_700_000_000.75))
+
+    def _stamps(srv) -> list[int]:
+        out = []
+        for method, headers in (("HEAD", {}), ("GET", {"Range": "bytes=0-9"})):
+            conn = http.client.HTTPConnection(srv.host, srv.port, timeout=10)
+            try:
+                conn.request(method, "/ocs/obj.bin", headers=headers)
+                resp = conn.getresponse()
+                resp.read()
+                assert resp.status in (200, 206)
+                stamp = resp.getheader("Last-Modified")
+            finally:
+                conn.close()
+            assert stamp is not None, method
+            out.append(int(parsedate_to_datetime(stamp).timestamp()))
+        return out
+
+    with S3LoopbackServer(str(tmp_path)) as srv:
+        assert _stamps(srv) == [1_700_000_000, 1_700_000_000]
+        obj.write_bytes(b"b" * 4096)  # same length, later mtime
+        os.utime(obj, (1_700_000_042, 1_700_000_042))
+        assert _stamps(srv) == [1_700_000_042, 1_700_000_042]

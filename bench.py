@@ -244,7 +244,7 @@ def main() -> int:
         # generated classes the sf0.1 run will hit, for ~0 data cost
         for wq in HEADLINE:
             qs[wq](spark, warm_dir).write.format("noop").mode("overwrite").save()
-        # warm the fan-out path too (per-object SQL plan + REST metrics)
+        # warm the fan-out path too (per-object SQL plan + I/O listener)
         wobj = split_objects(spark, warm_dir, 8)
         wfiles = sorted(
             f"{wobj}/{f}" for f in os.listdir(wobj) if f.endswith(".parquet")

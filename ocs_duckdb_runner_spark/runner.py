@@ -10,10 +10,12 @@ Reference behavior being reproduced (/root/reference/runner.cc):
 - R10 deterministic seed-1 shuffle of the source list (runner.cc:392).
 - R11/R12 I/O accounting: MonitoredFileSystem counted read_ops/read_bytes
       per S3 handle (runner.cc:56-172) and merged per-task stats under a
-      mutex (runner.cc:288-307). Here: Spark task inputMetrics, read per
-      job group from the monitoring REST API once, after a listener-bus
-      barrier (read-op counts have no exact Spark analog — reported as the
-      task count alongside bytes, as documented in SURVEY.md §2a R11).
+      mutex (runner.cc:288-307). Here: a SparkListener in the driver JVM
+      (sources/loopback_s3/FanoutIOListener.java) sums task inputMetrics
+      per job group and hands this run's sums over in one call, after a
+      listener-bus barrier; read ops are the Hadoop FS readOps counters
+      where the FS keeps them (s3a), else the scan-task count alongside
+      bytes, as documented in SURVEY.md §2a R11.
 - R13 wall-clock + report to stderr (runner.cc:334-359, time.h:40-46).
 - R14 per-task error isolation: failed file logged, run continues
       (runner.cc:293-297).
@@ -28,13 +30,11 @@ from __future__ import annotations
 
 import argparse
 import itertools
-import json
 import os
 import random
 import sys
 import threading
 import time
-import urllib.request
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -138,89 +138,63 @@ def flagship_on_file(spark: SparkSession, path: str) -> DataFrame:
         return _FRAME_CACHE[key]
 
 
-def _fs_read_ops(spark: SparkSession) -> int:
-    """Total filesystem read operations across all Hadoop FileSystem
-    schemes — the analog of the reference's per-handle ranged-read counter
-    (runner.cc:89,109-117, reported at runner.cc:348). Spark's scan path
-    goes through the Hadoop FS API, whose global statistics count every
-    positioned/streamed read; in local mode (like the reference's single
-    process) driver and executors share one JVM, so the counter covers the
-    whole run. ``getGlobalStorageStatistics`` is public Hadoop API, so a
-    failure raises instead of reading as zero reads."""
-    jvm = spark.sparkContext._jvm
-    total = 0
-    it = jvm.org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics().iterator()
-    while it.hasNext():
-        v = it.next().getLong("readOps")
-        total += int(v) if v is not None else 0
-    return total
+_IO_LISTENER_LOCK = threading.Lock()
 
 
-def _rest_group_metrics(
-    spark: SparkSession, token: str
-) -> dict[str, tuple[int, int, int]]:
-    """jobGroup → (inputBytes, inputRecords, scanTasks) summed over each
-    job's completed stages, for job groups of THIS run (prefix `token`),
-    from the monitoring REST API. The per-file analog of the reference's
-    per-handle ReadStats (runner.cc:49-54): each fan-out file runs under
-    its own job group, so grouping stage input metrics by job group
-    recovers a per-source split.
+def _io_listener(spark: SparkSession):
+    """This SparkContext's ``org.ocsspark.FanoutIOListener`` (see its
+    header comment), loaded and registered on first use. The class is
+    compiled into :func:`~ocs_duckdb_runner_spark.sources.loopback_s3.ensure_jar`'s
+    jar and loaded through a child class loader of Spark's own, so any
+    session can use it without classpath conf; where the jar is already on
+    the driver classpath (s3a via the loopback FS), the parent's copy
+    answers."""
+    sc = spark.sparkContext
+    with _IO_LISTENER_LOCK:
+        listener = getattr(sc, "_ocs_io_listener", None)
+        if listener is None:
+            from ocs_duckdb_runner_spark.sources.loopback_s3 import ensure_jar
 
-    Group-scoped on purpose: cumulative whole-app totals break in
-    long-lived sessions because the UI store EVICTS old stages past
-    spark.ui.retainedStages — a start/end delta then goes negative when
-    eviction outpaces new stages (observed once the test suite grew past
-    ~1000 stages). This run's own groups can't be evicted mid-run.
-    Raises when the endpoint is unreachable."""
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app}/stages?status=complete", timeout=5
-    ) as r:
-        stages = json.load(r)
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app}/jobs", timeout=5
-    ) as r:
-        jobs = json.load(r)
-    by_stage = {
-        s["stageId"]: (
-            s.get("inputBytes", 0),
-            s.get("inputRecords", 0),
-            s.get("numCompleteTasks", 0) if s.get("inputBytes", 0) > 0 else 0,
-        )
-        for s in stages
-    }
-    out: dict[str, tuple[int, int, int]] = {}
-    for j in jobs:
-        group = j.get("jobGroup")
-        if group is None or not group.startswith(token):
-            continue
-        b, rec, t = out.get(group, (0, 0, 0))
-        for sid in j.get("stageIds", []):
-            sb, sr, st = by_stage.get(sid, (0, 0, 0))
-            b, rec, t = b + sb, rec + sr, t + st
-        out[group] = (b, rec, t)
-    return out
+            jvm, gw = sc._jvm, sc._gateway
+            urls = gw.new_array(jvm.java.net.URL, 1)
+            urls[0] = jvm.java.io.File(ensure_jar()).toURI().toURL()
+            loader = jvm.java.net.URLClassLoader(
+                urls, sc._jsc.sc().getClass().getClassLoader()
+            )
+            cls = loader.loadClass("org.ocsspark.FanoutIOListener")
+            listener = cls.getConstructor(gw.new_array(jvm.Class, 0)).newInstance(
+                gw.new_array(jvm.Object, 0)
+            )
+            sc._jsc.sc().addSparkListener(listener)
+            sc._ocs_io_listener = listener
+        return listener
 
 
 def _settled_group_metrics(
-    spark: SparkSession, token: str
-) -> dict[str, tuple[int, int, int]] | None:
-    """:func:`_rest_group_metrics` read once the listener bus, which
-    feeds the UI store asynchronously, is empty: the scheduler posts
-    every task, stage and job end before a job's result returns, so the
-    read is final. None, with a warning naming the cause, when the UI is
-    off, the bus does not drain or the read fails — never partial."""
-    sc = spark.sparkContext
+    spark: SparkSession, listener, token: str
+) -> dict[int, tuple[int, int, int]] | None:
+    """idx → (inputBytes, inputRecords, scanTasks) for the job groups
+    ``"{token}:{idx}"`` of this run — the per-file analog of the
+    reference's per-handle ReadStats (runner.cc:49-54) — taken from the
+    listener once the listener bus is empty: the scheduler posts every
+    task, stage and job end before a job's result returns, so the sums
+    are final. The take runs whatever happens, so the listener forgets
+    the run. None, with a warning naming the cause, when the bus does not
+    drain or the take fails — never partial."""
     try:
-        if sc.uiWebUrl is None:
-            raise RuntimeError("spark.ui.enabled=false")
-        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # ms
-        return _rest_group_metrics(spark, token)
+        try:
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # ms
+        finally:
+            taken = listener.take(token)
     except Exception as ex:  # noqa: BLE001  reported as null, cause named
         cause = getattr(ex, "java_exception", ex)  # Py4J: the Java exception
         print(f"warning: I/O metrics reported as null: {cause}", file=sys.stderr)
         return None
+    out: dict[int, tuple[int, int, int]] = {}
+    for line in taken.splitlines():
+        idx, b, rec, t = map(int, line.split())
+        out[idx] = (b, rec, t)
+    return out
 
 
 class FanoutRunner:
@@ -243,7 +217,7 @@ class FanoutRunner:
         self.spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", f"fanout-{idx % self.threads}"
         )
-        # one job group per FILE → the REST metrics can split bytes per
+        # one job group per FILE → the I/O listener can split bytes per
         # source, the analog of the reference's per-handle ReadStats
         self.spark.sparkContext.setLocalProperty(
             "spark.jobGroup.id", f"{token}:{idx}"
@@ -259,60 +233,66 @@ class FanoutRunner:
     def run(self, sources: list[str]) -> dict:
         """Fan the per-object query out over ``sources``: a wave builds
         each frame once, the j-wide pool executes them (one job group per
-        file), and one settled REST read gives the I/O metrics."""
-        # job-group prefix unique to THIS run: _rest_group_metrics sums
-        # every group starting with it, so a prefix shared across runs
-        # would count a reused runner's earlier runs too
+        file), and one take from the in-JVM listener gives the I/O
+        metrics."""
+        # token unique to THIS run: the listener accounts exactly the
+        # groups "{token}:{idx}" between begin and take
         token = f"fanout-{os.getpid()}-{next(self._RUN_SEQ)}"
         # deterministic load-balancing shuffle, seed 1 (runner.cc:392)
         sources = list(sources)
         random.Random(1).shuffle(sources)
-        ops0 = _fs_read_ops(self.spark)
+        listener = _io_listener(self.spark)
+        ops0 = listener.readOps()
         total_hits = 0
         failures: list[str] = []
         per_file: dict[str, int] = {}
-        t0 = time.monotonic()
-        # Analysis wave: build every source's frame concurrently BEFORE
-        # queueing executions. Analysis is driver-side Catalyst work
-        # (footer read + resolution, ~90 ms/object, GIL-released in the
-        # JVM); inside the j-limited pool it serializes into the execution
-        # critical path. As one wide wave the cold wall is max(analysis) +
-        # exec waves — the reference pays the same per-object open+parse
-        # inside its pool tasks (runner.cc:197-218), so the wave stays
-        # inside the timed window. A failed build keeps its exception for
-        # the pool task to re-raise (R14). Width is bounded, and at least
-        # 1 so an empty source list gives an empty report.
-        wave = max(1, min(len(sources), max(self.threads, 16)))
+        listener.begin(token)
+        try:
+            t0 = time.monotonic()
+            # Analysis wave: build every source's frame concurrently BEFORE
+            # queueing executions. Analysis is driver-side Catalyst work
+            # (footer read + resolution, ~90 ms/object, GIL-released in the
+            # JVM); inside the j-limited pool it serializes into the execution
+            # critical path. As one wide wave the cold wall is max(analysis) +
+            # exec waves — the reference pays the same per-object open+parse
+            # inside its pool tasks (runner.cc:197-218), so the wave stays
+            # inside the timed window. A failed build keeps its exception for
+            # the pool task to re-raise (R14). Width is bounded, and at least
+            # 1 so an empty source list gives an empty report.
+            wave = max(1, min(len(sources), max(self.threads, 16)))
 
-        def _build(p: str) -> DataFrame | Exception:
-            try:
-                return flagship_on_file(self.spark, p)
-            except Exception as ex:  # noqa: BLE001  re-raised in the pool
-                return ex
-
-        with ThreadPoolExecutor(max_workers=wave) as prepool:
-            frames = list(prepool.map(_build, sources))
-        with ThreadPoolExecutor(max_workers=self.threads) as pool:
-            futs = [
-                pool.submit(self._run_one, token, i, frame)
-                for i, frame in enumerate(frames)
-            ]
-            for path, fut in zip(sources, futs):
+            def _build(p: str) -> DataFrame | Exception:
                 try:
-                    hits = fut.result()
-                    per_file[path] = hits
-                    total_hits += hits
-                except Exception as ex:  # noqa: BLE001  per-task isolation (R14)
-                    cause = getattr(ex, "java_exception", ex)  # Py4J: one line
-                    failures.append(str(cause))
-                    print(f"error: {cause}", file=sys.stderr)
-        wall = time.monotonic() - t0
-        gm = _settled_group_metrics(self.spark, token)
+                    return flagship_on_file(self.spark, p)
+                except Exception as ex:  # noqa: BLE001  re-raised in the pool
+                    return ex
+
+            with ThreadPoolExecutor(max_workers=wave) as prepool:
+                frames = list(prepool.map(_build, sources))
+            with ThreadPoolExecutor(max_workers=self.threads) as pool:
+                futs = [
+                    pool.submit(self._run_one, token, i, frame)
+                    for i, frame in enumerate(frames)
+                ]
+                for path, fut in zip(sources, futs):
+                    try:
+                        hits = fut.result()
+                        per_file[path] = hits
+                        total_hits += hits
+                    except Exception as ex:  # noqa: BLE001  per-task isolation (R14)
+                        cause = getattr(ex, "java_exception", ex)  # Py4J: one line
+                        failures.append(str(cause))
+                        print(f"error: {cause}", file=sys.stderr)
+            wall = time.monotonic() - t0
+        finally:
+            # also when the run raises: the take makes the listener
+            # forget the run
+            gm = _settled_group_metrics(self.spark, listener, token)
         # filesystem-level ranged-read count when the FS tracks it (s3a —
         # the reference's deployment, runner.cc:89); per-split scan-task
         # count as the local-FS approximation (RawLocalFileSystem never
         # increments readOps)
-        fs_ops = _fs_read_ops(self.spark) - ops0
+        fs_ops = listener.readOps() - ops0
         if gm is None:
             # no metrics source: report the absence as null, never as 0
             # (ADVICE r2: zeros read as measurements)
@@ -324,7 +304,7 @@ class FanoutRunner:
             scan_tasks = sum(t for _, _, t in gm.values())
             read_ops = fs_ops if fs_ops > 0 else scan_tasks
             per_file_bytes = {
-                p: gm.get(f"{token}:{i}", (0, 0, 0))[0]
+                p: gm.get(i, (0, 0, 0))[0]
                 for i, p in enumerate(sources)
             }
         report = {
@@ -491,10 +471,7 @@ def main(argv: list[str] | None = None) -> int:
         if not sources:
             print("no sources on stdin", file=sys.stderr)
             return 2
-    extra_conf = {
-        "spark.scheduler.mode": "FAIR",
-        "spark.ui.enabled": "true",  # REST metrics source (R11)
-    }
+    extra_conf = {"spark.scheduler.mode": "FAIR"}
     loopback_srv = None
     loopback_root = None
     if args.via_loopback:

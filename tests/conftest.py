@@ -48,8 +48,8 @@ def spark():
     s = build_spark(
         app_name="ocs-duckdb-runner-spark-tests",
         shuffle_partitions=8,
-        # UI on: the fan-out runner's byte/read-op accounting reads the
-        # monitoring REST API (R11) — tests pin it, so the source must be up
+        # UI on: tests/test_runner_once.py cross-checks the fan-out's
+        # listener-based I/O report against the monitoring REST API
         extra_conf={"spark.ui.enabled": "true"},
     )
     yield s

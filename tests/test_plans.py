@@ -73,11 +73,11 @@ def test_fanout_object_query_is_one_shuffle_free_stage(spark):
     ):
         assert pred in formatted.split("PushedFilters: ")[1].splitlines()[0]
 
-    real = runner._rest_group_metrics
-    with mock.patch.object(runner, "_rest_group_metrics", wraps=real) as read:
+    real = runner._settled_group_metrics
+    with mock.patch.object(runner, "_settled_group_metrics", wraps=real) as read:
         rep = runner.FanoutRunner(spark, threads=4).run(files)
     assert rep["failures"] == 0
-    token = read.call_args.args[1]
+    token = read.call_args.args[2]
     tracker = spark.sparkContext.statusTracker()
     stages = {
         i: sum(

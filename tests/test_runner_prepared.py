@@ -31,12 +31,12 @@ def _recording_build(built: list):
 
 def _traced_run(spark, files, threads=4):
     """One run, plus the frames it executed and its stages per source."""
-    real_read = runner._rest_group_metrics
+    real = runner._settled_group_metrics
     built: list = []
     with _recording_build(built), \
-            mock.patch.object(runner, "_rest_group_metrics", wraps=real_read) as read:
+            mock.patch.object(runner, "_settled_group_metrics", wraps=real) as read:
         rep = FanoutRunner(spark, threads=threads).run(files)
-    token = read.call_args.args[1]
+    token = read.call_args.args[2]
     tracker = spark.sparkContext.statusTracker()
     stages = [
         sum(

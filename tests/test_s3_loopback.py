@@ -20,6 +20,7 @@ import subprocess
 import sys
 import urllib.request
 from pathlib import Path
+from unittest import mock
 
 import pytest
 
@@ -206,3 +207,72 @@ def test_last_modified_is_the_objects_mtime(tmp_path):
         obj.write_bytes(b"b" * 4096)  # same length, later mtime
         os.utime(obj, (1_700_000_042, 1_700_000_042))
         assert _stamps(srv) == [1_700_000_042, 1_700_000_042]
+
+
+def test_ensure_jar_compiles_under_c_locale(tmp_path):
+    """The sources carry UTF-8 text: under LC_ALL=C javac must still read
+    them as UTF-8, and the jar carries every class."""
+    import os
+    import zipfile
+
+    code = (
+        "import sys\n"
+        "from pathlib import Path\n"
+        "from ocs_duckdb_runner_spark.sources import loopback_s3\n"
+        "loopback_s3._BUILD = Path(sys.argv[1])\n"
+        "print(loopback_s3.ensure_jar())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if not k.startswith("LC_")}
+    env.update(LC_ALL="C", LANG="C", PYTHONPATH=str(REPO))
+    env.pop("JAVA_TOOL_OPTIONS", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", code, str(tmp_path / "build")],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=REPO,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    with zipfile.ZipFile(proc.stdout.strip()) as zf:
+        names = set(zf.namelist())
+    assert {
+        "org/ocsspark/LoopbackS3AFileSystem.class",
+        "org/ocsspark/FanoutIOListener.class",
+    } <= names
+
+
+def test_ensure_jar_rebuilds_when_any_source_changes(tmp_path, monkeypatch):
+    """javac runs once per version of the sources: a second call reuses
+    the jar, while an edit to any source or a jar that other code wrote in
+    its place compiles again, and a failed compile raises with javac's own
+    message."""
+    import zipfile
+
+    from ocs_duckdb_runner_spark.sources import loopback_s3
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for java in loopback_s3._SRC_DIR.glob("*.java"):
+        shutil.copyfile(java, src / java.name)
+    monkeypatch.setattr(loopback_s3, "_SRC_DIR", src)
+    monkeypatch.setattr(loopback_s3, "_BUILD", tmp_path / "build")
+    real = subprocess.run
+    with mock.patch.object(loopback_s3.subprocess, "run", wraps=real) as javac:
+        jar = loopback_s3.ensure_jar()
+        assert loopback_s3.ensure_jar() == jar
+        assert javac.call_count == 1
+        listener = src / "FanoutIOListener.java"
+        listener.write_text(listener.read_text() + "\n// edited\n")
+        assert loopback_s3.ensure_jar() == jar
+        assert javac.call_count == 2
+        with zipfile.ZipFile(jar, "w") as zf:  # an older build's jar, unstamped
+            zf.writestr("org/ocsspark/LoopbackS3AFileSystem.class", b"")
+        assert loopback_s3.ensure_jar() == jar
+        assert javac.call_count == 3
+        with zipfile.ZipFile(jar) as zf:
+            assert "org/ocsspark/FanoutIOListener.class" in zf.namelist()
+        listener.write_text(listener.read_text() + "not java\n")
+        with pytest.raises(RuntimeError, match="FanoutIOListener.java"):
+            loopback_s3.ensure_jar()
+    assert not list((tmp_path / "build").glob("tmp*"))  # no half-built leftovers

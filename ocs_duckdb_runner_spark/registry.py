@@ -207,25 +207,18 @@ def release_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def fixture_fingerprint(
-    sf_dir: str, table: str | tuple[str, ...] | None = None
-) -> str:
-    """Cheap content fingerprint — file names, sizes, mtimes; no data
-    read — of one table's files, a tuple of tables' files, or every table
-    in the fixture dir when ``table`` is None. Every on-disk cache DERIVED
-    from the fixtures must carry this in its key: a cache keyed by sf_dir
-    path alone goes silently stale the moment a probe rebuilds its
+DERIVED_ROOT = "/tmp/ocs_derived"
+
+
+def fixture_fingerprint(sf_dir: str) -> str:
+    """Cheap content fingerprint of the whole fixture dir — every table's
+    file names, sizes and mtimes; no data read — as 12 hex chars. It keys
+    every directory :func:`derived` builds: a derived copy keyed by the
+    sf_dir path alone goes silently stale the moment a probe rebuilds its
     fixtures in place (the r8 10x finding: stream_incremental_mv's 4-way
     split source predated the events striking and the MV summed a
     100k-row copy against a 1M-row oracle — exactly 10x off, caught only
-    because the query is oracle-checked).
-
-    Always 12 hex chars, whatever the table set — cache keys built from
-    this compose as ``tag_<12hex>`` and stay matchable by
-    ``vacuum_cache_siblings``'s generation regex (ADVICE r9: the bucketed
-    cache concatenated two fingerprints into an 18-hex suffix the vacuum
-    never matched, so stale bucketed generations leaked under /tmp
-    forever)."""
+    because the query is oracle-checked)."""
     import hashlib
 
     h = hashlib.md5()
@@ -243,13 +236,7 @@ def fixture_fingerprint(
             st = os.stat(path)
             h.update(f"{path}:{st.st_size}:{st.st_mtime_ns};".encode())
 
-    if table is None:
-        names: tuple[str, ...] = TABLES
-    elif isinstance(table, str):
-        names = (table,)
-    else:
-        names = tuple(table)
-    for t in names:
+    for t in TABLES:
         _add(f"{sf_dir}/{t}.parquet")
     return h.hexdigest()[:12]
 
@@ -259,30 +246,71 @@ def vacuum_cache_siblings(parent: str, tag: str, keep: str) -> None:
     every entry under ``parent`` that is the bare ``tag`` (the
     pre-fingerprint layout) or ``tag_<other-fingerprint>``, except
     ``keep``. Without this, every in-place fixture rebuild leaks a full
-    derived copy (split objects, round-trip fixtures, stream splits)
-    under /tmp forever.
+    derived copy under /tmp forever.
 
-    Sibling matching is anchored to the hex fingerprint suffix, NOT a
+    Sibling matching is anchored to the 12-hex fingerprint suffix, NOT a
     bare prefix: tags can extend each other (``sf0.1`` vs ``sf0.1_alt``),
     and a prefix match would let the shorter tag's vacuum delete the
     longer tag's perfectly valid cache generation, forcing spurious
-    rebuilds. The suffix width is 12-18 hex: current keys are always 12
-    (fixture_fingerprint's contract), but r9's bucketed cache
-    concatenated two fingerprints into an 18-hex suffix the exact-12
-    pattern never matched (ADVICE r10) — the wider match reclaims those
-    already-leaked generations while staying anchored (an extending tag's
-    ``_alt_...`` suffix contains non-hex characters and can't match)."""
+    rebuilds."""
     import re
     import shutil
 
     if not os.path.isdir(parent):
         return
-    gen = re.compile(re.escape(tag) + r"_[0-9a-f]{12,18}$")
+    gen = re.compile(re.escape(tag) + r"_[0-9a-f]{12}$")
     for name in os.listdir(parent):
         if name == keep:
             continue
         if name == tag or gen.fullmatch(name):
             shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+
+
+def derived_path(sf_dir: str, name: str) -> str:
+    """Where :func:`derived` publishes ``name`` for ``sf_dir``:
+    ``DERIVED_ROOT/<tag>_<fingerprint>/<name>``, one generation dir per
+    fixture content. Pure — no Spark, nothing written — so a caller can
+    know the path before the JVM starts (the runner CLI's loopback root)."""
+    tag = sf_dir.strip("/").replace("/", "_")
+    return f"{DERIVED_ROOT}/{tag}_{fixture_fingerprint(sf_dir)}/{name}"
+
+
+def publish_once(out: str, build: Callable[[str], None]) -> str:
+    """Run ``build`` on a private sibling of ``out`` and publish it with
+    one rename, so ``out`` existing means its build completed. A
+    concurrent builder that published first wins and this copy is
+    dropped; a build that raises leaves nothing behind."""
+    import shutil
+    import uuid
+
+    if os.path.exists(out):
+        return out
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    tmp = f"{out}.tmp-{uuid.uuid4().hex}"
+    try:
+        build(tmp)
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            if not os.path.isdir(out):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
+def derived(sf_dir: str, name: str, build: Callable[[str], None]) -> str:
+    """The one way to materialize data derived from the fixtures (format
+    round-trips, layouts, split objects and stream sources): returns
+    :func:`derived_path`, calling ``build(tmp)`` through
+    :func:`publish_once` first if it is missing. A miss also vacuums the
+    superseded generations of sf_dir's tag."""
+    out = derived_path(sf_dir, name)
+    if not os.path.exists(out):
+        gen = os.path.basename(os.path.dirname(out))
+        vacuum_cache_siblings(DERIVED_ROOT, gen.rsplit("_", 1)[0], gen)
+        publish_once(out, build)
+    return out
 
 
 def events_schema(ts_type: T.DataType) -> T.StructType:

@@ -39,7 +39,13 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ocs_duckdb_runner_spark.registry import load_table, query
+from ocs_duckdb_runner_spark.registry import (
+    derived,
+    derived_path,
+    load_table,
+    publish_once,
+    query,
+)
 from ocs_duckdb_runner_spark.session import file_version
 
 
@@ -343,46 +349,32 @@ class FanoutRunner:
 
 
 def split_objects_path(sf_dir: str, n: int = 8) -> str:
-    """Deterministic location of the split-object layout for sf_dir —
-    computable WITHOUT a SparkSession (the --via-loopback server must know
-    its root before the JVM starts, since the s3a endpoint conf is fixed
-    at session build). The key carries a content fingerprint of the
-    lineitem fixture the objects are split from: path-keyed derived
-    caches go stale when a probe rebuilds its fixtures in place (see
-    registry.fixture_fingerprint)."""
-    from ocs_duckdb_runner_spark.registry import fixture_fingerprint
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    return (
-        f"/tmp/ocs_fanout_objects/{tag}_{n}_"
-        f"{fixture_fingerprint(sf_dir, 'lineitem')}"
-    )
+    """Location of the split-object layout for sf_dir — computable
+    WITHOUT a SparkSession (the --via-loopback server must know its root
+    before the JVM starts, since the s3a endpoint conf is fixed at session
+    build)."""
+    return derived_path(sf_dir, f"fanout_{n}")
 
 
 def split_objects(
     spark: SparkSession, sf_dir: str, n: int = 8, out: str | None = None
 ) -> str:
     """Materialize lineitem as n independent parquet objects (the
-    reference's many-objects-on-S3 layout, README.md:56) under /tmp,
-    keyed by sf_dir + content fingerprint — created once, reused across
-    runs. Pass a precomputed ``out`` when the location was pinned
-    earlier in the process (the --via-loopback server root is computed
-    before the JVM starts; recomputing here could diverge if the fixture
-    were touched in between). Superseded fingerprint generations for the
-    same sf_dir are vacuumed on materialize — each rebuild would
-    otherwise leak a full split copy under /tmp."""
-    from ocs_duckdb_runner_spark.registry import vacuum_cache_siblings
+    reference's many-objects-on-S3 layout, README.md:56) directly in one
+    directory, created once and reused: by default the derived
+    :func:`split_objects_path`. Pass a precomputed ``out`` when the
+    location was pinned earlier (the --via-loopback server root is
+    computed before the JVM starts; recomputing here could diverge if the
+    fixture were touched in between); ``out`` is published the same way,
+    with one rename after a private build."""
 
-    out = out or split_objects_path(sf_dir, n)
-    marker = f"{out}/_SUCCESS"
-    if not os.path.exists(marker):
-        tag = sf_dir.strip("/").replace("/", "_")
-        vacuum_cache_siblings(
-            "/tmp/ocs_fanout_objects", f"{tag}_{n}", os.path.basename(out)
-        )
+    def build(tmp: str) -> None:
         li = load_table(spark, sf_dir, "lineitem")
-        li.repartition(n, "l_orderkey").write.mode("overwrite").parquet(out)
-    return out
+        li.repartition(n, "l_orderkey").write.parquet(tmp)
+
+    if out is None:
+        return derived(sf_dir, f"fanout_{n}", build)
+    return publish_once(out, build)
 
 
 @query("runner_fanout", oracle=None, tags=("runner", "reference"))
@@ -483,9 +475,9 @@ def main(argv: list[str] | None = None) -> int:
         if args.split_sf_dir:
             # the split layout's path is deterministic; the server can
             # start over it before the objects exist (requests only
-            # arrive after split_objects writes them)
+            # arrive after split_objects publishes them). Not created
+            # here: an existing directory reads as a complete split.
             loopback_root = split_objects_path(args.split_sf_dir, args.split_n)
-            os.makedirs(loopback_root, exist_ok=True)
         else:
             local = [s for s in sources if "://" not in s]
             if len(local) != len(sources):

@@ -9,21 +9,23 @@ explicit schema (never inferSchema in production paths), and let the DuckDB
 oracle compare the result against the original parquet — i.e. the check is
 "the format round-trip loses nothing".
 
-Sink files are materialized once per (format, sf) under /tmp and reused.
+Every written fixture here (format copies, layouts, versioned tables) is
+derived data: built once per fixture content through ``registry.derived``
+— a private build published with one rename, so a directory that exists
+is complete — and reused by every later call.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ocs_duckdb_runner_spark.exactness import fx_sum, sql_fx_sum
-from ocs_duckdb_runner_spark.registry import load_table, query
-
-_CACHE_ROOT = "/tmp/ocs_source_cache"
+from ocs_duckdb_runner_spark.registry import derived, derived_path, load_table, query
 
 _ORDERS_COLS = [
     "o_orderkey",
@@ -48,34 +50,21 @@ _ORDERS_ORACLE = """
 """
 
 
-def _roundtrip_dir(sf_dir: str, fmt: str) -> str:
-    """Location of a derived source/sink fixture. The key carries a
-    content fingerprint of the WHOLE fixture dir (different formats
-    derive from different tables — orders, documents, lineitem — so the
-    coarse whole-dir print trades a little over-invalidation for never
-    serving a stale derived fixture after a probe rebuilds in place; see
-    registry.fixture_fingerprint). First sight of a new fingerprint
-    vacuums the superseded generations, or every rebuild would leak a
-    full derived copy."""
-    from ocs_duckdb_runner_spark.registry import (
-        fixture_fingerprint,
-        vacuum_cache_siblings,
-    )
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = f"{tag}_{fixture_fingerprint(sf_dir)}"
-    if not os.path.isdir(f"{_CACHE_ROOT}/{root}"):
-        vacuum_cache_siblings(_CACHE_ROOT, tag, root)
-    return f"{_CACHE_ROOT}/{root}/{fmt}"
-
-
-def _write_once(df: DataFrame, out: str, fmt: str, **options) -> None:
-    if not os.path.exists(f"{out}/_SUCCESS"):
-        df.write.mode("overwrite").options(**options).format(fmt).save(out)
-
-
 def _orders_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "orders").select(*_ORDERS_COLS)
+
+
+def _parquet_part_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The orders projection as Hive-partitioned parquet on o_orderstatus:
+    the fact layout shared by sink_partitioned_parquet and
+    join_dpp_partitioned."""
+    return derived(
+        sf_dir,
+        "parquet_part",
+        lambda tmp: _orders_projection(spark, sf_dir)
+        .write.partitionBy("o_orderstatus")
+        .parquet(tmp),
+    )
 
 
 @query("src_csv_roundtrip", oracle=_ORDERS_ORACLE, tags=("source", "csv"))
@@ -83,16 +72,22 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → CSV sink → CSV source (explicit schema, header) — the
     oracle compares against the original parquet, so a pass proves the
     CSV writer/reader pair is lossless for these types."""
-    out = _roundtrip_dir(sf_dir, "csv")
-    _write_once(_orders_projection(spark, sf_dir), out, "csv", header="true")
+    out = derived(
+        sf_dir,
+        "csv",
+        lambda tmp: _orders_projection(spark, sf_dir)
+        .write.option("header", "true")
+        .csv(tmp),
+    )
     return spark.read.schema(_ORDERS_SCHEMA).option("header", "true").csv(out)
 
 
 @query("src_json_roundtrip", oracle=_ORDERS_ORACLE, tags=("source", "json"))
 def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → JSON-lines sink → JSON source with explicit schema."""
-    out = _roundtrip_dir(sf_dir, "json")
-    _write_once(_orders_projection(spark, sf_dir), out, "json")
+    out = derived(
+        sf_dir, "json", lambda tmp: _orders_projection(spark, sf_dir).write.json(tmp)
+    )
     return spark.read.schema(_ORDERS_SCHEMA).json(out)
 
 
@@ -100,8 +95,9 @@ def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → ORC sink → ORC source (columnar alternative to parquet;
     schema from the ORC footer, vectorized reader)."""
-    out = _roundtrip_dir(sf_dir, "orc")
-    _write_once(_orders_projection(spark, sf_dir), out, "orc")
+    out = derived(
+        sf_dir, "orc", lambda tmp: _orders_projection(spark, sf_dir).write.orc(tmp)
+    )
     return spark.read.orc(out)
 
 
@@ -118,11 +114,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style partitioned parquet sink (partitionBy o_orderstatus) read
     back with partition pruning available — the layout a 100 TB fact table
     actually ships with; per-partition counts must survive the round trip."""
-    out = _roundtrip_dir(sf_dir, "parquet_part")
-    df = _orders_projection(spark, sf_dir)
-    if not os.path.exists(f"{out}/_SUCCESS"):
-        df.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    back = spark.read.parquet(out)
+    back = spark.read.parquet(_parquet_part_dir(spark, sf_dir))
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("o_orderkey").alias("n_keys"),
@@ -151,39 +143,25 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the same key repeatedly: pay the shuffle once at write time, never
     at read time (tests/test_plans.py pins the exchange-free plan).
     Results are layout-independent — the oracle is the plain join."""
-    from ocs_duckdb_runner_spark.registry import (
-        fixture_fingerprint,
-        vacuum_cache_siblings,
-    )
-
-    # the bucketed copies are fixture-DERIVED: key the table names and
-    # paths by content fingerprint like every other derived cache, or a
-    # probe rebuilding its fixtures in place would leave tableExists true
-    # for tables bucketed from the STALE data. One combined 12-hex
-    # fingerprint over BOTH tables — not two concatenated ones — so the
-    # key shape stays tag_<12hex> and vacuum_cache_siblings's generation
-    # regex can reclaim superseded generations (ADVICE r9: the 18-hex
-    # suffix never matched and stale bucketed caches leaked forever)
-    base_tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    tag = base_tag + "_" + fixture_fingerprint(sf_dir, ("orders", "customer"))
-    if not os.path.isdir(f"{_CACHE_ROOT}/{tag}"):
-        vacuum_cache_siblings(_CACHE_ROOT, base_tag, tag)
-    specs = [
-        ("orders", "o_custkey", f"orders_bkt_{tag}"),
-        ("customer", "c_custkey", f"customer_bkt_{tag}"),
-    ]
-    for table, key, name in specs:
+    names = []
+    for table, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
+        # bucketBy writes only through saveAsTable, so the session catalog
+        # is the completion check here; the table name carries the
+        # derived generation, so a fixture rebuilt in place gets new tables
+        path = derived_path(sf_dir, f"{table}_bkt")
+        gen = os.path.basename(os.path.dirname(path))
+        name = re.sub(r"\W", "_", f"{table}_bkt_{gen}")
         if not spark.catalog.tableExists(name):
             (
                 load_table(spark, sf_dir, table)
                 .write.mode("overwrite")
-                .option("path", f"{_CACHE_ROOT}/{tag}/bucketed/{name}")
+                .option("path", path)
                 .bucketBy(8, key)
                 .sortBy(key)
                 .saveAsTable(name)
             )
-    o = spark.table(specs[0][2])
-    c = spark.table(specs[1][2])
+        names.append(name)
+    o, c = spark.table(names[0]), spark.table(names[1])
     # hint("merge"): force the sort-merge path so the plan demonstrates the
     # exchange-free bucketed join even though customer would broadcast
     return (
@@ -219,21 +197,21 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     unions the footers; rows surface NULL for columns their batch never
     had, which the oracle reproduces with explicit NULL padding. (Merge
     happens at planning from footers only — no data pass.)"""
-    out = _roundtrip_dir(sf_dir, "parquet_evolve")
-    o = load_table(spark, sf_dir, "orders")
-    if not os.path.exists(f"{out}/batch=1/_SUCCESS"):
+
+    def build(tmp: str) -> None:
+        o = load_table(spark, sf_dir, "orders")
         (
             o.filter(F.col("o_orderkey") % 2 == 0)
             .select("o_orderkey", "o_custkey", "o_totalprice")
-            .write.mode("overwrite")
-            .parquet(f"{out}/batch=1")
+            .write.parquet(f"{tmp}/batch=1")
         )
         (
             o.filter(F.col("o_orderkey") % 2 == 1)
             .select("o_orderkey", "o_custkey", "o_orderpriority")
-            .write.mode("overwrite")
-            .parquet(f"{out}/batch=2")
+            .write.parquet(f"{tmp}/batch=2")
         )
+
+    out = derived(sf_dir, "parquet_evolve", build)
     return (
         spark.read.option("mergeSchema", "true")
         .parquet(f"{out}/batch=1", f"{out}/batch=2")
@@ -246,8 +224,8 @@ def _textlines_dir(spark: SparkSession, sf_dir: str) -> str:
     shared fixture for the text-source and binary-source queries. A single
     sorted file makes the file CONTENT a pure function of the table, so
     even the binary read is oracle-checkable from the shared view."""
-    out = _roundtrip_dir(sf_dir, "textlines")
-    if not os.path.exists(f"{out}/_SUCCESS"):
+
+    def build(tmp: str) -> None:
         d = load_table(spark, sf_dir, "documents")
         (
             d.select(
@@ -259,10 +237,10 @@ def _textlines_dir(spark: SparkSession, sf_dir: str) -> str:
             .coalesce(1)
             .sortWithinPartitions("doc_id")
             .select("line")
-            .write.mode("overwrite")
-            .text(out)
+            .write.text(tmp)
         )
-    return out
+
+    return derived(sf_dir, "textlines", build)
 
 
 @query(
@@ -367,18 +345,18 @@ def zorder_dir(spark: SparkSession, sf_dir: str) -> str:
     into _Z_FILES files, sorted within each) — done once per sf_dir.
     At 100 TB this is the nightly OPTIMIZE/cluster job; the write is one
     range shuffle and the sort is within-partition."""
-    out = _roundtrip_dir(sf_dir, "zorder")
-    if not os.path.exists(f"{out}/_SUCCESS"):
-        li = load_table(spark, sf_dir, "lineitem")
+
+    def build(tmp: str) -> None:
         (
-            li.withColumn("zval", _zvalue())
+            load_table(spark, sf_dir, "lineitem")
+            .withColumn("zval", _zvalue())
             .repartitionByRange(_Z_FILES, "zval")
             .sortWithinPartitions("zval")
             .drop("zval")
-            .write.mode("overwrite")
-            .parquet(out)
+            .write.parquet(tmp)
         )
-    return out
+
+    return derived(sf_dir, "zorder", build)
 
 
 @query(
@@ -449,21 +427,21 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanning all N — and it needs no hint, only the partitioned layout +
     equi-join. The plan shape (dynamicpruning#N in the scan's
     PartitionFilters) is pinned in tests/test_plans.py."""
-    out = _roundtrip_dir(sf_dir, "parquet_part")
-    base = _orders_projection(spark, sf_dir)
-    if not os.path.exists(f"{out}/_SUCCESS"):
-        base.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    fact = spark.read.parquet(out)
+    fact = spark.read.parquet(_parquet_part_dir(spark, sf_dir))
     # the dim must be FILE-based with a real filter predicate: DPP's
     # insertion rule requires a selective predicate on the build side, and
     # a filtered LocalRelation constant-folds away before the
     # PartitionPruning optimizer batch ever sees it
-    dim_dir = _roundtrip_dir(sf_dir, "status_dim")
-    if not os.path.exists(f"{dim_dir}/_SUCCESS"):
-        spark.createDataFrame(
+    dim_dir = derived(
+        sf_dir,
+        "status_dim",
+        lambda tmp: spark.createDataFrame(
             [("F", "closed"), ("O", "open"), ("P", "pending")],
             "status string, label string",
-        ).coalesce(1).write.mode("overwrite").parquet(dim_dir)
+        )
+        .coalesce(1)
+        .write.parquet(tmp),
+    )
     dim = spark.read.parquet(dim_dir).filter(F.col("label") != "open")
     return (
         fact.join(dim, fact.o_orderstatus == dim.status)
@@ -501,13 +479,18 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original table, so a pass certifies the compaction lost and
     duplicated nothing; the before/after file counts are pinned by
     tests/test_zorder.py::test_compaction_reduces_files."""
-    li = load_table(spark, sf_dir, "lineitem")
-    frag = _roundtrip_dir(sf_dir, "frag64")
-    if not os.path.exists(f"{frag}/_SUCCESS"):
-        li.repartition(64).write.mode("overwrite").parquet(frag)
-    out = _roundtrip_dir(sf_dir, "compacted")
-    if not os.path.exists(f"{out}/_SUCCESS"):
-        spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(out)
+    frag = derived(
+        sf_dir,
+        "frag64",
+        lambda tmp: load_table(spark, sf_dir, "lineitem")
+        .repartition(64)
+        .write.parquet(tmp),
+    )
+    out = derived(
+        sf_dir,
+        "compacted",
+        lambda tmp: spark.read.parquet(frag).coalesce(4).write.parquet(tmp),
+    )
     c = spark.read.parquet(out)
     return c.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -518,6 +501,42 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---- versioned snapshots (transaction-log time travel) ----
+
+
+def _published_parts(tmp: str, base: str, sub: str) -> list[str]:
+    """The parquet parts a build wrote under ``tmp/sub``, named where they
+    live once ``tmp`` is published as ``base``: a manifest must name
+    files that exist after the rename."""
+    parts = [f for f in os.listdir(f"{tmp}/{sub}") if f.endswith(".parquet")]
+    return sorted(f"{base}/{sub}/{f}" for f in parts)
+
+
+def _write_manifest(path: str, doc: dict) -> None:
+    import json
+
+    with open(path, "w") as fh:
+        json.dump(doc, fh)
+
+
+def _versioned_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The versioned orders table: v0 = the open orders as data files,
+    v1 = v0's files plus the 'F' orders appended as NEW files, each
+    version a JSON manifest under ``_log`` naming its exact file list."""
+    base = derived_path(sf_dir, "versioned")
+
+    def build(tmp: str) -> None:
+        o = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        )
+        os.makedirs(f"{tmp}/_log")
+        o.filter(F.col("o_orderstatus") == "O").write.parquet(f"{tmp}/data/batch0")
+        v0_files = _published_parts(tmp, base, "data/batch0")
+        _write_manifest(f"{tmp}/_log/v0.json", {"version": 0, "files": v0_files})
+        o.filter(F.col("o_orderstatus") == "F").write.parquet(f"{tmp}/data/batch1")
+        v1_files = v0_files + _published_parts(tmp, base, "data/batch1")
+        _write_manifest(f"{tmp}/_log/v1.json", {"version": 1, "files": v1_files})
+
+    return derived(sf_dir, "versioned", build)
 
 
 @query(
@@ -554,28 +573,9 @@ def sink_versioned_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     the resolved file lists); the oracle states the equivalent logical
     content per version, so the manifest resolution itself is what is
     being checked."""
-    import glob
     import json as _json
 
-    base = _roundtrip_dir(sf_dir, "versioned")
-    data, logd = f"{base}/data", f"{base}/_log"
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    if not os.path.exists(f"{logd}/v1.json"):
-        os.makedirs(logd, exist_ok=True)
-        o.filter(F.col("o_orderstatus") == "O").write.mode("overwrite").parquet(
-            f"{data}/batch0"
-        )
-        v0_files = sorted(glob.glob(f"{data}/batch0/*.parquet"))
-        with open(f"{logd}/v0.json", "w") as fh:
-            _json.dump({"version": 0, "files": v0_files}, fh)
-        o.filter(F.col("o_orderstatus") == "F").write.mode("overwrite").parquet(
-            f"{data}/batch1"
-        )
-        v1_files = v0_files + sorted(glob.glob(f"{data}/batch1/*.parquet"))
-        with open(f"{logd}/v1.json", "w") as fh:
-            _json.dump({"version": 1, "files": v1_files}, fh)
+    logd = f"{_versioned_dir(spark, sf_dir)}/_log"
 
     def snapshot(version: int) -> DataFrame:
         with open(f"{logd}/v{version}.json") as fh:
@@ -629,20 +629,21 @@ def sink_stats_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY footers (KB per file at any scale)."""
     import pyarrow.parquet as _pq
 
-    out = _roundtrip_dir(sf_dir, "stats_manifest")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        (F.col("o_orderkey") % _MANIFEST_SHARDS).alias("shard"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_c"),
-    )
-    if not os.path.exists(f"{out}/_SUCCESS"):
+    def build(tmp: str) -> None:
         (
-            o.repartition(_MANIFEST_SHARDS, "shard")
+            load_table(spark, sf_dir, "orders")
+            .select(
+                "o_orderkey",
+                (F.col("o_orderkey") % _MANIFEST_SHARDS).alias("shard"),
+                F.round(F.col("o_totalprice") * 100).cast("long").alias("price_c"),
+            )
+            .repartition(_MANIFEST_SHARDS, "shard")
             .sortWithinPartitions("o_orderkey")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(out)
+            .write.partitionBy("shard")
+            .parquet(tmp)
         )
+
+    out = derived(sf_dir, "stats_manifest", build)
     import glob as _glob
 
     rows = []
@@ -697,11 +698,7 @@ def table_cdf_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationally (the 'F' batch appended at v1)."""
     import json as _json
 
-    base = _roundtrip_dir(sf_dir, "versioned")
-    logd = f"{base}/_log"
-    if not os.path.exists(f"{logd}/v1.json"):
-        # build the versioned table + manifests (idempotent)
-        sink_versioned_snapshot(spark, sf_dir).collect()
+    logd = f"{_versioned_dir(spark, sf_dir)}/_log"
     with open(f"{logd}/v0.json") as fh:
         v0 = set(_json.load(fh)["files"])
     with open(f"{logd}/v1.json") as fh:
@@ -742,21 +739,22 @@ def src_nested_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: write once (struct/array construction is codegen), inferred
     read samples the files once, then flattening is pure projection —
     no shuffle anywhere."""
-    out = _roundtrip_dir(sf_dir, "nested_json")
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 25 == 0)
-    doc = o.select(
-        "o_orderkey",
-        F.struct(
-            F.col("o_orderstatus").alias("status"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("price_c"),
-        ).alias("meta"),
-        F.array(
-            (F.col("o_orderkey") % 5).cast("long"),
-            (F.col("o_orderkey") % 7).cast("long"),
-        ).alias("tags"),
-    )
-    if not os.path.exists(f"{out}/_SUCCESS"):
-        doc.write.mode("overwrite").json(out)
+
+    def build(tmp: str) -> None:
+        o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 25 == 0)
+        o.select(
+            "o_orderkey",
+            F.struct(
+                F.col("o_orderstatus").alias("status"),
+                F.round(F.col("o_totalprice") * 100).cast("long").alias("price_c"),
+            ).alias("meta"),
+            F.array(
+                (F.col("o_orderkey") % 5).cast("long"),
+                (F.col("o_orderkey") % 7).cast("long"),
+            ).alias("tags"),
+        ).write.json(tmp)
+
+    out = derived(sf_dir, "nested_json", build)
     back = spark.read.json(out)  # schema inferred
     return back.select(
         "o_orderkey",
@@ -801,37 +799,25 @@ def sink_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import json as _json
 
-    base = _roundtrip_dir(sf_dir, "vacuum")
-    data, logd = f"{base}/data", f"{base}/_log"
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    ).filter(F.col("o_orderstatus") == "O")
-    if not os.path.exists(f"{logd}/vacuum.json"):
-        os.makedirs(logd, exist_ok=True)
-        o.repartition(4).write.mode("overwrite").parquet(f"{data}/b0")
-        v0_files = sorted(glob.glob(f"{data}/b0/*.parquet"))
-        with open(f"{logd}/v0.json", "w") as fh:
-            _json.dump({"version": 0, "files": v0_files}, fh)
-        spark.read.parquet(f"{data}/b0").coalesce(2).write.mode(
-            "overwrite"
-        ).parquet(f"{data}/b1")
-        v1_files = sorted(glob.glob(f"{data}/b1/*.parquet"))
-        with open(f"{logd}/v1.json", "w") as fh:
-            _json.dump({"version": 1, "files": v1_files}, fh)
+    base = derived_path(sf_dir, "vacuum")
+
+    def build(tmp: str) -> None:
+        o = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        ).filter(F.col("o_orderstatus") == "O")
+        os.makedirs(f"{tmp}/_log")
+        o.repartition(4).write.parquet(f"{tmp}/data/b0")
+        v0_files = _published_parts(tmp, base, "data/b0")
+        _write_manifest(f"{tmp}/_log/v0.json", {"version": 0, "files": v0_files})
+        spark.read.parquet(f"{tmp}/data/b0").coalesce(2).write.parquet(f"{tmp}/data/b1")
+        v1_files = _published_parts(tmp, base, "data/b1")
+        _write_manifest(f"{tmp}/_log/v1.json", {"version": 1, "files": v1_files})
         # vacuum: delete data files not referenced by the retained set
-        live = set(v1_files)
-        orphans = [
-            p
-            for p in glob.glob(f"{data}/*/*.parquet")
-            if p not in live
-        ]
-        for p in orphans:
-            os.remove(p)
-        with open(f"{logd}/vacuum.json", "w") as fh:
-            _json.dump(
-                {"n_files_live": len(live), "n_files_deleted": len(orphans)},
-                fh,
-            )
+        for p in set(v0_files) - set(v1_files):
+            os.remove(p.replace(base, tmp, 1))
+
+    derived(sf_dir, "vacuum", build)
+    data, logd = f"{base}/data", f"{base}/_log"
     with open(f"{logd}/v0.json") as fh:
         v0 = _json.load(fh)
     with open(f"{logd}/v1.json") as fh:

@@ -34,6 +34,7 @@ from ocs_duckdb_runner_spark.events.windows import (
 )
 from ocs_duckdb_runner_spark.exactness import fx_sum, sql_fx_sum
 from ocs_duckdb_runner_spark.registry import (
+    derived,
     events_schema,
     events_ts_to_timestamp,
     events_ts_type,
@@ -77,15 +78,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the listing down to the events file
         raw = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     return events_ts_to_timestamp(raw, ts_type)
-
-
-def _events_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of the events fixture, used to content-address
-    the derived split-source cache (see registry.fixture_fingerprint for
-    why path-keyed derived caches are a staleness hazard)."""
-    from ocs_duckdb_runner_spark.registry import fixture_fingerprint
-
-    return fixture_fingerprint(sf_dir, "events")
 
 
 def _stream_scratch(suffix: str = "", parent: str = "/tmp/ocs_stream_sink") -> str:
@@ -728,38 +720,24 @@ _CHANGELOG_CONF = (
 
 
 def _split_events_source(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Build (once per fixture content) a time-split two-part derived
-    events source: ``lo/`` holds every event at or below the min/max
-    midpoint timestamp, ``hi/`` the rest — so a stream that drains lo
-    first can never see hi rows fall behind the checkpointed watermark
-    (watermark after lo = max(ts_lo) - 10min < every hi ts). Content-
-    addressed like the events4 split (stream_incremental_mv): the scale
-    probe rebuilds fixtures in place, so path-keyed caches go stale."""
-    sf_tag = sf_dir.strip("/").replace("/", "_")
-    tag = sf_tag + "_" + _events_fingerprint(sf_dir)
-    root = f"/tmp/ocs_stream_src/rocks2_{tag}"
-    lo_dir, hi_dir = f"{root}/lo", f"{root}/hi"
-    if not (
-        os.path.exists(f"{lo_dir}/_SUCCESS")
-        and os.path.exists(f"{hi_dir}/_SUCCESS")
-    ):
-        from ocs_duckdb_runner_spark.registry import vacuum_cache_siblings
+    """Build (once per fixture content, through registry.derived) a
+    time-split two-part derived events source: ``lo/`` holds every event
+    at or below the min/max midpoint timestamp, ``hi/`` the rest — so a
+    stream that drains lo first can never see hi rows fall behind the
+    checkpointed watermark (watermark after lo = max(ts_lo) - 10min <
+    every hi ts)."""
 
-        vacuum_cache_siblings(
-            "/tmp/ocs_stream_src", f"rocks2_{sf_tag}", f"rocks2_{tag}"
-        )
+    def build(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         bounds = ev.agg(
             F.min("ts").alias("lo"), F.max("ts").alias("hi")
         ).collect()[0]
         mid = bounds["lo"] + (bounds["hi"] - bounds["lo"]) / 2
-        ev.filter(F.col("ts") <= F.lit(mid)).write.mode("overwrite").parquet(
-            lo_dir
-        )
-        ev.filter(F.col("ts") > F.lit(mid)).write.mode("overwrite").parquet(
-            hi_dir
-        )
-    return lo_dir, hi_dir
+        ev.filter(F.col("ts") <= F.lit(mid)).write.parquet(f"{tmp}/lo")
+        ev.filter(F.col("ts") > F.lit(mid)).write.parquet(f"{tmp}/hi")
+
+    root = derived(sf_dir, "rocks2", build)
+    return f"{root}/lo", f"{root}/hi"
 
 
 def _link_parts(src_dir: str, dst_dir: str) -> None:
@@ -1164,30 +1142,21 @@ def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     table: state size is the GROUP-KEY space, not the stream.
 
     Multi-batch on purpose: events is split into 4 parquet files (once
-    per sf_dir) and the SOURCE carries maxFilesPerTrigger=1 — a file-
-    source (readStream) option that is silently ignored on the sink,
-    where an earlier revision set it (ADVICE r5) — so availableNow
+    per fixture content, through registry.derived) and the SOURCE
+    carries maxFilesPerTrigger=1 — a file-source (readStream) option
+    that is silently ignored on the sink, where an earlier revision set
+    it (ADVICE r5) — so availableNow
     drains in 4 micro-batches and the state+delta merge path runs on
     every batch after the bootstrap, not just the empty-state branch."""
     base = _stream_scratch("_mv")
     state_dir = f"{base}/state"
-    # content-addressed cache key: path alone is NOT enough — the scale
-    # probe rebuilds its fixtures in place, and a split source keyed only
-    # by sf_dir would silently stream the STALE copy (found at the r8 10x
-    # probe: the cached split predated the events striking, so the MV
-    # summed 100k rows against a 1M-row oracle)
-    sf_tag = sf_dir.strip("/").replace("/", "_")
-    tag = sf_tag + "_" + _events_fingerprint(sf_dir)
-    src_dir = f"/tmp/ocs_stream_src/events4_{tag}"
-    if not os.path.exists(f"{src_dir}/_SUCCESS"):
-        from ocs_duckdb_runner_spark.registry import vacuum_cache_siblings
-
-        vacuum_cache_siblings(
-            "/tmp/ocs_stream_src", f"events4_{sf_tag}", f"events4_{tag}"
-        )
-        load_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(src_dir)
+    src_dir = derived(
+        sf_dir,
+        "events4",
+        lambda tmp: load_table(spark, sf_dir, "events")
+        .repartition(4)
+        .write.parquet(tmp),
+    )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         _mv_merge_batch(state_dir, batch_df, batch_id)

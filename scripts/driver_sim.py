@@ -52,7 +52,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from ocs_duckdb_runner_spark.registry import TABLES  # noqa: E402
+from ocs_duckdb_runner_spark.registry import TABLES, derived  # noqa: E402
 from ocs_duckdb_runner_spark.session import build_spark  # noqa: E402
 
 # queries whose OUTPUT is quadratic in duplicate multiplicity by design
@@ -136,34 +136,30 @@ def _doc_count(sf_dir: str) -> int:
 def _build_capped_dir(sf_dir: str) -> str:
     """Materialize a deterministically sampled documents table (plus the
     other tables untouched, via symlink) for the quadratic didactic
-    queries — same bytes for both engines."""
-    import os
-
-    out = Path("/tmp/ocs_driver_sim_capped") / Path(sf_dir).name
-    out.mkdir(parents=True, exist_ok=True)
+    queries — same bytes for both engines. Derived through
+    registry.derived, so it is keyed by the fixtures' content and a
+    directory that exists is complete."""
     caps = {
         "documents": f"doc_id % {_CAP_MOD} = 0",
         "lineitem": f"l_orderkey < {_CAP_KEY_STRIDE}",
     }
-    for t, pred in caps.items():
-        dst = out / f"{t}.parquet"
-        src = Path(f"{sf_dir}/{t}.parquet")
-        if not src.exists():
-            continue  # --tables probe builds omit unscaled fact tables
-        if not dst.exists():
+
+    def build(out: str) -> None:
+        os.makedirs(out)
+        for t in TABLES:
+            src = Path(f"{sf_dir}/{t}.parquet").absolute()
+            if not src.exists():
+                continue  # --tables probe builds omit unscaled fact tables
+            if t not in caps:
+                os.symlink(src, f"{out}/{t}.parquet")
+                continue
             glob = f"{src}/*.parquet" if src.is_dir() else str(src)
             duckdb.sql(
                 f"COPY (SELECT * FROM read_parquet('{glob}') "
-                f"WHERE {pred}) TO '{dst}' (FORMAT PARQUET)"
+                f"WHERE {caps[t]}) TO '{out}/{t}.parquet' (FORMAT PARQUET)"
             )
-    for t in TABLES:
-        if t in caps:
-            continue
-        src = Path(f"{sf_dir}/{t}.parquet")
-        link = out / f"{t}.parquet"
-        if src.exists() and not link.exists():
-            os.symlink(src, link)
-    return str(out)
+
+    return derived(sf_dir, "capped", build)
 
 
 def _register_views(duck, sf_dir: str) -> None:

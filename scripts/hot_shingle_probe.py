@@ -14,8 +14,9 @@ well-defined — and it now covers a corpus where the cap BINDS.
 Usage:
     python scripts/hot_shingle_probe.py [base_sf_dir] [--json OUT.json]
 
-Builds /tmp/ocs_hotshingle/<base-name>_<fingerprint>/ (content-addressed
-like the other derived caches; stale generations vacuumed), verifies the
+Builds the variant through registry.derived (under
+/tmp/ocs_derived/<base-tag>_<fingerprint>/hotshingle/, like every other
+derived fixture: a private build published with one rename), verifies the
 planted df actually exceeds the cap, and execs driver_sim on the probe
 queries.
 """
@@ -33,11 +34,7 @@ import duckdb
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from ocs_duckdb_runner_spark.registry import (  # noqa: E402
-    TABLES,
-    fixture_fingerprint,
-    vacuum_cache_siblings,
-)
+from ocs_duckdb_runner_spark.registry import TABLES, derived  # noqa: E402
 
 VIRAL = (
     "subscribe to our newsletter for daily updates and exclusive offers today"
@@ -58,37 +55,27 @@ QUERIES = [
 
 
 def build(base: str) -> str:
-    tag = Path(base.rstrip("/")).name
-    parent = "/tmp/ocs_hotshingle"
-    keep = f"{tag}_{fixture_fingerprint(base)}"
-    out = os.path.join(parent, keep)
-    os.makedirs(parent, exist_ok=True)
-    vacuum_cache_siblings(parent, tag, keep)
-    if os.path.isdir(out) and all(
-        os.path.exists(os.path.join(out, f"{t}.parquet")) for t in TABLES
-    ):
-        return out
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src = os.path.join(base, f"{t}.parquet")
-        if t != "documents":
-            shutil.copy(src, os.path.join(out, f"{t}.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 2 = 0 THEN text || ' ' || '{VIRAL}'
-                      ELSE text END AS text,
-                 lang, source,
-                 CAST(len(CASE WHEN doc_id % 2 = 0
-                               THEN text || ' ' || '{VIRAL}'
-                               ELSE text END) AS BIGINT) AS n_chars
-          FROM read_parquet('{base}/documents.parquet')
-        ) TO '{out}/documents.parquet' (FORMAT PARQUET)
-        """
-    )
-    return out
+    def write(out: str) -> None:
+        os.makedirs(out)
+        for t in TABLES:
+            if t != "documents":
+                shutil.copy(os.path.join(base, f"{t}.parquet"), out)
+        duckdb.connect().execute(
+            f"""
+            COPY (
+              SELECT doc_id,
+                     CASE WHEN doc_id % 2 = 0 THEN text || ' ' || '{VIRAL}'
+                          ELSE text END AS text,
+                     lang, source,
+                     CAST(len(CASE WHEN doc_id % 2 = 0
+                                   THEN text || ' ' || '{VIRAL}'
+                                   ELSE text END) AS BIGINT) AS n_chars
+              FROM read_parquet('{base}/documents.parquet')
+            ) TO '{out}/documents.parquet' (FORMAT PARQUET)
+            """
+        )
+
+    return derived(base, "hotshingle", write)
 
 
 def assert_cap_binds(out: str, cap: int) -> int:

@@ -133,17 +133,9 @@ def test_aggregates_stay_in_wholestage_codegen(spark, name):
 def test_partition_pruning_on_partitioned_sink(spark):
     """A filter on the Hive partition column must become a PartitionFilter
     (pruned at planning), not a data filter."""
-    from ocs_duckdb_runner_spark.sources.connectors import (
-        _orders_projection,
-        _roundtrip_dir,
-    )
-    import os
+    from ocs_duckdb_runner_spark.sources.connectors import _parquet_part_dir
 
-    out = _roundtrip_dir(SF_DIR, "parquet_part")
-    if not os.path.exists(f"{out}/_SUCCESS"):
-        _orders_projection(spark, SF_DIR).write.mode("overwrite").partitionBy(
-            "o_orderstatus"
-        ).parquet(out)
+    out = _parquet_part_dir(spark, SF_DIR)
     df = spark.read.parquet(out).filter("o_orderstatus = 'O'")
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

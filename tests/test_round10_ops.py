@@ -1,73 +1,7 @@
-"""Round-10 locks: bucketed-cache key shape vs the vacuum generation
-regex (ADVICE r10 medium), multi-table fingerprints, and the widened
-18-hex reclaim (no Spark session needed — pure filesystem semantics)."""
+"""Round-10 locks: HLL rollup merge, unigram LM OOV scoring, and stream
+scratch hygiene."""
 
 from __future__ import annotations
-
-import os
-import re
-
-
-def test_fixture_fingerprint_multi_table_is_12_hex():
-    """A tuple of tables must hash to ONE 12-hex fingerprint — the r9
-    bucketed cache concatenated two fingerprints into 18 hex chars and
-    fell out of the vacuum regex's reach, leaking every superseded
-    bucketed generation under /tmp."""
-    from ocs_duckdb_runner_spark.registry import fixture_fingerprint
-
-    sf_dir = "/root/testdata/sf0.001"
-    combined = fixture_fingerprint(sf_dir, ("orders", "customer"))
-    assert re.fullmatch(r"[0-9a-f]{12}", combined)
-    # sensitive to the table set, deterministic for the same set
-    assert combined == fixture_fingerprint(sf_dir, ("orders", "customer"))
-    assert combined != fixture_fingerprint(sf_dir, "orders")
-    assert combined != fixture_fingerprint(sf_dir, ("customer", "orders"))
-
-
-def test_bucketed_cache_key_shape_is_vacuumable(tmp_path):
-    """The exact key shape join_bucketed builds (base_tag + '_' + the
-    combined 12-hex fingerprint) must be matched by
-    vacuum_cache_siblings's generation regex, so a stale bucketed
-    generation is reclaimed on rebuild — the r9 18-hex shape never was."""
-    from ocs_duckdb_runner_spark.registry import (
-        fixture_fingerprint,
-        vacuum_cache_siblings,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    base_tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    keep = base_tag + "_" + fixture_fingerprint(sf_dir, ("orders", "customer"))
-    stale = base_tag + "_" + "0" * 12  # a superseded generation
-    parent = str(tmp_path)
-    os.makedirs(os.path.join(parent, keep))
-    os.makedirs(os.path.join(parent, stale))
-    vacuum_cache_siblings(parent, base_tag, keep)
-    left = set(os.listdir(parent))
-    assert left == {keep}
-
-
-def test_vacuum_reclaims_r9_legacy_18_hex_generations(tmp_path):
-    """Generations already leaked by the r9 key shape (18 hex chars)
-    must now be reclaimed, while an extending tag's generation still
-    survives (the anchoring property the 12-hex exact match existed
-    for)."""
-    from ocs_duckdb_runner_spark.registry import vacuum_cache_siblings
-
-    parent = str(tmp_path)
-    keep = "sf0_1_aaaaaaaaaaaa"
-    victims = [
-        "sf0_1_bbbbbbbbbbbb",  # current 12-hex stale generation
-        "sf0_1_ccccccccccccdddddd",  # r9 legacy 18-hex generation
-    ]
-    survivors = [
-        keep,
-        "sf0_1_alt_eeeeeeeeeeee",  # extending tag's valid generation
-        "sf0_1_notafingerprint",  # not hex → not a generation
-    ]
-    for name in victims + survivors:
-        os.makedirs(os.path.join(parent, name))
-    vacuum_cache_siblings(parent, "sf0_1", keep)
-    assert set(os.listdir(parent)) == set(survivors)
 
 
 def test_hll_sketch_rollup_merge_equals_direct_and_is_accurate(spark):

@@ -1,32 +1,10 @@
-"""Round-9 locks: cache-vacuum tag anchoring and sink-scratch hygiene
-(no Spark session needed — pure filesystem semantics)."""
+"""Round-9 locks: sink-scratch hygiene (no Spark session needed — pure
+filesystem semantics)."""
 
 from __future__ import annotations
 
 import os
 import time
-
-
-def test_vacuum_cache_siblings_is_fingerprint_anchored(tmp_path):
-    """A tag that PREFIXES another tag (sf0.1 vs sf0.1_alt) must not
-    vacuum the longer tag's valid fingerprinted generation — the round-8
-    bare-prefix match did, forcing spurious rebuilds."""
-    from ocs_duckdb_runner_spark.registry import vacuum_cache_siblings
-
-    parent = str(tmp_path)
-    keep = "sf0.1_aaaaaaaaaaaa"
-    victims = ["sf0.1", "sf0.1_bbbbbbbbbbbb"]  # pre-fp layout + stale gen
-    survivors = [
-        keep,
-        "sf0.1_alt_cccccccccccc",  # longer tag's valid generation
-        "sf0.1_notafingerprint",  # not 12-hex → not a generation
-        "sf0.15_dddddddddddd",  # different tag entirely
-    ]
-    for name in victims + survivors:
-        os.makedirs(os.path.join(parent, name))
-    vacuum_cache_siblings(parent, "sf0.1", keep)
-    left = set(os.listdir(parent))
-    assert left == set(survivors)
 
 
 def test_vacuum_stale_sink_runs_keeps_fresh_dirs(tmp_path):

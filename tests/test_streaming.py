@@ -504,12 +504,9 @@ def test_stream_incremental_mv_matches_batch_twin(spark):
     cols = ["event_type", "n", "sum_value_c"]
     got = _rows(get_query("stream_incremental_mv").fn(spark, SF_DIR), cols)
     # the multi-batch premise: the split source really has >=2 files
-    from ocs_duckdb_runner_spark.streaming.stream_queries import (
-        _events_fingerprint,
-    )
+    from ocs_duckdb_runner_spark.registry import derived_path
 
-    tag = SF_DIR.strip("/").replace("/", "_") + "_" + _events_fingerprint(SF_DIR)
-    src_dir = f"/tmp/ocs_stream_src/events4_{tag}"
+    src_dir = derived_path(SF_DIR, "events4")
     n_files = sum(1 for f in os.listdir(src_dir) if f.endswith(".parquet"))
     assert n_files >= 2
     want = _rows(

@@ -78,16 +78,15 @@ def test_compaction_reduces_files(spark):
     <= 4 files (content equality is the driver-checked half)."""
     import os
 
-    from ocs_duckdb_runner_spark.registry import get_query
-    from ocs_duckdb_runner_spark.sources.connectors import _roundtrip_dir
+    from ocs_duckdb_runner_spark.registry import derived_path, get_query
     from tests.conftest import SF_DIR
 
     get_query("sink_compaction").fn(spark, SF_DIR).collect()
     count_parquet = lambda d: sum(  # noqa: E731
         1 for f in os.listdir(d) if f.endswith(".parquet")
     )
-    assert count_parquet(_roundtrip_dir(SF_DIR, "frag64")) == 64
-    assert count_parquet(_roundtrip_dir(SF_DIR, "compacted")) <= 4
+    assert count_parquet(derived_path(SF_DIR, "frag64")) == 64
+    assert count_parquet(derived_path(SF_DIR, "compacted")) <= 4
 
 
 def test_versioned_snapshot_isolation(spark):
@@ -95,14 +94,13 @@ def test_versioned_snapshot_isolation(spark):
     append commit (snapshot isolation), and v1 = v0 + the appended batch."""
     import json
 
-    from ocs_duckdb_runner_spark.registry import get_query
-    from ocs_duckdb_runner_spark.sources.connectors import _roundtrip_dir
+    from ocs_duckdb_runner_spark.registry import derived_path, get_query
 
     out = {
         r.version: r
         for r in get_query("sink_versioned_snapshot").fn(spark, SF_DIR).collect()
     }
-    logd = f"{_roundtrip_dir(SF_DIR, 'versioned')}/_log"
+    logd = f"{derived_path(SF_DIR, 'versioned')}/_log"
     v0 = json.load(open(f"{logd}/v0.json"))
     v1 = json.load(open(f"{logd}/v1.json"))
     assert set(v0["files"]) < set(v1["files"])  # append-only: strict subset

@@ -1,12 +1,11 @@
-"""Headline benchmark — the driver runs this per-round and records the JSON
-line against BASELINE.md.
+"""Headline benchmark, and the one per-query timer every probe uses.
 
 Reported metric: wall-clock of the reference-equivalent fan-out run (the
 fixed per-object query over lineitem split into objects — the same
-workload shape the reference timed, /root/reference/runner.cc:334-359) at
+workload shape the reference timed, runner.cc:334-359) at
 $SPARK_GRAFT_SF_DIR (default sf0.1), plus per-query times for the headline
-operator set (each executed fully via the noop sink so nothing is skipped
-by count-only optimization).
+operator set. Every query time, here and in scripts/, is one
+:func:`time_noop` after :func:`warm`.
 
 Measurement hygiene (r10): committed per-query numbers in
 BENCH_QUERIES.json are fresh-JVM re-times wherever a query is in the
@@ -16,22 +15,35 @@ load. A fixed canary trio runs at suite start AND end; the headline line
 carries band_factor (canary vs the previous committed round) so readers
 normalize round-over-round ratios instead of doing forensics.
 
-Usage: python bench.py            → one JSON line on stdout
+Usage:
+    python bench.py                  → headline JSON lines on stdout
+    python bench.py QUERY [QUERY ...] [--reps N] [--ab KEY=A,B]
+                    [--plans DIR/LABEL]
+                                     → probe: one JSON line per query
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import sys
 import time
+from collections.abc import Iterable
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-from ocs_duckdb_runner_spark.registry import all_queries  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
+
+from ocs_duckdb_runner_spark.registry import QueryFn, all_queries  # noqa: E402
 from ocs_duckdb_runner_spark.runner import FanoutRunner, split_objects  # noqa: E402
-from ocs_duckdb_runner_spark.session import build_spark  # noqa: E402
+from ocs_duckdb_runner_spark.session import (  # noqa: E402
+    build_spark,
+    default_parallelism,
+    scoped_conf,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -222,127 +234,119 @@ HEADLINE = [
 # the band from forensics.
 CANARY = ["flagship", "join_inner", "window_rank"]
 
+# The per-query times inlined in the headline line.
+KEY_QUERIES = ["flagship", "join_inner", "dedup_minhash", "sim_cosine_topk",
+               "graph_pagerank"]
 
-def main() -> int:
+
+# The codegen warm-up fixture: the sf0.001 sibling of SF_DIR.
+WARM_DIR = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001")
+
+
+def time_noop(spark: SparkSession, fn: QueryFn, sf_dir: str) -> float:
+    """Wall seconds, to the ms, of one run of query ``fn`` at ``sf_dir``
+    into the noop sink, which executes the whole plan and keeps nothing,
+    so no row is skipped by count-only optimization.
+
+    JVM garbage is collected OUTSIDE the clock: each number should
+    characterize the operator in a steady-state session, not the GC debt
+    of whichever query ran before it (the session's 30 s periodic GC
+    bounds that debt in production; here it would add ±2-3x noise). The
+    run carries a job description naming the query, cleared after it."""
+    sc = spark.sparkContext
+    sc._jvm.System.gc()
+    sc.setJobDescription(f"bench: {fn.__name__}")
+    try:
+        t0 = time.monotonic()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.monotonic() - t0, 3)
+    finally:
+        sc.setJobDescription(None)
+
+
+def warm(spark: SparkSession, fns: Iterable[QueryFn], sf_dir: str) -> None:
+    """Pay a session's one-time costs before any clock starts, so times
+    measure steady state, not JVM spin-up: the first action's
+    parquet-reader and shuffle-service init (a count of sf_dir's
+    lineitem; not every probe dir has one), and the whole-stage-codegen
+    compile of each plan, run once at WARM_DIR — codegen caches on the
+    plan, not the data, so sf0.001 compiles the same classes for ~0
+    data cost."""
+    lineitem = f"{sf_dir}/lineitem.parquet"
+    if os.path.exists(lineitem):
+        spark.read.parquet(lineitem).count()
+    if os.path.isdir(WARM_DIR):
+        for fn in fns:
+            fn(spark, WARM_DIR).write.format("noop").mode("overwrite").save()
+
+
+def _split_files(spark: SparkSession, sf_dir: str) -> list[str]:
+    objdir = split_objects(spark, sf_dir, 8)
+    return sorted(
+        f"{objdir}/{f}" for f in os.listdir(objdir) if f.endswith(".parquet")
+    )
+
+
+def headline() -> int:
     spark = build_spark(
         app_name="ocs-duckdb-runner-spark-bench",
-        extra_conf={
-            "spark.scheduler.mode": "FAIR",
-            "spark.ui.enabled": "true",
-        },
+        extra_conf={"spark.scheduler.mode": "FAIR"},
     )
     qs = all_queries()
-    # Warm-up so per-query numbers measure steady state, not JVM spin-up:
-    # the first action pays parquet-reader + shuffle-service init, and the
-    # first run of each plan pays whole-stage-codegen compilation. Running
-    # the flagship + a join at sf0.001 compiles the same generated classes
-    # (codegen cache keys on the plan, not the data) for ~0 data cost.
-    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        # every headline plan once at sf0.001: codegen compiles the same
-        # generated classes the sf0.1 run will hit, for ~0 data cost
-        for wq in HEADLINE:
-            qs[wq](spark, warm_dir).write.format("noop").mode("overwrite").save()
+    warm(spark, [qs[n] for n in HEADLINE], SF_DIR)
+    if os.path.isdir(WARM_DIR):
         # warm the fan-out path too (per-object SQL plan + I/O listener)
-        wobj = split_objects(spark, warm_dir, 8)
-        wfiles = sorted(
-            f"{wobj}/{f}" for f in os.listdir(wobj) if f.endswith(".parquet")
-        )
-        FanoutRunner(spark, threads=8).run(wfiles)
+        FanoutRunner(spark, threads=8).run(_split_files(spark, WARM_DIR))
 
-    def _timed(session, name: str) -> float:
-        # collect JVM garbage OUTSIDE the timed region: each number should
-        # characterize the operator in a steady-state session, not the GC
-        # debt of whichever query happened to run before it (the session's
-        # 30s periodic GC bounds that debt in production; here it would
-        # add ±2-3x noise to individual measurements)
-        session.sparkContext._jvm.System.gc()
-        t0 = time.monotonic()
-        qs[name](session, SF_DIR).write.format("noop").mode("overwrite").save()
-        return round(time.monotonic() - t0, 3)
-
-    canary_start = {n: _timed(spark, n) for n in CANARY}
-    times: dict[str, float] = {}
-    for name in HEADLINE:
-        times[name] = _timed(spark, name)
-    canary_end = {n: _timed(spark, n) for n in CANARY}
+    canary_start = {n: time_noop(spark, qs[n], SF_DIR) for n in CANARY}
+    times = {n: time_noop(spark, qs[n], SF_DIR) for n in HEADLINE}
+    canary_end = {n: time_noop(spark, qs[n], SF_DIR) for n in CANARY}
     canary_mid = {
         n: round((canary_start[n] + canary_end[n]) / 2, 3) for n in CANARY
     }
 
     # the reference-equivalent fan-out run (its headline metric)
-    objdir = split_objects(spark, SF_DIR, 8)
-    files = sorted(
-        f"{objdir}/{f}" for f in os.listdir(objdir) if f.endswith(".parquet")
-    )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    runner = FanoutRunner(spark, threads=min(cpus, 8))
+    files = _split_files(spark, SF_DIR)
+    runner = FanoutRunner(spark, threads=min(default_parallelism(), 8))
     # one untimed warm-up over the SAME files, then the MEDIAN of five
     # recorded runs: the baseline's 0.33 s pays DuckDB spin-up only, not
     # process boot — the fair comparison for a JVM engine is the warm
     # steady state (codegen compiled, FAIR pools registered, OS page
-    # cache hot) — and a single sample aliases GC/scheduler jitter of
-    # ±0.1 s onto a ~0.35 s measurement (r7→r8 headline drift was
-    # exactly that). Hits/bytes are identical across runs; only wall
-    # varies.
+    # cache hot) — and the ambient band can move a 3-rep median by 2-3x;
+    # five samples keep one bad draw out of the reported number while
+    # still reporting a real, single-run wall. Hits/bytes are identical
+    # across runs; only wall varies.
     runner.run(files)
-    # five reps, median: late-round measurements showed the ambient band
-    # can move a 3-rep median by 2-3x (post-OOM page-cache eviction,
-    # hypervisor neighbors); five samples keeps one bad draw out of the
-    # reported number while still reporting a real, single-run wall
     reps = [runner.run(files) for _ in range(5)]
     rep = sorted(reps, key=lambda r: r["total_query_time_sec"])[2]
 
-    # Fresh-session re-time of the 10 slowest queries (r7 verdict Next
-    # #6): in-suite numbers alias session pressure — codegen-cache/heap
+    # Fresh-session re-time of the 10 slowest queries plus every query
+    # that moved >1.3x against the PREVIOUS round's in-suite sidecar
+    # (ignoring the sub-0.3s band, where absolute jitter dominates):
+    # in-suite numbers alias session pressure — codegen-cache/heap
     # occupancy after ~120 prior plans lands on whichever query runs
-    # late, which is how r6/r7 flagged "regressions" in untouched code.
-    # A second JVM re-times the tail; since r10 those fresh numbers ARE
-    # the primary committed per-query times (r9 verdict Next #1).
-    #
-    # r8 verdict Next #4: the retime set also includes every query that
-    # moved >1.3x against the PREVIOUS round's sidecar (ignoring the
-    # sub-0.3s band, where absolute jitter dominates), so drift diagnosis
-    # ("is tpch_q9's 1.5x real or session pressure?") no longer depends
-    # on a manual fresh-session run next round.
+    # late. A second JVM re-times them; those fresh numbers ARE the
+    # primary committed per-query times. Movers compare in-suite against
+    # in-suite: fresh re-times sit systematically off the in-suite band.
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else SF_DIR
-    movers: list[str] = []
-    band_factor = None
     try:
         with open(os.path.join(REPO, "BENCH_QUERIES.json")) as fh:
             prev_doc = json.load(fh)
-        # Mover detection must compare like-for-like: since r10 the
-        # sidecar's "queries" map mixes fresh-JVM re-times (systematically
-        # offset from in-suite by the documented ±30% band), so a query
-        # re-timed last round would chronically re-flag as a >1.3x mover.
-        # Use the previous doc's in-suite map when present; "queries" is
-        # the fallback for pre-r10 sidecars (whose numbers were in-suite).
-        prev = prev_doc.get("in_suite") or prev_doc.get("queries", {})
-        if prev_doc.get("sf") != sf_val:
-            prev = {}  # different fixture scale — ratios meaningless
-            prev_doc = {}
-        movers = sorted(
-            n
-            for n, t in times.items()
-            if n in prev and t > 0.3 and prev[n] > 0 and t / prev[n] > 1.3
-        )
-        # band_factor: this run's canary (in-suite) vs the previous
-        # round's committed canary — falling back to the previous round's
-        # per-query times for the same trio when the canary block doesn't
-        # exist yet (the r9→r10 bootstrap; those were in-suite too, so
-        # the ratio is like-for-like either way)
-        ref = prev_doc.get("canary", {}).get("mid") or {
-            n: prev[n] for n in CANARY if n in prev
-        }
-        ratios = sorted(
-            canary_mid[n] / ref[n] for n in CANARY if ref.get(n, 0) > 0
-        )
-        if ratios:
-            band_factor = round(ratios[len(ratios) // 2], 3)
     except (OSError, ValueError):
-        pass
+        prev_doc = {}
+    if prev_doc.get("sf") != sf_val:
+        prev_doc = {}  # different fixture scale — ratios meaningless
+    prev = prev_doc.get("in_suite", {})
+    movers = sorted(
+        n
+        for n, t in times.items()
+        if n in prev and t > 0.3 and prev[n] > 0 and t / prev[n] > 1.3
+    )
+    # band_factor: this run's canary vs the previous round's committed one
+    ref = prev_doc.get("canary", {}).get("mid", {})
+    ratios = sorted(canary_mid[n] / ref[n] for n in CANARY if ref.get(n, 0) > 0)
+    band_factor = round(ratios[len(ratios) // 2], 3) if ratios else None
     slowest = sorted(times, key=times.get, reverse=True)[:10]
     retime = sorted(set(slowest) | set(movers))
     spark.stop()
@@ -350,28 +354,19 @@ def main() -> int:
         app_name="ocs-duckdb-runner-spark-bench-fresh",
         extra_conf={"spark.scheduler.mode": "FAIR"},
     )
-    spark_fresh.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
-    if os.path.isdir(warm_dir):
-        for wq in retime:
-            qs[wq](spark_fresh, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-    fresh_times: dict[str, float] = {}
-    for name in retime:
-        fresh_times[name] = _timed(spark_fresh, name)
+    warm(spark_fresh, [qs[n] for n in retime], SF_DIR)
+    fresh_times = {n: time_noop(spark_fresh, qs[n], SF_DIR) for n in retime}
 
     # Full per-query map: printed as its OWN stdout line (before the
     # summary) and written to a sidecar file. r5's single line carried 78
     # per-query times, overflowed the driver's 2000-char tail capture, and
     # the round recorded "parsed": null — the headline line must stay small
-    # enough to always fit the tail window (r5 verdict, What's wrong #2).
+    # enough to always fit the tail window.
     #
-    # PRIMARY numbers (r9 verdict Next #1): fresh-JVM re-times where they
-    # exist, in-suite otherwise. The r9 round proved in-suite numbers
-    # alias the host's ambient band at ±30% (median 1.4x drift on plans
-    # untouched since r6, three same-code samples spreading 198-255 s),
-    # so committed per-query comparisons must rest on the fresh-session
-    # numbers; the full in-suite map is demoted to its own field.
+    # PRIMARY numbers: fresh-JVM re-times where they exist, in-suite
+    # otherwise. In-suite numbers alias the host's ambient band at ±30%,
+    # so committed per-query comparisons rest on the fresh-session
+    # numbers; the full in-suite map is its own field.
     primary = dict(times)
     primary.update(fresh_times)
     detail = {
@@ -392,31 +387,20 @@ def main() -> int:
     # the bare sidecar name is the round-over-round mover baseline at the
     # driver's sf0.1; a run at any other scale (local smoke at sf0.001)
     # writes a suffixed file so it can't clobber that baseline
-    sidecar = (
-        "BENCH_QUERIES.json"
-        if sf_val == 0.1
-        else f"BENCH_QUERIES_sf{sf}.json"
-    )
+    sidecar = "BENCH_QUERIES.json" if sf_val == 0.1 else f"BENCH_QUERIES_sf{sf}.json"
     try:
         with open(os.path.join(REPO, sidecar), "w") as fh:
             json.dump(detail, fh, indent=1, sort_keys=True)
     except OSError:
         pass  # read-only checkout — the stdout line above still has it
-    # Compact FINAL line — the one the driver parses. The five inline
-    # query times keep the declared {"queries": {...}} schema while the
-    # full map lives in the sidecar/previous line.
-    key_queries = [
-        "flagship",
-        "join_inner",
-        "dedup_minhash",
-        "sim_cosine_topk",
-        "graph_pagerank",
-    ]
+    # Compact FINAL line — the one the driver parses. The KEY_QUERIES
+    # times keep the declared {"queries": {...}} schema while the full
+    # map lives in the sidecar/previous line.
     out = {
         "metric": "fanout_wall_sec",
         "value": rep["total_query_time_sec"],
         "unit": "sec",
-        "queries": {k: primary[k] for k in key_queries if k in primary},
+        "queries": {k: primary[k] for k in KEY_QUERIES if k in primary},
         "queries_file": sidecar,
         "n_queries": len(times),
         "sf": sf_val,
@@ -436,6 +420,94 @@ def main() -> int:
     line = json.dumps(out)
     assert len(line) < 1500, "headline line must fit the driver tail window"
     print(line)
+    return 0
+
+
+def probe(
+    spark: SparkSession,
+    queries: dict[str, QueryFn],
+    sf_dir: str,
+    reps: int = 5,
+    ab: tuple[str, str, str] | None = None,
+    plans: str | None = None,
+) -> list[dict]:
+    """Time each query ``reps`` times at ``sf_dir`` and print one JSON
+    line per query, ``{query, sf, times, median}``; return the lines.
+
+    With ``ab=(key, a, b)`` the runtime conf ``key`` is set to ``a`` and
+    to ``b`` in alternation within each rep (A, B, A, B, ...), so ambient
+    host drift lands on both arms equally, and the line is ``{query,
+    conf, a, b, median_a, median_b, b_over_a}``. Each arm's value holds
+    only inside :func:`session.scoped_conf`, so an exception cannot leave
+    the session under arm B. Before any timed run every (query, arm) is
+    warmed at sf0.001 and run once untimed at ``sf_dir``: a cold first
+    rep can read several times the steady state. ``plans="DIR/LABEL"``
+    writes each query's formatted plan, under the session's own conf, to
+    ``plans/DIR/<query>_LABEL.txt``."""
+    arms = {"times": {}} if ab is None else {"a": {ab[0]: ab[1]}, "b": {ab[0]: ab[2]}}
+    rows = []
+    for name, fn in queries.items():
+        for settings in arms.values():
+            with scoped_conf(spark, settings):
+                warm(spark, [fn], sf_dir)
+                time_noop(spark, fn, sf_dir)
+        if plans:
+            plan_dir, _, label = plans.rpartition("/")
+            path = os.path.join(REPO, "plans", plan_dir, f"{name}_{label}.txt")
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            qe = fn(spark, sf_dir)._jdf.queryExecution()
+            with open(path, "w") as fh:
+                fh.write(spark._jvm.PythonSQLUtils.explainString(qe, "formatted"))
+        times: dict[str, list[float]] = {arm: [] for arm in arms}
+        for _ in range(reps):
+            for arm, settings in arms.items():
+                with scoped_conf(spark, settings):
+                    times[arm].append(time_noop(spark, fn, sf_dir))
+        med = {arm: round(statistics.median(t), 3) for arm, t in times.items()}
+        if ab is None:
+            row = {"query": name, "sf": sf_dir, "times": times["times"],
+                   "median": med["times"]}
+        else:
+            ma, mb = med["a"], med["b"]
+            row = {"query": name, "conf": ab[0], "a": times["a"], "b": times["b"],
+                   "median_a": ma, "median_b": mb,
+                   "b_over_a": round(mb / ma, 3) if ma else None}
+        print(json.dumps(row), flush=True)
+        rows.append(row)
+    return rows
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Without QUERY: the headline bench. With QUERY: probe "
+        "those registered queries at $SPARK_GRAFT_SF_DIR."
+    )
+    ap.add_argument("queries", nargs="*", metavar="QUERY")
+    ap.add_argument("--reps", type=int, default=5, help="timed runs per query and arm")
+    ap.add_argument("--ab", metavar="KEY=A,B",
+                    help="alternate runtime conf KEY between A and B")
+    ap.add_argument("--plans", metavar="DIR/LABEL",
+                    help="write plans/DIR/<query>_LABEL.txt")
+    args = ap.parse_args(argv)
+    if not args.queries:
+        if args.ab or args.plans:
+            ap.error("--ab and --plans need a QUERY")
+        return headline()
+    if args.reps < 1:
+        ap.error("--reps must be at least 1")
+    ab = None
+    if args.ab is not None:
+        key, _, values = args.ab.partition("=")
+        a, comma, b = values.partition(",")
+        if not key or not comma:
+            ap.error("--ab takes KEY=A,B")
+        ab = (key, a, b)
+    qs = all_queries()
+    unknown = [n for n in args.queries if n not in qs]
+    if unknown:
+        ap.error(f"unknown query: {', '.join(unknown)}")
+    spark = build_spark(app_name="ocs-duckdb-runner-spark-probe")
+    probe(spark, {n: qs[n] for n in args.queries}, SF_DIR, args.reps, ab, args.plans)
     return 0
 
 

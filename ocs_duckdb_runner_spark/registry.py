@@ -198,13 +198,12 @@ def release_local_checkpoint(df: DataFrame) -> None:
     the pinned RDD — unpersist THAT RDD, not ``df.rdd`` (a derived
     conversion whose unpersist is a no-op on the checkpoint blocks;
     measured). Only call this on a frame the loop will never read again:
-    a localCheckpoint cannot recompute, so a released frame is dead.
-    Best-effort — a plan shape this helper doesn't recognize degrades to
-    the old GC-based release, never an error."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # best-effort: an unknown plan shape falls to GC
-        pass
+    a localCheckpoint cannot recompute, so a released frame is dead. A
+    frame whose analyzed plan is not a LogicalRDD holds no checkpoint
+    blocks and is left alone."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getName() == "org.apache.spark.sql.execution.LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 DERIVED_ROOT = "/tmp/ocs_derived"

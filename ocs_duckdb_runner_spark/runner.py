@@ -382,6 +382,8 @@ def runner_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The harness as a declared query: lineitem split into 8 parquet
     objects, the fixed per-object query fanned out over them, per-object
     hit counts returned (hash-partitioned split → deterministic counts).
+    ``object`` is the file's ``part-<index>`` prefix: the rest of the name
+    is the write's uuid, which changes on every rebuild of the objects.
     Rows-only driver check; the report shape itself is checked by
     tests/test_runner.py."""
     objdir = split_objects(spark, sf_dir, 8)
@@ -390,8 +392,9 @@ def runner_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     runner = FanoutRunner(spark, threads=4)
     rep = runner.run(files)
+    hits = rep["per_file_hits"]
     rows = [
-        (i, os.path.basename(p), rep["per_file_hits"].get(p, -1))
+        (i, "-".join(os.path.basename(p).split("-")[:2]), hits.get(p, -1))
         for i, p in enumerate(files)
     ]
     return spark.createDataFrame(rows, "part_idx int, object string, hits long")

@@ -52,6 +52,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import time_noop  # noqa: E402
 from ocs_duckdb_runner_spark.registry import TABLES, derived  # noqa: E402
 from ocs_duckdb_runner_spark.session import build_spark  # noqa: E402
 
@@ -332,11 +333,7 @@ def main() -> int:
             and not name.startswith(("stream_", "sink_", "src_"))
         ):
             try:
-                et = time.monotonic()
-                fn(spark, q_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                rec["engine_secs"] = round(time.monotonic() - et, 2)
+                rec["engine_secs"] = time_noop(spark, fn, q_dir)
                 rec["collect_secs"] = round(
                     max(0.0, dt - rec["engine_secs"]), 2
                 )

@@ -21,7 +21,6 @@ import json
 import os
 import shutil
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -29,6 +28,7 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import time_noop, warm  # noqa: E402
 from ocs_duckdb_runner_spark.registry import TABLES  # noqa: E402
 from ocs_duckdb_runner_spark.session import build_spark  # noqa: E402
 
@@ -166,12 +166,8 @@ def probe(
     out = out_dir(copies)
     spark = build_spark(app_name="scale-probe-run")
     qs = all_queries()
-    # warm whichever struck fact table exists (a --tables build may omit
-    # lineitem; probing an omitted table's query fails on its own terms)
-    for t in ("lineitem", "orders", "events", "documents", "embeddings"):
-        if os.path.exists(f"{out}/{t}.parquet"):
-            spark.read.parquet(f"{out}/{t}.parquet").count()
-            break
+    names = PROBE_QUERIES if names is None else names
+    warm(spark, [qs[n] for n in names], out)
     timings: dict[str, float] = {}
 
     def _flush() -> None:
@@ -189,11 +185,9 @@ def probe(
                     fh, indent=1, sort_keys=True,
                 )
 
-    for name in names if names is not None else PROBE_QUERIES:
-        t0 = time.monotonic()
-        qs[name](spark, out).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.monotonic() - t0, 2)
-        print(f"{name}: {timings[name]:.2f}s", flush=True)
+    for name in names:
+        timings[name] = time_noop(spark, qs[name], out)
+        print(f"{name}: {timings[name]:.3f}s", flush=True)
         _flush()
     _flush()
     if json_path:

@@ -275,3 +275,25 @@ def test_cli_split_fanout_end_to_end():
     assert re.search(r"== total query time: \d+\.\d+ s", err)
     # CLI session enables the UI, so byte accounting must be real numbers
     assert re.search(r"== spark read bytes: [1-9]\d*", err)
+
+
+def test_runner_fanout_rows_survive_a_rebuild_of_the_objects(
+    spark, tmp_path, monkeypatch
+):
+    """runner_fanout names each object by its ``part-<index>`` prefix, not
+    by the write uuid in its file name, so two cold builds of the same
+    split give the same rows."""
+    from ocs_duckdb_runner_spark import runner
+
+    real = runner.split_objects
+    answers, names = [], []
+    for build in ("a", "b"):
+        out = str(tmp_path / build)
+        monkeypatch.setattr(
+            runner, "split_objects", lambda s, d, n, out=out: real(s, d, n, out=out)
+        )
+        answers.append(sorted(runner.runner_fanout(spark, SF_DIR).collect()))
+        names.append(sorted(os.listdir(out)))
+    assert names[0] != names[1]  # each build wrote its own uuid
+    assert answers[0] == answers[1]
+    assert [r.object for r in answers[0]] == [f"part-{i:05d}" for i in range(8)]
